@@ -6,12 +6,17 @@ Phase 1 (driver, tiny data): for a batch of Q query vectors
 - localized query v - centroid per probe and the ADC distance table
   T[probe, d, c] = ||localized_d - codebook[d][c]||^2 (Q2).
 
-Phase 2 (executors): scan ONLY the probed Parquet partitions
-(partition pruning == the reference's lazy partition load, S3), join the
-broadcast probe list, score every encoded vector with a vectorized Arrow
-gather dist = sum_d T[probe, d, codes[d]] (Q3), then per-query top-k via
+Phase 2 (executors): scan ONLY the probed Parquet partitions (a literal
+``partition_id IN (...)`` — partition pruning == the reference's lazy
+partition load, S3) and score every encoded vector
+dist = sum_d T[probe, d, codes[d]] (Q3), then per-query top-k via
 ``row_number`` which Spark executes with WindowGroupLimit — partial
-top-k before the shuffle (Q4+Q5, the reference's NBest merge).
+top-k before the shuffle (Q4+Q5, the reference's NBest merge). The
+"sql" scorer broadcast-joins the probe table (query_id, partition_id,
+T) — built on the driver as an Arrow LocalRelation, so the broadcast
+needs no Python worker — and gathers with one codegen'd
+Catalyst expression; the "batch" scorer broadcasts T to a mapInPandas
+NumPy gather with a batch-local top-k.
 
 Scale: probe list and ADC tables are O(Q * nprobe * D * C) — broadcast;
 the scan shuffles only k rows per (query, partition). The reference's
@@ -284,6 +289,30 @@ def cent_col_name(centroids: DataFrame) -> str:
     return "centroid" if "centroid" in centroids.columns else centroids.columns[-1]
 
 
+def _driver_frame(spark, columns: dict) -> DataFrame:
+    """A driver-built table (probe lists, ADC tables, query vectors) as
+    ONE Arrow table, column type from the NumPy dtype (int64 -> long,
+    int32 -> int, float64 -> double, float32 -> float) and nesting from
+    the shape: (n, m) is array<T>, (n, m, l) array<array<T>>. Spark
+    keeps a table under spark.sql.execution.arrow.localRelationThreshold
+    (48 MB) as a LocalRelation, so its broadcast collects rows already
+    in the JVM — a list of Python rows becomes a pickled RDD, and its
+    broadcast starts Python workers to unpickle them. Float32 columns round exactly as Spark's own
+    double -> float conversion of those rows did (IEEE nearest-even)."""
+    import pyarrow as pa
+
+    arrays = []
+    for v in columns.values():
+        v = np.ascontiguousarray(v)
+        arr = pa.array(v.reshape(-1))
+        for axis in range(v.ndim - 1, 0, -1):
+            outer = int(np.prod(v.shape[:axis]))
+            offsets = np.arange(outer + 1, dtype=np.int32) * v.shape[axis]
+            arr = pa.ListArray.from_arrays(pa.array(offsets), arr)
+        arrays.append(arr)
+    return spark.createDataFrame(pa.table(arrays, names=list(columns)))
+
+
 def select_probes(
     model: IndexModel, queries: np.ndarray, nprobe: int
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -353,18 +382,11 @@ def select_probes_df(
     because the ADC tables are built from probed centroids only.
     Reference Q1: /root/reference/src/db/stored.rs:394-442.
     """
-    spark = centroids_df.sparkSession
-    qids = (
-        list(query_ids)
-        if query_ids is not None
-        else list(range(queries.shape[0]))
-    )
-    qdf = spark.createDataFrame(
-        [
-            (int(q), [float(x) for x in v])
-            for q, v in zip(qids, np.asarray(queries, dtype=np.float64))
-        ],
-        "query_id long, __qv array<double>",
+    qarr = np.asarray(queries, dtype=np.float64)
+    qids = query_ids if query_ids is not None else range(len(qarr))
+    qdf = _driver_frame(
+        centroids_df.sparkSession,
+        {"query_id": np.asarray(qids, dtype=np.int64), "__qv": qarr},
     )
     cent = cent_col_name(centroids_df)
     dist = squared_l2(F.col(cent).cast("array<double>"), F.col("__qv"))
@@ -455,6 +477,114 @@ def _phase1(
     return probe_qidx, probe_pid, tables
 
 
+# The ADC gather dist = sum_d tbl[d][codes[d]] as ONE SQL expression (a
+# single py4j round-trip to build): a left fold from 0.0 in division
+# order, so every sum is reproducible exactly outside Spark (tested).
+_ADC_SCORE = (
+    "aggregate(zip_with(codes, __tbl, (c, t) -> element_at(t, c + 1)), "
+    "0D, (a, x) -> a + x)"
+)
+
+
+def _query_batch(
+    model: IndexModel, queries, query_ids
+) -> tuple[list[int], np.ndarray]:
+    """(query ids, (Q, N) float64 array) of an ``ann_*`` batch given as
+    [(query_id, vector), ...] or an array with ``query_ids``. An empty
+    batch, list or (0, N) array, is Q = 0 and skips the width check."""
+    if isinstance(queries, np.ndarray):
+        qarr = queries.astype(np.float64)
+        qids = list(query_ids) if query_ids is not None else list(range(len(qarr)))
+    else:
+        qids = [int(q[0]) for q in queries]
+        qarr = np.array([q[1] for q in queries], dtype=np.float64)
+    if qids and (qarr.ndim != 2 or qarr.shape[1] != model.vector_size):
+        raise ValueError(
+            f"query width {qarr.shape} != vector_size {model.vector_size}"
+        )
+    return qids, qarr
+
+
+def _empty_result(model: IndexModel, rank: bool) -> DataFrame:
+    """The contract schema with no rows, ``rank`` included iff the
+    non-empty path carries it (the ivfsq ADVICE r9 #3 rule)."""
+    id_type = model.encoded.schema[model.config.id_col].dataType.simpleString()
+    schema = (
+        f"query_id long, vector_id {id_type}, partition_id int, "
+        "squared_distance double"
+    ) + (", rank int" if rank else "")
+    return model.encoded.sparkSession.createDataFrame([], schema)
+
+
+def _probed_rows(model: IndexModel, probe_pid: np.ndarray, where) -> DataFrame:
+    """The encoded rows of the probed cells only: the literal
+    ``partition_id IN (...)`` lands in the Parquet PartitionFilters of an
+    index at rest, so only probed directories are read (S3); ``where``
+    then pre-filters candidates BEFORE scoring."""
+    probed = ", ".join(str(int(p)) for p in np.unique(probe_pid))
+    rows = model.encoded.where(f"partition_id IN ({probed})")
+    return rows.where(where) if where is not None else rows
+
+
+def _sql_scored(
+    candidates: DataFrame,
+    qids: list[int],
+    probe_qidx: np.ndarray,
+    probe_pid: np.ndarray,
+    tables: np.ndarray,
+    id_col: str,
+) -> DataFrame:
+    """The "sql" scorer: (query_id, id, partition_id, __score) for every
+    (probing query, candidate) pair. The probe table — one (query_id,
+    partition_id, D x C ADC table) row per probe — is an Arrow
+    LocalRelation (`_driver_frame`), broadcast into a hash join on
+    partition_id without Python workers; the gather is a pure Catalyst
+    expression inside whole-stage codegen, no Python in the scan. The
+    select right after the join keeps the ~8 KB table (and the codes)
+    off every later exchange: only 4 small columns survive scoring."""
+    probes = _driver_frame(
+        candidates.sparkSession,
+        {
+            "query_id": np.asarray(qids, dtype=np.int64)[probe_qidx],
+            "partition_id": np.asarray(probe_pid, dtype=np.int32),
+            "__tbl": tables,
+        },
+    )
+    return candidates.join(F.broadcast(probes), "partition_id").selectExpr(
+        "query_id", f"`{id_col}`", "partition_id", f"{_ADC_SCORE} AS __score"
+    )
+
+
+def _query_vectors(spark, qids: list[int], qarr: np.ndarray) -> DataFrame:
+    """Broadcast (query_id, __qv array<float>) for the exact re-rank."""
+    return F.broadcast(
+        _driver_frame(
+            spark,
+            {
+                "query_id": np.asarray(qids, dtype=np.int64),
+                "__qv": qarr.astype(np.float32),
+            },
+        )
+    )
+
+
+def _score_sql(round_to: int | None) -> str:
+    """``__score`` as SQL, rounded when ``round_to`` is set."""
+    return f"round(__score, {int(round_to)})" if round_to is not None else "__score"
+
+
+def _top_per_query(df: DataFrame, order_by: str, cut: int) -> DataFrame:
+    """``df`` plus ``rank`` = row_number over query_id by ``order_by``,
+    kept to rank <= ``cut`` — Spark runs the window as WindowGroupLimit,
+    a partial top-k before the shuffle (Q4+Q5, the reference's NBest
+    merge)."""
+    return df.selectExpr(
+        "*",
+        f"row_number() OVER (PARTITION BY query_id ORDER BY {order_by}) "
+        "AS rank",
+    ).where(f"rank <= {int(cut)}")
+
+
 def ann_query(
     model: IndexModel,
     queries: list[tuple[int, list[float]]] | np.ndarray,
@@ -472,6 +602,7 @@ def ann_query(
     (Q, N) array with ``query_ids``. Returns (query_id, vector_id,
     partition_id, squared_distance, rank) — the reference's QueryResult
     shape (/root/reference/src/db/build.rs:577-587) plus batch columns.
+    An empty batch returns no rows with that schema.
 
     ``where``: optional filtered-search predicate (Column or SQL string)
     over the index's attribute columns, applied to candidates BEFORE
@@ -479,20 +610,20 @@ def ann_query(
     that all satisfy the predicate (no reference counterpart; free in
     Spark because attributes live on the encoded rows).
 
-    ``scorer``: "sql" gathers the ADC table with pure Catalyst
-    expressions — the table travels as a column of the broadcast probe
-    row, keeping the scan inside whole-stage codegen. "pandas" keeps
-    the tables in a Spark broadcast and gathers with NumPy per row
-    (only probe_idx + codes cross Arrow). "batch" scores whole Arrow
-    batches in NumPy via mapInPandas AND applies a batch-local top-k
-    with the same (rounded score, id) order as the global window, so
-    the rank shuffle sees O(Q * k * batches) rows instead of every
-    scored candidate. "auto" (default) picks by total table size: the
-    sql form copies the D*C array into every joined row, so past ~100k
-    table doubles the batch form wins (measured at 200k vectors,
-    Q=100, D=16, C=64: sql 66 s, pandas 20 s, batch ~6 s; at bench
-    scale sql wins by the reverse margin). All scorers agree under the
-    rounded-score contract (tested).
+    ``scorer``: "sql" gathers the ADC table with one pure Catalyst
+    expression: the Q * nprobe tables ride as an Arrow LocalRelation
+    probe table, broadcast-joined to the pruned scan on partition_id
+    without Python workers, and the scan stays inside whole-stage
+    codegen. "batch" scores whole Arrow batches in NumPy via mapInPandas
+    AND applies a batch-local top-k with the same (rounded score, id)
+    order as the global window, so the rank shuffle sees O(Q * k * batches)
+    rows instead of every scored candidate. "auto" (default) picks by
+    total table size, Q * nprobe * D * C doubles: up to 100k the sql
+    form's single codegen'd pass wins; past it the batch form's
+    vectorized gather and pre-shuffle cut win (measured at 200k
+    vectors, Q=100, D=16, C=64, with the former pickled probe table:
+    sql 66 s, batch ~6 s). Both scorers agree under the rounded-score
+    contract (tested).
 
     ``on_event(stage, seconds)`` mirrors the reference's query event
     handlers (/root/reference/src/db/stored.rs:513-532): fired after the
@@ -520,16 +651,9 @@ def ann_query(
     id), so results are identical. This is the right shape when the
     re-rank source would otherwise be a full scan of the vector corpus.
     """
-    if isinstance(queries, np.ndarray):
-        qarr = queries.astype(np.float64)
-        qids = list(query_ids) if query_ids is not None else list(range(len(qarr)))
-    else:
-        qids = [int(q[0]) for q in queries]
-        qarr = np.array([q[1] for q in queries], dtype=np.float64)
-    if qarr.ndim != 2 or qarr.shape[1] != model.vector_size:
-        raise ValueError(
-            f"query width {qarr.shape} != vector_size {model.vector_size}"
-        )
+    qids, qarr = _query_batch(model, queries, query_ids)
+    if not qids:
+        return _empty_result(model, rank=True)
 
     import time as _time
 
@@ -565,66 +689,10 @@ def ann_query(
             raise ValueError("rerank='stored' requires scorer='batch'")
     if scorer == "auto":
         scorer = "batch" if tables.size > 100_000 else "sql"
-    if scorer == "sql":
-        # the ADC table rides ON the broadcast probe row as
-        # array<array<double>> (D x C, ~8 KB per probe); the per-vector
-        # gather dist = sum_d tbl[d][codes[d]] is a pure Catalyst
-        # expression -> whole-stage codegen, no Python in the scan.
-        probes_df = F.broadcast(
-            spark.createDataFrame(
-                [
-                    (
-                        int(qids[qi]),
-                        int(pid),
-                        [[float(v) for v in row] for row in tables[i]],
-                    )
-                    for i, (qi, pid) in enumerate(zip(probe_qidx, probe_pid))
-                ],
-                "query_id long, partition_id int, __tbl array<array<double>>",
-            )
-        )
-        score_expr = F.aggregate(
-            F.zip_with(
-                F.col("codes"),
-                F.col("__tbl"),
-                lambda code, row: F.element_at(row, code + 1),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    elif scorer == "pandas":
-        sc = spark.sparkContext
-        b_tables = sc.broadcast(tables)
-        probes_df = F.broadcast(
-            spark.createDataFrame(
-                [
-                    (int(qids[qi]), int(pid), int(i))
-                    for i, (qi, pid) in enumerate(zip(probe_qidx, probe_pid))
-                ],
-                "query_id long, partition_id int, probe_idx int",
-            )
-        )
-
-        @F.pandas_udf("double")
-        def adc_score(probe_idx: pd.Series, codes: pd.Series) -> pd.Series:
-            t = b_tables.value  # (QP, D, C)
-            pi = probe_idx.to_numpy()
-            cd = np.stack(codes.to_numpy())  # (batch, D)
-            return pd.Series(
-                t[pi[:, None], np.arange(d)[None, :], cd].sum(axis=1)
-            )
-
-        score_expr = adc_score(F.col("probe_idx"), F.col("codes"))
-    elif scorer != "batch":
+    if scorer not in ("sql", "batch"):
         raise ValueError(f"unknown scorer: {scorer}")
 
-    probed_pids = [int(x) for x in np.unique(probe_pid)]
-    candidates = model.encoded.where(
-        # partition pruning: only probed directories are read (S3)
-        F.col("partition_id").isin(probed_pids)
-    )
-    if where is not None:
-        candidates = candidates.where(where)
+    candidates = _probed_rows(model, probe_pid, where)
     if scorer == "batch":
         # whole-batch NumPy scoring + BATCH-LOCAL top-k inside the UDF:
         # for each Arrow batch, score every (probing query, row) pair
@@ -702,70 +770,41 @@ def ann_query(
             score_partition, out_schema
         )
     else:
-        scored = (
-            candidates.join(probes_df, "partition_id")
-            .withColumn("__score", score_expr)
-            # project IMMEDIATELY: the probe row carries the D x C ADC
-            # table (~8 KB) and the candidate row its codes — letting
-            # either reach the top-k window would put them on the rank
-            # shuffle. Only 4 small columns may survive scoring.
-            .select("query_id", id_col, "partition_id", "__score")
+        scored = _sql_scored(
+            candidates, qids, probe_qidx, probe_pid, tables, id_col
         )
     # With round_to set, RANKING uses the rounded score (ties by id) —
     # the determinism contract: unrounded ADC sums differ across engines
     # in the last ulp (summation order), so only the rounded value is a
     # stable sort key for oracle comparison (SURVEY.md §2.4 tie-breaks).
-    rank_score = (
-        F.round(F.col("__score"), round_to)
-        if round_to is not None
-        else F.col("__score")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        rank_score.asc(), F.col(id_col).asc()
-    )
-    topk = scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= adc_k
-    )
+    order_by = f"{_score_sql(round_to)} ASC, `{id_col}` ASC"
+    topk = _top_per_query(scored, order_by, adc_k)
     if fused:
         # exact scores already computed in-scan for every candidate that
         # could survive the global ADC cut; swap them in and re-rank.
         # Both windows hash-partition by query_id, so the second one
         # reuses the first's exchange (sort-only within partitions).
-        topk = topk.select(
-            "query_id",
-            id_col,
-            "partition_id",
-            F.col("__exact").alias("__score"),
-        ).withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-    elif rerank is not None:
-        qdf = F.broadcast(
-            spark.createDataFrame(
-                [(int(q), [float(x) for x in v]) for q, v in zip(qids, qarr)],
-                "query_id long, __qv array<float>",
-            )
+        topk = _top_per_query(
+            topk.selectExpr(
+                "query_id", f"`{id_col}`", "partition_id", "__exact AS __score"
+            ),
+            order_by,
+            k,
         )
+    elif rerank is not None:
         cand = topk.select("query_id", id_col, "partition_id")
         exact = (
-            rerank.select(id_col, model.config.vec_col)
+            rerank.select(id_col, vec_col)
             .join(F.broadcast(cand), id_col)
-            .join(qdf, "query_id")
-            .withColumn(
-                "__score", squared_l2(F.col(model.config.vec_col), F.col("__qv"))
-            )
+            .join(_query_vectors(spark, qids, qarr), "query_id")
+            .withColumn("__score", squared_l2(F.col(vec_col), F.col("__qv")))
         )
-        topk = exact.withColumn("rank", F.row_number().over(w)).where(
-            F.col("rank") <= k
-        )
-    out_score = (
-        F.round(F.col("__score"), round_to)
-        if round_to is not None
-        else F.col("__score")
-    )
-    result = topk.select(
+        topk = _top_per_query(exact, order_by, k)
+    result = topk.selectExpr(
         "query_id",
-        F.col(id_col).alias("vector_id"),
+        f"`{id_col}` AS vector_id",
         "partition_id",
-        out_score.alias("squared_distance"),
+        f"{_score_sql(round_to)} AS squared_distance",
         "rank",
     )
     _mark("plan_built")
@@ -827,69 +866,20 @@ def ann_range_query_batch(
     the exact (rounded) distance. Residual misses are only true
     members whose ADC distance exceeds the slack band — widen
     ``rerank_slack`` to trade scan volume for that tail."""
-    from pyspark.sql import Window
-
-    if isinstance(queries, np.ndarray):
-        qarr = queries.astype(np.float64)
-        qids = list(query_ids) if query_ids is not None else list(range(len(qarr)))
-    else:
-        qids = [int(q[0]) for q in queries]
-        qarr = np.array([q[1] for q in queries], dtype=np.float64)
+    qids, qarr = _query_batch(model, queries, query_ids)
+    if not qids:
+        return _empty_result(model, rank=limit_per_query is not None)
     spark = model.encoded.sparkSession
     id_col = model.config.id_col
-    id_type = model.encoded.schema[id_col].dataType.simpleString()
-    if not qids:
-        # empty batch: the contract schema, rank included iff the
-        # non-empty path would carry it (the ivfsq ADVICE r9 #3 rule)
-        schema = (
-            f"query_id long, vector_id {id_type}, partition_id int, "
-            "squared_distance double"
-        )
-        if limit_per_query is not None:
-            schema += ", rank int"
-        return spark.createDataFrame([], schema)
-    if qarr.ndim != 2 or qarr.shape[1] != model.vector_size:
-        raise ValueError(
-            f"query width {qarr.shape} != vector_size {model.vector_size}"
-        )
     probe_qidx, probe_pid, tables = _phase1(model, qarr, qids, nprobe)
     d = model.config.num_divisions
     if scorer == "auto":
         scorer = "batch" if tables.size > 100_000 else "sql"
 
-    probed_pids = [int(x) for x in np.unique(probe_pid)]
-    candidates = model.encoded.where(
-        F.col("partition_id").isin(probed_pids)
-    )
-    if where is not None:
-        candidates = candidates.where(where)
+    candidates = _probed_rows(model, probe_pid, where)
     if scorer == "sql":
-        probes_df = F.broadcast(
-            spark.createDataFrame(
-                [
-                    (
-                        int(qids[qi]),
-                        int(pid),
-                        [[float(v) for v in row] for row in tables[i]],
-                    )
-                    for i, (qi, pid) in enumerate(zip(probe_qidx, probe_pid))
-                ],
-                "query_id long, partition_id int, __tbl array<array<double>>",
-            )
-        )
-        score_expr = F.aggregate(
-            F.zip_with(
-                F.col("codes"),
-                F.col("__tbl"),
-                lambda code, row: F.element_at(row, code + 1),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        scored = (
-            candidates.join(probes_df, "partition_id")
-            .withColumn("__score", score_expr)
-            .select("query_id", id_col, "partition_id", "__score")
+        scored = _sql_scored(
+            candidates, qids, probe_qidx, probe_pid, tables, id_col
         )
     elif scorer == "batch":
         # Arrow kernel: one vectorized gather per (probing query,
@@ -903,6 +893,7 @@ def ann_range_query_batch(
         for i, (qi, pid) in enumerate(zip(probe_qidx, probe_pid)):
             by_pid.setdefault(int(pid), []).append((int(qids[qi]), int(i)))
         b_probes = sc.broadcast(by_pid)
+        id_type = model.encoded.schema[id_col].dataType.simpleString()
         out_schema = (
             f"query_id long, {id_col} {id_type}, "
             "partition_id int, __score double"
@@ -965,56 +956,37 @@ def ann_range_query_batch(
     else:
         raise ValueError(f"unknown scorer: {scorer}")
 
-    out_score = (
-        F.round(F.col("__score"), round_to)
-        if round_to is not None
-        else F.col("__score")
-    )
     cutoff = (
         float(radius) * float(rerank_slack)
         if rerank is not None
         else float(radius)
     )
-    out = scored.select(
+    out = scored.selectExpr(
         "query_id",
-        F.col(id_col).alias("vector_id"),
+        f"`{id_col}` AS vector_id",
         "partition_id",
-        out_score.alias("squared_distance"),
+        f"{_score_sql(round_to)} AS squared_distance",
     ).where(F.col("squared_distance") <= cutoff)
     if rerank is not None:
         vec_col = model.config.vec_col
-        qdf = F.broadcast(
-            spark.createDataFrame(
-                [(int(q), [float(x) for x in v]) for q, v in zip(qids, qarr)],
-                "query_id long, __qv array<float>",
-            )
-        )
         survivors = out.select(
             "query_id", F.col("vector_id").alias(id_col), "partition_id"
         )
         ex = (
             rerank.select(id_col, vec_col)
             .join(F.broadcast(survivors), id_col)
-            .join(qdf, "query_id")
+            .join(_query_vectors(spark, qids, qarr), "query_id")
             .withColumn("__score", squared_l2(F.col(vec_col), F.col("__qv")))
         )
-        score2 = (
-            F.round(F.col("__score"), round_to)
-            if round_to is not None
-            else F.col("__score")
-        )
-        out = ex.select(
+        out = ex.selectExpr(
             "query_id",
-            F.col(id_col).alias("vector_id"),
+            f"`{id_col}` AS vector_id",
             "partition_id",
-            score2.alias("squared_distance"),
+            f"{_score_sql(round_to)} AS squared_distance",
         ).where(F.col("squared_distance") <= float(radius))
     if limit_per_query is not None:
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("squared_distance").asc(), F.col("vector_id").asc()
-        )
-        out = out.withColumn("rank", F.row_number().over(w)).where(
-            F.col("rank") <= int(limit_per_query)
+        out = _top_per_query(
+            out, "squared_distance ASC, vector_id ASC", limit_per_query
         )
     return out
 

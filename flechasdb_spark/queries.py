@@ -1450,8 +1450,9 @@ FROM ranked WHERE rank <= {_FRZ_K}
 def q_ann_ivfpq_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full persisted lifecycle on the frozen index: assemble with
     fixed models, save_index, load_index (manifest validation + lazy
-    partitioned scan), ann_query (probe select -> broadcast ADC tables
-    -> pruned scan -> codegen gather -> WindowGroupLimit top-k)."""
+    partitioned scan), ann_query (probe select -> ADC tables as an Arrow
+    LocalRelation, broadcast without Python workers -> pruned scan ->
+    codegen gather -> WindowGroupLimit top-k)."""
     import tempfile
 
     from flechasdb_spark.plans.ivf import ann_query

@@ -1,14 +1,18 @@
 """Dump .explain("formatted") for registry rows to <outdir>/<row>_<tag>.txt.
-Usage: python scripts/dump_plans.py <outdir> <tag> <row> [row ...]
+Usage, from the repo root (no PYTHONPATH needed):
+    python scripts/dump_plans.py <outdir> <tag> <row> [row ...]
 """
 import os
 import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main():
     outdir, tag = sys.argv[1], sys.argv[2]
     rows = sys.argv[3:]
     os.makedirs(outdir, exist_ok=True)
+    sys.path.insert(0, REPO)
     from flechasdb_spark.queries import REGISTRY
     from flechasdb_spark.session import get_spark
 

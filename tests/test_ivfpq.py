@@ -349,9 +349,8 @@ def test_query_and_cluster_event_callbacks(model, emb):
 
 
 def test_scorers_agree_on_rounded_contract(model, emb):
-    """sql, pandas, and batch ADC scorers return the same rows under
-    the rounded-ranking contract (auto picks among them by table
-    size)."""
+    """sql and batch ADC scorers return the same rows under the
+    rounded-ranking contract (auto picks between them by table size)."""
     qs = [
         (int(r.vec_id), [float(x) for x in r.embedding])
         for r in emb.where(F.col("vec_id") < 5).collect()
@@ -363,9 +362,9 @@ def test_scorers_agree_on_rounded_contract(model, emb):
                 model, qs, k=5, nprobe=4, round_to=4, scorer=scorer
             ).collect()
         )
-        for scorer in ("sql", "pandas", "batch")
+        for scorer in ("sql", "batch")
     }
-    assert results["sql"] == results["pandas"] == results["batch"]
+    assert results["sql"] == results["batch"]
 
 
 def test_lazy_centroids_distributed_probes(model, emb, spark, tmp_path_factory):
@@ -795,3 +794,80 @@ def test_packed_pq_save_load_roundtrip_and_query_equality(
         "partition_id" in ln and " IN (" in ln.split("PartitionFilters")[1]
         for ln in scan_lines
     ), scan_lines
+
+
+def test_ann_query_empty_batch_returns_contract_schema(model):
+    """An empty batch, as a list or a (0, N) array, returns no rows with
+    the (query_id, vector_id, partition_id, squared_distance, rank)
+    schema of a non-empty result — like the radius and SQ batch forms."""
+    cols = ["query_id", "vector_id", "partition_id", "squared_distance", "rank"]
+    full = ann_query(model, [(0, [0.0] * 64)], k=3, nprobe=2)
+    for empty in ([], np.zeros((0, model.vector_size))):
+        out = ann_query(model, empty, k=3, nprobe=2)
+        assert out.columns == cols == full.columns
+        assert out.count() == 0
+        assert out.unionByName(full).count() == 3
+
+
+def _saved_index(model, spark, tmp_path_factory, name):
+    path = str(tmp_path_factory.mktemp(name))
+    save_index(model, path)
+    return load_index(spark, path)
+
+
+def test_sql_probe_table_is_local_relation(model, emb, spark, tmp_path_factory):
+    """The sql scorer's probe/ADC table is built as Arrow on the driver,
+    so Spark broadcasts a LocalTableScan — no pickled RDD (ExistingRDD)
+    and no job of Python workers to ship it — while the plan keeps its
+    shape: the literal probe cut in the PartitionFilters, a broadcast
+    hash join and the WindowGroupLimit top-k."""
+    loaded = _saved_index(model, spark, tmp_path_factory, "local_rel")
+    qv = [float(x) for x in emb.where(F.col("vec_id") == 3).first()["embedding"]]
+    out = ann_query(loaded, [(3, qv)], k=5, nprobe=2, scorer="sql")
+    assert out.count() == 5
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    below = [
+        lines[i + 1].lstrip(" :+-")
+        for i, ln in enumerate(lines)
+        if "BroadcastExchange" in ln
+    ]
+    assert below and all(b.startswith("LocalTableScan") for b in below), plan
+    assert "ExistingRDD" not in plan, plan
+    assert "BroadcastHashJoin" in plan and "WindowGroupLimit" in plan, plan
+    assert any(
+        " IN (" in ln.split("PartitionFilters: [")[1]
+        for ln in lines
+        if "PartitionFilters: [" in ln and "partition_id" in ln
+    ), plan
+
+
+def test_sql_scores_equal_left_fold_of_adc_tables(model, emb, spark, tmp_path_factory):
+    """Every unrounded sql-scored distance is exactly the left fold, in
+    division order from 0.0, of its probe's ADC table entries — with
+    and without a where pre-filter."""
+    from flechasdb_spark.plans.ivf import _adc_tables
+
+    loaded = _saved_index(model, spark, tmp_path_factory, "left_fold")
+    rows = emb.where(F.col("vec_id").isin(3, 9, 21)).orderBy("vec_id").collect()
+    qids = [int(r.vec_id) for r in rows]
+    qarr = np.array([r.embedding for r in rows], dtype=np.float64)
+    probe_qidx, probe_pid = select_probes(loaded, qarr, 3)
+    tables = _adc_tables(loaded, qarr, probe_qidx, probe_pid)
+    probe = {
+        (qids[qi], int(pid)): i
+        for i, (qi, pid) in enumerate(zip(probe_qidx, probe_pid))
+    }
+    codes = {r.vec_id: list(r.codes) for r in loaded.encoded.collect()}
+    for where in (None, "label = 1"):
+        out = ann_query(
+            loaded, qarr, k=7, nprobe=3, query_ids=qids, where=where,
+            scorer="sql",
+        ).collect()
+        assert len(out) == 3 * 7
+        for r in out:
+            t = tables[probe[(r.query_id, r.partition_id)]]
+            acc = 0.0
+            for d, c in enumerate(codes[r.vector_id]):
+                acc = acc + float(t[d, c])
+            assert r.squared_distance == acc, (where, r)
