@@ -137,7 +137,10 @@ class IndexModel:
         (upsert encode) needs this; the query path does not."""
         if self.centroids is not None:
             return self.centroids
-        rows = self.centroids_source.orderBy("partition_id").collect()
+        # the ids are unique: sorting on the driver saves orderBy's jobs
+        rows = sorted(
+            self.centroids_source.collect(), key=lambda r: r.partition_id
+        )
         return np.array([r.centroid for r in rows], dtype=np.float64)
 
     def codebooks_df(self, spark) -> DataFrame:

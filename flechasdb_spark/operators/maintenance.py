@@ -76,6 +76,13 @@ def _manifest_num_vectors_target(
     return max(0, int(manifest["num_vectors"]) + int(delta))
 
 
+def _in_sql(col: str, values) -> str:
+    """``col IN (v, ...)`` over driver-held integer ids as ONE SQL string:
+    a filter built from it is one py4j round-trip, where
+    ``F.col(col).isin(values)`` makes several per value."""
+    return f"`{col}` IN ({', '.join(str(int(v)) for v in values)})"
+
+
 def _fs_path(spark: SparkSession, p: str):
     jvm = spark._jvm
     path = jvm.org.apache.hadoop.fs.Path(p)
@@ -346,9 +353,9 @@ def upsert_vectors(
     n_incoming = sum(r["count"] for r in probe if not r["__replaced"])
     n_replaced = sum(replaced_cnt.values())
 
-    survivors = existing.where(
-        F.col("partition_id").isin(touched)
-    ).join(F.broadcast(new_ids), cfg.id_col, "left_anti")
+    survivors = existing.where(_in_sql("partition_id", touched)).join(
+        F.broadcast(new_ids), cfg.id_col, "left_anti"
+    )
     # schema-driven (r10): the at-rest columns are whatever the store
     # carries — codes_bin on a packed store, the original vectors on a
     # keep_vectors store — never a hardcoded projection that could
@@ -383,7 +390,10 @@ def delete_vectors(
     cfg = model.config
     repair_cell_rewrite(spark, f"{index_path}/index")
     existing = spark.read.parquet(f"{index_path}/index")
-    victims = existing.where(F.col(cfg.id_col).isin([int(i) for i in ids]))
+    ids = [int(i) for i in ids]
+    if not ids:
+        return []
+    victims = existing.where(_in_sql(cfg.id_col, ids))
     victim_cnt = {
         r.partition_id: r["count"]
         for r in victims.groupBy("partition_id").count().collect()
@@ -392,8 +402,8 @@ def delete_vectors(
     if not touched:
         return []
     survivors = existing.where(
-        F.col("partition_id").isin(touched)
-        & ~F.col(cfg.id_col).isin([int(i) for i in ids])
+        f"{_in_sql('partition_id', touched)} AND NOT "
+        f"({_in_sql(cfg.id_col, ids)})"
     )
     # schema-driven (r10): the at-rest columns are whatever the store
     # carries — codes_bin on a packed store, the original vectors on a
@@ -451,7 +461,7 @@ def delete_where(
     if not touched:
         return []
     survivors = existing.where(
-        F.col("partition_id").isin(touched) & ~hit
+        F.expr(_in_sql("partition_id", touched)) & ~hit
     )
     out_cols = [c for c in existing.columns if c != "partition_id"] + [
         "partition_id"
@@ -1571,7 +1581,10 @@ def ivfsq_delete(
     repair_cell_rewrite(spark, f"{index_path}/index")
     existing = spark.read.parquet(f"{index_path}/index")
     _require_flat_ivfsq_layout(existing, "ivfsq_delete")
-    victims = existing.where(F.col(id_col).isin([int(i) for i in ids]))
+    ids = [int(i) for i in ids]
+    if not ids:
+        return []
+    victims = existing.where(_in_sql(id_col, ids))
     victim_cnt = {
         r.partition_id: r["count"]
         for r in victims.groupBy("partition_id").count().collect()
@@ -1580,8 +1593,8 @@ def ivfsq_delete(
     if not touched:
         return []
     survivors = existing.where(
-        F.col("partition_id").isin(touched)
-        & ~F.col(id_col).isin([int(i) for i in ids])
+        f"{_in_sql('partition_id', touched)} AND NOT "
+        f"({_in_sql(id_col, ids)})"
     )
     out_cols = [c for c in existing.columns if c != "partition_id"] + [
         "partition_id"

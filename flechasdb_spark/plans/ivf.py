@@ -12,11 +12,12 @@ partition load, S3) and score every encoded vector
 dist = sum_d T[probe, d, codes[d]] (Q3), then per-query top-k via
 ``row_number`` which Spark executes with WindowGroupLimit — partial
 top-k before the shuffle (Q4+Q5, the reference's NBest merge). The
-"sql" scorer broadcast-joins the probe table (query_id, partition_id,
-T) — built on the driver as an Arrow LocalRelation, so the broadcast
-needs no Python worker — and gathers with one codegen'd
-Catalyst expression; the "batch" scorer broadcasts T to a mapInPandas
-NumPy gather with a batch-local top-k.
+"sql" scorer joins the probe table (query_id, partition_id, T) — built
+on the driver as an Arrow LocalRelation, so it needs no Python worker —
+and gathers with one codegen'd Catalyst expression; a small query runs
+that join and its top-k as one task, a larger one broadcasts the probe
+table. The "batch" scorer broadcasts T to a mapInPandas NumPy gather
+with a batch-local top-k.
 
 Scale: probe list and ADC tables are O(Q * nprobe * D * C) — broadcast;
 the scan shuffles only k rows per (query, partition). The reference's
@@ -477,13 +478,23 @@ def _phase1(
     return probe_qidx, probe_pid, tables
 
 
-# The ADC gather dist = sum_d tbl[d][codes[d]] as ONE SQL expression (a
-# single py4j round-trip to build): a left fold from 0.0 in division
-# order, so every sum is reproducible exactly outside Spark (tested).
-_ADC_SCORE = (
-    "aggregate(zip_with(codes, __tbl, (c, t) -> element_at(t, c + 1)), "
-    "0D, (a, x) -> a + x)"
-)
+def _adc_score(d: int) -> str:
+    """The ADC gather dist = sum_d tbl[d][codes[d]] as ONE SQL expression
+    (a single py4j round-trip to build): the left fold from 0.0 in
+    division order, unrolled over the D divisions, so every sum is
+    reproducible exactly outside Spark (tested). Unrolled, it is plain
+    array access and addition inside whole-stage codegen; the
+    ``aggregate(zip_with(...))`` form of the same fold runs interpreted."""
+    terms = "".join(f" + __tbl[{i}][codes[{i}]])" for i in range(d))
+    return "(" * d + "0D" + terms
+
+
+# Bound on the estimated (probe, candidate) pair count, Q * nprobe * rows
+# per cell, under which `_sql_scored` serves a query as one task. Below
+# it the fixed cost of the broadcast job and the top-k shuffle outweighs
+# scoring in parallel; the two plans cross between 35k and 40k pairs
+# (see `ann_query`), and the bound stays below that.
+_SINGLE_TASK_MAX_PAIRS = 32_000
 
 
 def _query_batch(
@@ -527,21 +538,29 @@ def _probed_rows(model: IndexModel, probe_pid: np.ndarray, where) -> DataFrame:
 
 
 def _sql_scored(
+    model: IndexModel,
     candidates: DataFrame,
     qids: list[int],
     probe_qidx: np.ndarray,
     probe_pid: np.ndarray,
     tables: np.ndarray,
-    id_col: str,
 ) -> DataFrame:
     """The "sql" scorer: (query_id, id, partition_id, __score) for every
     (probing query, candidate) pair. The probe table — one (query_id,
     partition_id, D x C ADC table) row per probe — is an Arrow
-    LocalRelation (`_driver_frame`), broadcast into a hash join on
+    LocalRelation (`_driver_frame`) joined to the candidates on
     partition_id without Python workers; the gather is a pure Catalyst
     expression inside whole-stage codegen, no Python in the scan. The
     select right after the join keeps the ~8 KB table (and the codes)
-    off every later exchange: only 4 small columns survive scoring."""
+    off every later exchange: only 4 small columns survive scoring.
+
+    A small query (estimated pairs, probes x rows per cell, under
+    `_SINGLE_TASK_MAX_PAIRS`) puts both sides in ONE partition and
+    hash-joins them there: with a single partition on each side Spark
+    plans no broadcast and no exchange, so this join, the top-k window
+    and the collect run as one job of one task. A larger query
+    broadcasts the probe table into the parallel scan."""
+    id_col = model.config.id_col
     probes = _driver_frame(
         candidates.sparkSession,
         {
@@ -550,8 +569,18 @@ def _sql_scored(
             "__tbl": tables,
         },
     )
-    return candidates.join(F.broadcast(probes), "partition_id").selectExpr(
-        "query_id", f"`{id_col}`", "partition_id", f"{_ADC_SCORE} AS __score"
+    pairs = len(probe_pid) * model.num_vectors / model.config.num_partitions
+    if pairs < _SINGLE_TASK_MAX_PAIRS:
+        joined = candidates.coalesce(1).join(
+            probes.coalesce(1).hint("shuffle_hash"), "partition_id"
+        )
+    else:
+        joined = candidates.join(F.broadcast(probes), "partition_id")
+    return joined.selectExpr(
+        "query_id",
+        f"`{id_col}`",
+        "partition_id",
+        f"{_adc_score(model.config.num_divisions)} AS __score",
     )
 
 
@@ -611,19 +640,30 @@ def ann_query(
     Spark because attributes live on the encoded rows).
 
     ``scorer``: "sql" gathers the ADC table with one pure Catalyst
-    expression: the Q * nprobe tables ride as an Arrow LocalRelation
-    probe table, broadcast-joined to the pruned scan on partition_id
-    without Python workers, and the scan stays inside whole-stage
-    codegen. "batch" scores whole Arrow batches in NumPy via mapInPandas
+    expression, an unrolled sum of array lookups inside whole-stage
+    codegen; the Q * nprobe tables ride as an Arrow LocalRelation probe
+    table joined to the pruned scan on partition_id without Python
+    workers. The sql plan depends on the estimated pair count,
+    Q * nprobe * num_vectors / num_partitions. Under
+    `_SINGLE_TASK_MAX_PAIRS` (32k) both sides are coalesced to one
+    partition and hash-joined: no broadcast, no shuffle, and the query
+    is one Spark job of one task. At or above it the probe table is
+    broadcast into the parallel scan and the top-k window shuffles
+    k rows per (query, task). The bound sits below the measured
+    crossover: at nprobe=4 on a 20k x 64 store (P=32, D=16, C=64,
+    4-core host), the median request took 0.29 s single-task vs 0.32 s
+    broadcast at 25k pairs, 0.30 vs 0.31 s at 35k, and 0.35 vs 0.34 s
+    at 40k. "batch" scores whole Arrow batches in NumPy via mapInPandas
     AND applies a batch-local top-k with the same (rounded score, id)
     order as the global window, so the rank shuffle sees O(Q * k * batches)
     rows instead of every scored candidate. "auto" (default) picks by
     total table size, Q * nprobe * D * C doubles: up to 100k the sql
-    form's single codegen'd pass wins; past it the batch form's
-    vectorized gather and pre-shuffle cut win (measured at 200k
-    vectors, Q=100, D=16, C=64, with the former pickled probe table:
-    sql 66 s, batch ~6 s). Both scorers agree under the rounded-score
-    contract (tested).
+    form wins; past it the batch form's vectorized gather and
+    pre-shuffle cut win. That 100k threshold was measured with the
+    since-removed pickled probe table and the former interpreted gather
+    (200k vectors, Q=100, D=16, C=64: sql 66 s, batch ~6 s) and is kept
+    as it was. Both scorers agree under the rounded-score contract
+    (tested).
 
     ``on_event(stage, seconds)`` mirrors the reference's query event
     handlers (/root/reference/src/db/stored.rs:513-532): fired after the
@@ -771,7 +811,7 @@ def ann_query(
         )
     else:
         scored = _sql_scored(
-            candidates, qids, probe_qidx, probe_pid, tables, id_col
+            model, candidates, qids, probe_qidx, probe_pid, tables
         )
     # With round_to set, RANKING uses the rounded score (ties by id) —
     # the determinism contract: unrounded ADC sums differ across engines
@@ -879,7 +919,7 @@ def ann_range_query_batch(
     candidates = _probed_rows(model, probe_pid, where)
     if scorer == "sql":
         scored = _sql_scored(
-            candidates, qids, probe_qidx, probe_pid, tables, id_col
+            model, candidates, qids, probe_qidx, probe_pid, tables
         )
     elif scorer == "batch":
         # Arrow kernel: one vectorized gather per (probing query,

@@ -182,7 +182,9 @@ def load_index(
 
     cent_src = spark.read.parquet(os.path.join(path, "centroids"))
     if collect_centroids:
-        cent_rows = cent_src.orderBy("partition_id").collect()
+        # sorted on the driver: the ids are unique, and a Spark orderBy
+        # before the collect costs a sampling job and a shuffle
+        cent_rows = sorted(cent_src.collect(), key=lambda r: r.partition_id)
         if len(cent_rows) != p:
             raise ValueError(
                 f"expected {p} centroids, found {len(cent_rows)}"
@@ -200,10 +202,9 @@ def load_index(
             raise ValueError(f"expected {p} centroids, found {cent_count}")
         centroids = None
 
-    cb_rows = (
-        spark.read.parquet(os.path.join(path, "codebooks"))
-        .orderBy("division", "code")
-        .collect()
+    cb_rows = sorted(
+        spark.read.parquet(os.path.join(path, "codebooks")).collect(),
+        key=lambda r: (r.division, r.code),
     )
     if len(cb_rows) != d * c:
         raise ValueError(f"expected {d * c} codebook rows, found {len(cb_rows)}")

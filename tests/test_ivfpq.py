@@ -815,31 +815,119 @@ def _saved_index(model, spark, tmp_path_factory, name):
     return load_index(spark, path)
 
 
-def test_sql_probe_table_is_local_relation(model, emb, spark, tmp_path_factory):
-    """The sql scorer's probe/ADC table is built as Arrow on the driver,
-    so Spark broadcasts a LocalTableScan — no pickled RDD (ExistingRDD)
-    and no job of Python workers to ship it — while the plan keeps its
-    shape: the literal probe cut in the PartitionFilters, a broadcast
-    hash join and the WindowGroupLimit top-k."""
-    loaded = _saved_index(model, spark, tmp_path_factory, "local_rel")
+def _plan_lines(df) -> list[str]:
+    return df._jdf.queryExecution().executedPlan().toString().splitlines()
+
+
+def _has_literal_probe_cut(lines) -> bool:
+    return any(
+        " IN (" in ln.split("PartitionFilters: [")[1]
+        for ln in lines
+        if "PartitionFilters: [" in ln and "partition_id" in ln
+    )
+
+
+def test_small_sql_query_runs_as_one_task(model, emb, spark, tmp_path_factory):
+    """A sql-scored query under the single-task bound coalesces the
+    pruned scan and the probe LocalRelation to one partition each and
+    hash-joins them: the plan has no exchange of any kind, keeps the
+    literal probe cut in the PartitionFilters, and the whole query is
+    ONE Spark job."""
+    from flechasdb_spark.plans import ivf
+
+    loaded = _saved_index(model, spark, tmp_path_factory, "one_task")
+    pairs = 2 * loaded.num_vectors / loaded.config.num_partitions
+    assert pairs < ivf._SINGLE_TASK_MAX_PAIRS
     qv = [float(x) for x in emb.where(F.col("vec_id") == 3).first()["embedding"]]
-    out = ann_query(loaded, [(3, qv)], k=5, nprobe=2, scorer="sql")
-    assert out.count() == 5
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    lines = plan.splitlines()
+    sc = spark.sparkContext
+    for where in (None, "label = 1"):
+        out = ann_query(loaded, [(3, qv)], k=5, nprobe=2, where=where, scorer="sql")
+        lines = _plan_lines(out)
+        plan = "\n".join(lines)
+        assert "Exchange" not in plan, plan
+        joins = [i for i, ln in enumerate(lines) if "ShuffledHashJoin" in ln]
+        assert len(joins) == 1, plan
+        below = [ln.lstrip(" :+-") for ln in lines[joins[0] + 1 :]]
+        assert sum(b.startswith("Coalesce 1") for b in below) == 2, plan
+        assert "WindowGroupLimit" in plan, plan
+        assert _has_literal_probe_cut(lines), plan
+        group = f"ivfpq-one-task-{where is not None}"
+        sc.setJobGroup(group, "single-task query gate")
+        try:
+            rows = out.collect()
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setJobGroup(f"{group}-done", "")
+        assert len(rows) == 5
+        assert len(jobs) == 1, jobs
+
+
+def test_sql_probe_table_is_local_relation(model, emb, spark, tmp_path_factory):
+    """A sql-scored query above the single-task bound keeps the parallel
+    plan: the probe/ADC table is built as Arrow on the driver, so Spark
+    broadcasts a LocalTableScan — no pickled RDD (ExistingRDD) and no
+    job of Python workers to ship it — with the literal probe cut in
+    the PartitionFilters, a broadcast hash join and the WindowGroupLimit
+    top-k."""
+    from flechasdb_spark.plans import ivf
+
+    loaded = _saved_index(model, spark, tmp_path_factory, "local_rel")
+    per_query = 2 * loaded.num_vectors / loaded.config.num_partitions
+    n_q = int(ivf._SINGLE_TASK_MAX_PAIRS // per_query) + 1
+    rows = emb.orderBy("vec_id").limit(n_q).collect()
+    qs = [(int(r.vec_id), [float(x) for x in r.embedding]) for r in rows]
+    out = ann_query(loaded, qs, k=5, nprobe=2, scorer="sql")
+    assert out.count() == 5 * n_q
+    lines = _plan_lines(out)
+    plan = "\n".join(lines)
     below = [
         lines[i + 1].lstrip(" :+-")
         for i, ln in enumerate(lines)
         if "BroadcastExchange" in ln
     ]
     assert below and all(b.startswith("LocalTableScan") for b in below), plan
-    assert "ExistingRDD" not in plan, plan
+    assert "ExistingRDD" not in plan and "Coalesce" not in plan, plan
     assert "BroadcastHashJoin" in plan and "WindowGroupLimit" in plan, plan
-    assert any(
-        " IN (" in ln.split("PartitionFilters: [")[1]
-        for ln in lines
-        if "PartitionFilters: [" in ln and "partition_id" in ln
-    ), plan
+    assert _has_literal_probe_cut(lines), plan
+
+
+@pytest.mark.parametrize("round_to", [None, 4])
+def test_single_task_plan_matches_broadcast_plan(
+    model, emb, round_to, monkeypatch
+):
+    """Forcing each sql plan by the single-task bound changes no row:
+    top-k and radius results, with a where pre-filter, a rounded score
+    and a per-query limit, are bit-identical."""
+    from flechasdb_spark.plans import ivf
+    from flechasdb_spark.plans.ivf import ann_range_query_batch
+
+    rows = emb.where(F.col("vec_id").isin(3, 9, 21, 40)).orderBy("vec_id").collect()
+    qids = [int(r.vec_id) for r in rows]
+    qarr = np.array([r.embedding for r in rows], dtype=np.float64)
+
+    def results():
+        out = []
+        for where in (None, "label = 1"):
+            topk = ann_query(
+                model, qarr, k=7, nprobe=3, query_ids=qids, where=where,
+                round_to=round_to, scorer="sql",
+            )
+            out.append(sorted(topk.collect()))
+            for limit in (None, 3):
+                radius = ann_range_query_batch(
+                    model, qarr, radius=4.0, nprobe=3, query_ids=qids,
+                    where=where, round_to=round_to, limit_per_query=limit,
+                    scorer="sql",
+                )
+                out.append(sorted(radius.collect()))
+        return out
+
+    monkeypatch.setattr(ivf, "_SINGLE_TASK_MAX_PAIRS", float("inf"))
+    single = results()
+    monkeypatch.setattr(ivf, "_SINGLE_TASK_MAX_PAIRS", 0)
+    broadcast = results()
+    assert all(single), single
+    assert single == broadcast
 
 
 def test_sql_scores_equal_left_fold_of_adc_tables(model, emb, spark, tmp_path_factory):
