@@ -23,6 +23,7 @@ O(docs x L) intermediate is the per-label score table, with L the
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from flechasdb_spark.functions.texthash import md5_long
@@ -170,7 +171,6 @@ def _nb_scored_top2(df: DataFrame, model, text_col: str, id_col: str, B: int):
     import hashlib
 
     import numpy as np
-    import pandas as pd
 
     labels, P, LL = model
     L = len(labels)
@@ -178,11 +178,8 @@ def _nb_scored_top2(df: DataFrame, model, text_col: str, id_col: str, B: int):
     # the relational form); the kernel receives the token ARRAYS
     toks_expr = F.coalesce(tokens(text_col), F.array())
 
-    @F.pandas_udf(
-        "struct<predicted:string, s1:long, s2:long>",
-        F.PandasUDFType.SCALAR,
-    )
-    def _score(tokens_s):
+    @F.pandas_udf("struct<predicted:string, s1:long, s2:long>")
+    def _score(tokens_s: pd.Series) -> pd.DataFrame:
         n = len(tokens_s)
         lists = [
             t if t is not None else [] for t in tokens_s

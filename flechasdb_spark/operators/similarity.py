@@ -26,6 +26,7 @@ Scale design:
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -238,7 +239,6 @@ def lsh_neardup_pairs(
     ).select(id_col, vec_col, "__tb.t", "__tb.b")
     if impl == "pandas":
         import numpy as np
-        import pandas as pd
 
         thr = float(threshold)
         rt = round_to
@@ -346,7 +346,6 @@ def cluster_neardup_pairs(
     """
     if impl == "pandas":
         import numpy as np
-        import pandas as pd
 
         thr = float(threshold)
         # vectorized coarse assign (same argmin-by-(dist, cid) rule as
@@ -361,8 +360,8 @@ def cluster_neardup_pairs(
         C = np.array([list(r[cent_col]) for r in crows], dtype=np.float64)
         c_sq = (C**2).sum(axis=1)
 
-        @F.pandas_udf("long", F.PandasUDFType.SCALAR)
-        def _assign(vec):
+        @F.pandas_udf("long")
+        def _assign(vec: pd.Series) -> pd.Series:
             V = np.stack(vec.to_numpy()).astype(np.float64)
             # full ||v||^2 + ||c||^2 - 2<v,c> so both impls score the
             # same mathematical quantity; BLAS vs sequential summation
@@ -576,8 +575,6 @@ def mmr_rerank(
     DuckDB oracle (k chained argmax CTEs); ties break on ascending id.
     ``lam`` should have a short decimal expansion (default 0.5) so
     ``mmr_score`` is exact at 5 decimals."""
-    import pandas as pd
-
     if k < 1 or n_candidates < k:
         raise ValueError(f"need 1 <= k <= n_candidates, got {k}, {n_candidates}")
     if candidates is None:

@@ -11,6 +11,7 @@ full whole-stage codegen.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -398,15 +399,11 @@ def _unigram_kernel_score(
     tokens in the model dict, and accumulates exact int64 sums; ratio
     columns are the same SQL expressions as the relational form."""
     import numpy as np
-    import pandas as pd
 
     toks_expr = F.coalesce(tokens(text_col), F.array())
 
-    @F.pandas_udf(
-        "struct<n_tokens:long, nll:long, seen:long>",
-        F.PandasUDFType.SCALAR,
-    )
-    def _score(tokens_s):
+    @F.pandas_udf("struct<n_tokens:long, nll:long, seen:long>")
+    def _score(tokens_s: pd.Series) -> pd.DataFrame:
         n = len(tokens_s)
         lists = [t if t is not None else [] for t in tokens_s]
         lens = np.array([len(t) for t in lists], dtype=np.int64)
@@ -724,15 +721,11 @@ def _bigram_kernel_score(
     lq_alpha + (lq1(w)|floor) — the identical integer addends, summed
     per doc in int64."""
     import numpy as np
-    import pandas as pd
 
     toks_expr = F.coalesce(tokens(text_col), F.array())
 
-    @F.pandas_udf(
-        "struct<n_tokens:long, nll:long, nhit:long, nbig:long>",
-        F.PandasUDFType.SCALAR,
-    )
-    def _score(tokens_s):
+    @F.pandas_udf("struct<n_tokens:long, nll:long, nhit:long, nbig:long>")
+    def _score(tokens_s: pd.Series) -> pd.DataFrame:
         n = len(tokens_s)
         lists = [
             list(t) if t is not None else [] for t in tokens_s
@@ -1699,8 +1692,8 @@ def decode_token_ids(
     )
     unk = str(unk_token)
 
-    @F.pandas_udf("string", F.PandasUDFType.SCALAR)
-    def _decode(ids):
+    @F.pandas_udf("string")
+    def _decode(ids: pd.Series) -> pd.Series:
         v = bc.value
         return ids.map(
             lambda seq: " ".join(v.get(int(t), unk) for t in seq)

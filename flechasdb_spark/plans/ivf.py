@@ -325,10 +325,22 @@ def select_probes(
     p = model.centroids.shape[0]
     if nprobe > p:
         raise ValueError(f"nprobe {nprobe} exceeds num_partitions {p}")
+    probed = _probe_fold(model.centroids, queries, nprobe)  # (Q, nprobe)
+    q_idx = np.repeat(np.arange(queries.shape[0]), nprobe)
+    return q_idx, probed.ravel()
+
+
+def _probe_fold(
+    centroids: np.ndarray, queries: np.ndarray, nprobe: int
+) -> np.ndarray:
+    """(Q, min(nprobe, P)) positions into the (P, N) ``centroids`` of
+    each query's nearest centroids by exact squared L2, ties by
+    position — the one driver-side probe fold of every family."""
+    p = centroids.shape[0]
     # dimension-major accumulation (d2 += diff^2 per dim) — the exact
     # left-fold the engine's squared_l2 aggregate performs, so near-tie
-    # centroid distances order IDENTICALLY to select_probes_df and the
-    # SQ side's driver path (VERDICT r9 #7; the former algebraic
+    # centroid distances order IDENTICALLY to select_probes_df and
+    # flat_knn over the centroid table (VERDICT r9 #7; the former algebraic
     # expansion ||c||^2 - 2 q.c could flip probed cells on ties because
     # its rounding path differs from the engine fold — parity is
     # tie-fixture-gated in tests/test_plans.py). ADVICE r10: the fold
@@ -350,14 +362,50 @@ def select_probes(
         acc[:] = 0.0
         b = buf[: e - s]
         for j in range(queries.shape[1]):
-            np.subtract(
-                queries[s:e, j, None], model.centroids[None, :, j], out=b
-            )
+            np.subtract(queries[s:e, j, None], centroids[None, :, j], out=b)
             np.multiply(b, b, out=b)
             np.add(acc, b, out=acc)
-    probed = np.argsort(scores, axis=1, kind="stable")[:, :nprobe]  # (Q, nprobe)
-    q_idx = np.repeat(np.arange(q_n), nprobe)
-    return q_idx, probed.ravel()
+    return np.argsort(scores, axis=1, kind="stable")[:, :nprobe]
+
+
+def _centroid_probes(
+    centroids: DataFrame,
+    qarr: np.ndarray,
+    qids: list[int],
+    nprobe: int,
+    collect_centroids: bool = True,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Probe selection over a (partition_id, centroid) DataFrame for the
+    SQ and BQ families: (probe_qidx, probe_pid, probe_centroid), one row
+    per probe, query-major in probe order.
+
+    ``collect_centroids=True`` collects the O(P) table once (no
+    ``orderBy``: it would add a sampling job and a shuffle; the rows are
+    sorted here, so ties break by partition_id) and runs `_probe_fold`.
+    ``False`` runs the distributed `select_probes_df` job and collects
+    only the O(Q * nprobe) winners, for a centroid table too large for
+    the driver. Either way a query whose width is not the centroids'
+    raises ValueError before any scan is planned."""
+    if collect_centroids:
+        cc = cent_col_name(centroids)
+        rows = sorted(
+            centroids.select("partition_id", cc).collect(), key=lambda r: r[0]
+        )
+    else:
+        qpos = {int(q): i for i, q in enumerate(qids)}
+        rows = select_probes_df(centroids, qarr, nprobe, qids).collect()
+        rows.sort(key=lambda r: (qpos[r.query_id], r.probe_rank))
+    pids = np.array([r.partition_id for r in rows], dtype=np.int64)
+    cents = np.array([r[-1] for r in rows], dtype=np.float64)
+    if qarr.ndim != 2 or (len(cents) and qarr.shape[1] != cents.shape[1]):
+        raise ValueError(
+            f"query width {qarr.shape} != centroid width {cents.shape[-1]}"
+        )
+    if not collect_centroids:
+        return np.array([qpos[r.query_id] for r in rows]), pids, cents
+    pos = _probe_fold(cents, qarr, nprobe)
+    qidx = np.repeat(np.arange(len(qarr)), pos.shape[1])
+    return qidx, pids[pos.ravel()], cents[pos.ravel()]
 
 
 def select_probes_df(
@@ -527,12 +575,13 @@ def _empty_result(model: IndexModel, rank: bool) -> DataFrame:
     return model.encoded.sparkSession.createDataFrame([], schema)
 
 
-def _probed_rows(model: IndexModel, probe_pid: np.ndarray, where) -> DataFrame:
-    """The encoded rows of the probed cells only: the literal
-    ``partition_id IN (...)`` lands in the Parquet PartitionFilters of an
-    index at rest, so only probed directories are read (S3); ``where``
-    then pre-filters candidates BEFORE scoring."""
-    probed = ", ".join(str(int(p)) for p in np.unique(probe_pid))
+def _probed_rows(model, probe_pid, where) -> DataFrame:
+    """The ``model.encoded`` rows (PQ, SQ or BQ) of the probed cells
+    only: the literal ``partition_id IN (...)`` lands in the Parquet
+    PartitionFilters of an index at rest, so only probed directories are
+    read (S3); ``where`` then pre-filters candidates BEFORE scoring.
+    No probes (nprobe=0) select no rows."""
+    probed = ", ".join(str(int(p)) for p in np.unique(probe_pid)) or "NULL"
     rows = model.encoded.where(f"partition_id IN ({probed})")
     return rows.where(where) if where is not None else rows
 

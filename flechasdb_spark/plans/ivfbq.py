@@ -37,7 +37,7 @@ TakeOrderedAndProject (top-k) or a codegen filter whose exchange
 volume is |result| (radius).
 
 r12 (VERDICT r11 #3/#4/#6) completes the serving grid: batch phase 1
-is ONE probe pass (`_batch_probe_rows` — the SQ side's
+is ONE probe pass (`_batch_probe_rows` — the shared
 dimension-major fold, or one distributed `select_probes_df` job with
 ``collect_centroids=False``; the former per-query `_probe_ids` loop
 scheduled Q driver jobs), every path grows the exact-refine mode
@@ -64,7 +64,12 @@ from flechasdb_spark.operators.bq import (
 )
 from flechasdb_spark.operators.knn import flat_knn
 from flechasdb_spark.operators.sq import _lit_arr
-from flechasdb_spark.plans.ivf import cent_col_name, ivf_assign
+from flechasdb_spark.plans.ivf import (
+    _centroid_probes,
+    _probed_rows,
+    cent_col_name,
+    ivf_assign,
+)
 
 __all__ = [
     "IVFBQModel",
@@ -164,14 +169,13 @@ def _batch_probe_rows(
     former shape called `_probe_ids` once per query — Q sequential
     driver jobs of Spark job-scheduling latency (~0.1 s each) before
     any scanning started, ~15 minutes of driver dead time at Q=1e4.
-    Now phase 1 is exactly the SQ side's (`plans.ivfsq.
-    ivfsq_query_batch`):
+    Now phase 1 is `plans.ivf._centroid_probes`, shared with IVF+SQ:
 
     - ``collect_centroids=True`` (default): ONE collect of the O(P)
-      centroid table + a dimension-major O(Q*P) driver fold. The
-      accumulation runs per-dimension (``d2 += diff^2``) — the exact
-      left-fold the engine's ``squared_l2`` aggregate performs, so
-      near-tie centroid distances order IDENTICALLY to the per-query
+      centroid table + the dimension-major O(Q*P) driver fold
+      `plans.ivf._probe_fold` — the exact left-fold the engine's
+      ``squared_l2`` aggregate performs, so near-tie centroid
+      distances order IDENTICALLY to the per-query
       `_probe_ids`/flat_knn path (stable argsort, ties by
       partition_id; equivalence is pytest-gated in
       tests/test_ivfbq.py).
@@ -180,36 +184,16 @@ def _batch_probe_rows(
       for indexes whose centroid table no longer fits on the driver —
       huge-P parity with the PQ/SQ families.
 
-    Either way the driver schedules O(1) probe jobs, never O(Q).
+    Either way the driver schedules O(1) probe jobs, never O(Q), and a
+    query whose width is not the centroids' raises ValueError.
     Returns [(query_id, partition_id)] pairs, nprobe per query."""
     import numpy as np
 
-    Q = np.array([[float(x) for x in v] for v in queries], dtype=np.float64)
-    if collect_centroids:
-        cc = cent_col_name(centroids)
-        # collect WITHOUT an orderBy — sorting P driver-side rows is
-        # free, while orderBy adds a range-sample job + shuffle before
-        # the collect (3 scheduler jobs instead of 1, job-count-gated)
-        crows = sorted(centroids.collect(), key=lambda r: r["partition_id"])
-        pids = np.array([r["partition_id"] for r in crows])
-        C = np.array([list(r[cc]) for r in crows], dtype=np.float64)
-        d2 = np.zeros((Q.shape[0], C.shape[0]))
-        for j in range(C.shape[1]):
-            diff = Q[:, j, None] - C[None, :, j]
-            d2 += diff * diff
-        return [
-            (int(qid), int(pids[j]))
-            for qi, qid in enumerate(qids)
-            for j in np.argsort(d2[qi], kind="stable")[: int(nprobe)]
-        ]
-    from flechasdb_spark.plans.ivf import select_probes_df
-
-    return [
-        (int(r["query_id"]), int(r["partition_id"]))
-        for r in select_probes_df(centroids, Q, int(nprobe), query_ids=qids)
-        .select("query_id", "partition_id")
-        .collect()
-    ]
+    qarr = np.array([[float(x) for x in v] for v in queries], np.float64)
+    qidx, pids, _ = _centroid_probes(
+        centroids, qarr, qids, int(nprobe), collect_centroids
+    )
+    return [(int(qids[i]), int(p)) for i, p in zip(qidx, pids)]
 
 
 def _hamming_dist_join_checked(n_words: int):
@@ -272,9 +256,7 @@ def ivfbq_query(
 
     Returns (id_col, partition_id, hamming_distance)."""
     probe_ids = _probe_ids(model, query_vector, nprobe)
-    cands = model.encoded.where(F.col("partition_id").isin(probe_ids))
-    if where is not None:
-        cands = cands.where(where)
+    cands = _probed_rows(model, probe_ids, where)
     qw = pack_bits_py(query_vector, model.thresholds)
     dist = _hamming_dist_checked(qw)
     adc_k = int(k) * int(rerank_factor) if rerank is not None else int(k)
@@ -344,9 +326,7 @@ def ivfbq_range_query(
     convention). With ``rerank`` the result is (id_col, partition_id,
     squared_distance)."""
     probe_ids = _probe_ids(model, query_vector, nprobe)
-    cands = model.encoded.where(F.col("partition_id").isin(probe_ids))
-    if where is not None:
-        cands = cands.where(where)
+    cands = _probed_rows(model, probe_ids, where)
     qw = pack_bits_py(query_vector, model.thresholds)
     dist = _hamming_dist_checked(qw)
     out = (
@@ -454,10 +434,7 @@ def ivfbq_query_batch(
             rows, "query_id long, partition_id int, __qw array<bigint>"
         )
     )
-    all_cells = sorted({c for _, c, _ in rows})
-    cands = model.encoded.where(F.col("partition_id").isin(all_cells))
-    if where is not None:
-        cands = cands.where(where)
+    cands = _probed_rows(model, [c for _, c in probe_rows], where)
     dist = _hamming_dist_join_checked((model.dim + 31) // 32)
     w = Window.partitionBy("query_id").orderBy(
         F.col("hamming_distance").asc(), F.col(id_col).asc()
@@ -582,10 +559,7 @@ def ivfbq_range_query_batch(
             rows, "query_id long, partition_id int, __qw array<bigint>"
         )
     )
-    all_cells = sorted({c for _, c, _ in rows})
-    cands = model.encoded.where(F.col("partition_id").isin(all_cells))
-    if where is not None:
-        cands = cands.where(where)
+    cands = _probed_rows(model, [c for _, c in probe_rows], where)
     dist = _hamming_dist_join_checked((model.dim + 31) // 32)
     matches = (
         cands.join(qdf, "partition_id")
@@ -900,9 +874,7 @@ def itq_ivfbq_query(
         dim=model.itq.bits, thresholds=None,
     )
     probe_ids = _probe_ids(base, query_vector, nprobe)
-    cands = model.encoded.where(F.col("partition_id").isin(probe_ids))
-    if where is not None:
-        cands = cands.where(where)
+    cands = _probed_rows(model, probe_ids, where)
     dist = _hamming_dist_checked([_itq_query_word(model.itq, query_vector)])
     return (
         cands.select(
@@ -930,9 +902,7 @@ def itq_ivfbq_range_query(
         dim=model.itq.bits, thresholds=None,
     )
     probe_ids = _probe_ids(base, query_vector, nprobe)
-    cands = model.encoded.where(F.col("partition_id").isin(probe_ids))
-    if where is not None:
-        cands = cands.where(where)
+    cands = _probed_rows(model, probe_ids, where)
     dist = _hamming_dist_checked([_itq_query_word(model.itq, query_vector)])
     out = (
         cands.select(
@@ -994,10 +964,7 @@ def itq_ivfbq_query_batch(
             rows, "query_id long, partition_id int, __qw array<bigint>"
         )
     )
-    all_cells = sorted({c for _, c, _ in rows})
-    cands = model.encoded.where(F.col("partition_id").isin(all_cells))
-    if where is not None:
-        cands = cands.where(where)
+    cands = _probed_rows(model, [c for _, c in probe_rows], where)
     # ITQ codes are a single packed BIGINT word (bits <= 63)
     dist = _hamming_dist_join_checked(1)
     w = Window.partitionBy("query_id").orderBy(
@@ -1086,9 +1053,7 @@ def ivfbq_asymmetric_query(
     from flechasdb_spark.operators.bq import asymmetric_score_checked
 
     probe_ids = _probe_ids(model, query_vector, nprobe)
-    cands = model.encoded.where(F.col("partition_id").isin(probe_ids))
-    if where is not None:
-        cands = cands.where(where)
+    cands = _probed_rows(model, probe_ids, where)
     score = asymmetric_score_checked(query_vector, model.thresholds)
     return (
         cands.select(
@@ -1132,9 +1097,7 @@ def ivfbq_asymmetric_range_query(
 
     spark = model.encoded.sparkSession
     probe_ids = _probe_ids(model, query_vector, nprobe)
-    cands = model.encoded.where(F.col("partition_id").isin(probe_ids))
-    if where is not None:
-        cands = cands.where(where)
+    cands = _probed_rows(model, probe_ids, where)
     qdf = F.broadcast(
         spark.createDataFrame(
             [
@@ -1222,10 +1185,7 @@ def ivfbq_asymmetric_query_batch(
             "__qwt array<bigint>",
         )
     )
-    all_cells = sorted({r[1] for r in rows})
-    cands = model.encoded.where(F.col("partition_id").isin(all_cells))
-    if where is not None:
-        cands = cands.where(where)
+    cands = _probed_rows(model, [c for _, c in probe_rows], where)
     score = asymmetric_score_join_checked(model.dim)
     w = Window.partitionBy("query_id").orderBy(
         F.col("asym_micro").asc(), F.col(id_col).asc()

@@ -10397,8 +10397,8 @@ FROM ranked WHERE rank <= 5 ORDER BY query_id, rank
 def q_ivfsq_batch_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched + FILTERED IVF+SQ8 serving (`ivfsq_query_batch`) — the
     SQ side's parity with `ann_query`'s batch/filtered modes: three
-    frozen queries in ONE job (driver probe selection, broadcast probe
-    + query tables, WindowGroupLimit per-query top-k) with an
+    frozen queries in ONE scan (driver probe selection, one probe
+    LocalRelation, WindowGroupLimit per-query top-k) with an
     attribute pre-filter (even ids only) applied before scoring, so
     every query still returns k qualifying rows. The oracle recomputes
     the whole lifecycle per query under frozen centroids."""

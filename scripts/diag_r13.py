@@ -4,13 +4,16 @@ is the REGISTRY call itself (driver-side: py4j literal construction +
 _small_centroid_rows collect jobs); execute is .collect() on the built
 frame. Run on a warm session: one untimed warm-up rep, then N timed.
 
-Usage: python scripts/diag_r13.py [row ...]   (default: the flagged set)
+Usage, from the repo root (no PYTHONPATH needed):
+    python scripts/diag_r13.py [row ...]   (default: the flagged set)
 Prints one JSON line per row with a canary stamp.
 """
 import json
 import os
 import sys
 import time
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 ROWS = [
     "ivfsq_merge_query",
@@ -37,6 +40,7 @@ def canary(n=2048, reps=3):
 
 
 def main():
+    sys.path.insert(0, REPO)
     from flechasdb_spark.queries import REGISTRY
     from flechasdb_spark.session import get_spark
 

@@ -583,10 +583,11 @@ def test_merge_after_save_load(spark, emb, cent, tmp_path):
     assert got == want
 
 
-def test_batch_empty_queries(spark, model):
+def test_batch_empty_queries(spark, emb, model):
     """ADVICE r8 #3: an empty batch is a legal call — empty result
-    with the contract schema, no numpy shape error."""
-    from flechasdb_spark.plans.ivfsq import ivfsq_query_batch
+    with the contract schema, no numpy shape error. Probing no cells
+    (nprobe=0) likewise scans nothing and returns no rows."""
+    from flechasdb_spark.plans.ivfsq import ivfsq_query, ivfsq_query_batch
 
     out = ivfsq_query_batch(model, [], k=5, nprobe=2)
     assert out.count() == 0
@@ -597,6 +598,9 @@ def test_batch_empty_queries(spark, model):
         "squared_distance",
         "rank",
     ]
+    qv = [float(x) for x in emb.where(F.col("vec_id") == 3).first()["embedding"]]
+    assert ivfsq_query_batch(model, [(3, qv)], k=5, nprobe=0).count() == 0
+    assert ivfsq_query(model, qv, k=5, nprobe=0).count() == 0
 
 
 def test_batch_distributed_probe_parity(spark, emb, model, model_cell, tmp_path):
@@ -724,7 +728,9 @@ def test_range_query_semantics(spark, emb, model):
 def test_range_query_batch_parity(spark, emb, model, model_cell):
     """Batch radius search == per-query solo radius search (both
     bounds modes, driver and distributed probe selection); empty batch
-    returns the contract schema; limit_per_query keeps the nearest."""
+    returns the contract schema; limit_per_query keeps the nearest.
+    The coarse round_to=1 makes rounded distances tie, so the solo
+    limit must order like the batch rank: rounded distance, then id."""
     from flechasdb_spark.plans.ivfsq import (
         ivfsq_range_query,
         ivfsq_range_query_batch,
@@ -734,41 +740,42 @@ def test_range_query_batch_parity(spark, emb, model, model_cell):
         (int(r["vec_id"]), [float(x) for x in r["embedding"]])
         for r in emb.where(F.col("vec_id").isin(3, 42)).collect()
     ]
-    for m in (model, model_cell):
-        for dist_probe in (False, True):
-            batch = ivfsq_range_query_batch(
-                m, qs, radius=1.6, nprobe=4, round_to=6,
-                collect_centroids=not dist_probe,
-            ).collect()
-            got = sorted(
-                (r.query_id, r.vec_id, r.squared_distance) for r in batch
-            )
-            want = sorted(
-                (qid, r.vec_id, r.squared_distance)
-                for qid, qv in qs
-                for r in ivfsq_range_query(
-                    m, qv, radius=1.6, nprobe=4, round_to=6
+    for rt in (6, 1):
+        for m in (model, model_cell):
+            for dist_probe in (False, True):
+                batch = ivfsq_range_query_batch(
+                    m, qs, radius=1.6, nprobe=4, round_to=rt,
+                    collect_centroids=not dist_probe,
                 ).collect()
-            )
-            assert got == want and len(got) > 0
+                got = sorted(
+                    (r.query_id, r.vec_id, r.squared_distance) for r in batch
+                )
+                want = sorted(
+                    (qid, r.vec_id, r.squared_distance)
+                    for qid, qv in qs
+                    for r in ivfsq_range_query(
+                        m, qv, radius=1.6, nprobe=4, round_to=rt
+                    ).collect()
+                )
+                assert got == want and len(got) > 0
 
-    capped = ivfsq_range_query_batch(
-        model, qs, radius=1.6, nprobe=4, round_to=6, limit_per_query=2
-    ).collect()
-    by_q = {}
-    for r in capped:
-        by_q.setdefault(r.query_id, []).append((r.rank, r.vec_id))
-    solo = {
-        qid: [
-            r.vec_id
-            for r in ivfsq_range_query(
-                model, qv, radius=1.6, nprobe=4, round_to=6, limit=2
-            ).collect()
-        ]
-        for qid, qv in qs
-    }
-    for qid, pairs in by_q.items():
-        assert [v for _, v in sorted(pairs)] == solo[qid]
+        capped = ivfsq_range_query_batch(
+            model, qs, radius=1.6, nprobe=4, round_to=rt, limit_per_query=2
+        ).collect()
+        by_q = {}
+        for r in capped:
+            by_q.setdefault(r.query_id, []).append((r.rank, r.vec_id))
+        solo = {
+            qid: [
+                r.vec_id
+                for r in ivfsq_range_query(
+                    model, qv, radius=1.6, nprobe=4, round_to=rt, limit=2
+                ).collect()
+            ]
+            for qid, qv in qs
+        }
+        for qid, pairs in by_q.items():
+            assert [v for _, v in sorted(pairs)] == solo[qid], (rt, qid)
 
     empty = ivfsq_range_query_batch(model, [], radius=1.0, nprobe=2)
     assert empty.count() == 0 and "squared_distance" in empty.columns
@@ -1347,3 +1354,70 @@ def test_calibrate_radii_one_pass_equals_per_selectivity(spark, emb):
         calibrate_radii(emb, qs, [])
     with pytest.raises(ValueError, match="selectivity"):
         calibrate_radii(emb, qs, [0.2, 0.0])
+
+
+@pytest.mark.parametrize("width", [61, 66])
+def test_query_width_mismatch_raises(spark, emb, model, model_cell, width):
+    """A query narrower or wider than the index (dim 64) raises
+    ValueError at plan construction — never rows with a null distance
+    or a bare IndexError from the probe fold — on all four entry
+    points, under both bounds modes and both probe-selection modes."""
+    from flechasdb_spark.plans.ivfsq import (
+        ivfsq_query,
+        ivfsq_query_batch,
+        ivfsq_range_query,
+        ivfsq_range_query_batch,
+    )
+
+    row = emb.where(F.col("vec_id") == 3).first()
+    qv = ([float(x) for x in row["embedding"]] * 2)[:width]
+    qs = [(3, qv), (4, qv)]
+    for m in (model, model_cell):
+        calls = [
+            lambda: ivfsq_query(m, qv, k=5, nprobe=3),
+            lambda: ivfsq_range_query(m, qv, radius=1.6, nprobe=3),
+        ]
+        for cc in (True, False):
+            calls += [
+                lambda cc=cc: ivfsq_query_batch(
+                    m, qs, k=5, nprobe=3, collect_centroids=cc
+                ),
+                lambda cc=cc: ivfsq_range_query_batch(
+                    m, qs, radius=1.6, nprobe=3, collect_centroids=cc
+                ),
+            ]
+        for call in calls:
+            with pytest.raises(ValueError, match="width"):
+                call()
+
+
+def test_batch_query_job_count(spark, emb, model, model_cell, tmp_path):
+    """Q=3 batch serving on a saved index schedules one centroid
+    collect, one broadcast of the probe LocalRelation, and the scan +
+    top-k stages: 4 jobs under global bounds, 5 under per-cell bounds
+    (one more broadcast, of the bounds table). Counted by job group
+    over plan construction and the collect."""
+    from flechasdb_spark.plans.ivfsq import (
+        ivfsq_query_batch,
+        load_ivfsq,
+        save_ivfsq,
+    )
+
+    sc = spark.sparkContext
+    qs = [
+        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
+        for r in emb.where(F.col("vec_id").isin(3, 11, 42)).collect()
+    ]
+    for name, m, want in (("global", model, 4), ("per_cell", model_cell, 5)):
+        save_ivfsq(m, str(tmp_path / name))
+        loaded = load_ivfsq(spark, str(tmp_path / name))
+        ivfsq_query_batch(loaded, qs, k=5, nprobe=3).collect()  # warm
+        group = f"ivfsq-batch-jobs-{name}"
+        sc.setJobGroup(group, "ivfsq batch job gate")
+        try:
+            rows = ivfsq_query_batch(loaded, qs, k=5, nprobe=3).collect()
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setJobGroup(f"{group}-done", "")
+        assert len(rows) == 15
+        assert len(jobs) == want, (name, jobs)
