@@ -232,10 +232,10 @@ def asymmetric_score_checked(
 ) -> Column:
     """The guarded asymmetric score column over a packed ``words``
     row: sum over disagreeing dims of the query's micro-unit margin
-    (`asymmetric_weights_micro`). Shared by the flat scan
-    (`hamming_asymmetric_knn`) and the probe-pruned composition
-    (`plans.ivfbq.ivfbq_asymmetric_query`); same width guard as
-    `_hamming_dist_checked`."""
+    (`asymmetric_weights_micro`), for the flat scan
+    (`hamming_asymmetric_knn`); the probe-pruned IVF forms score with
+    the join form, `asymmetric_score_join_checked`. Same width guard
+    as `_hamming_dist_checked`."""
     from flechasdb_spark.functions.linalg import lit_longs
 
     qv = [float(x) for x in query_vector]
@@ -285,8 +285,9 @@ def asymmetric_score_join_checked(dim: int) -> Column:
     encoded ``words`` against a JOINED query's packed bits ``__qw``
     (array<bigint>) and per-dim micro-unit margins ``__qwt``
     (array<bigint>, length dim, from `asymmetric_weights_micro`) —
-    for Q-query batch serving, where the solo path's per-dim literal
-    unroll would grow the plan O(Q * dim). Here the plan is O(1)
+    the scorer of every probe-pruned IVF form (`plans.ivfbq`'s scan
+    core), where a per-query literal would grow the plan O(Q * dim)
+    for a batch. Here the plan is O(1)
     nodes for ANY Q: one codegen ``aggregate`` over
     ``sequence(0, dim-1)`` extracting both bits by integer shift/mask
     (d >> 5 words-index, d & 31 bit-index — WORD_BITS = 32) and

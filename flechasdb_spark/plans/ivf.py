@@ -402,7 +402,8 @@ def _centroid_probes(
             f"query width {qarr.shape} != centroid width {cents.shape[-1]}"
         )
     if not collect_centroids:
-        return np.array([qpos[r.query_id] for r in rows]), pids, cents
+        qidx = np.array([qpos[r.query_id] for r in rows], dtype=np.int64)
+        return qidx, pids, cents
     pos = _probe_fold(cents, qarr, nprobe)
     qidx = np.repeat(np.arange(len(qarr)), pos.shape[1])
     return qidx, pids[pos.ravel()], cents[pos.ravel()]
@@ -661,6 +662,71 @@ def _top_per_query(df: DataFrame, order_by: str, cut: int) -> DataFrame:
         f"row_number() OVER (PARTITION BY query_id ORDER BY {order_by}) "
         "AS rank",
     ).where(f"rank <= {int(cut)}")
+
+
+def _nearest(
+    df: DataFrame, n, round_to: int | None, id_col: str, solo: bool
+) -> DataFrame:
+    """The ``n`` nearest rows of each query by (rounded ``__score``,
+    id). A solo query is an ordered limit (TakeOrderedAndProject); with
+    ``n`` None it is all rows, gathered to one partition and sorted
+    there, which skips a global sort's range-sampling pass over the
+    scan. A batch is `_top_per_query`, which adds ``rank``. Ranking on
+    the rounded score when the caller asks for rounded output keeps a
+    sub-rounding float divergence from flipping the selected ids
+    against the oracle."""
+    if not solo:
+        return _top_per_query(
+            df, f"{_score_sql(round_to)} ASC, `{id_col}` ASC", n
+        )
+    order = (F.expr(_score_sql(round_to)), F.col(id_col))
+    if n is None:
+        return df.repartition(1).sortWithinPartitions(*order)
+    return df.orderBy(*order).limit(int(n))
+
+
+def _exact(
+    rerank: DataFrame,
+    survivors: DataFrame,
+    id_col: str,
+    qids: list[int],
+    qarr: np.ndarray,
+) -> DataFrame:
+    """The shared exact re-score of the SQ and BQ families:
+    ``survivors`` (query_id, id_col, partition_id) broadcast into one
+    join against the ORIGINAL vectors (id_col + 'embedding'), each
+    scored against its query as ``__score``. A survivor absent from
+    ``rerank`` is dropped (the FAISS refine-storage contract)."""
+    qv = _driver_frame(
+        rerank.sparkSession,
+        {"query_id": np.asarray(qids, dtype=np.int64), "__qv": qarr},
+    )
+    return (
+        rerank.select(id_col, "embedding")
+        .join(
+            F.broadcast(survivors.select("query_id", id_col, "partition_id")),
+            id_col,
+        )
+        .join(F.broadcast(qv), "query_id")
+        .select(
+            "query_id",
+            F.col(id_col),
+            "partition_id",
+            squared_l2(F.col("embedding"), F.col("__qv")).alias("__score"),
+        )
+    )
+
+
+def _empty(model, id_col: str, score: str, rank: bool) -> DataFrame:
+    """An empty batch's result of the SQ and BQ families: (query_id,
+    id_col, then ``score``, a schema string) and ``rank`` iff the
+    non-empty path carries it."""
+    id_type = model.encoded.schema[id_col].dataType.simpleString()
+    return model.encoded.sparkSession.createDataFrame(
+        [],
+        f"query_id long, {id_col} {id_type}, {score}"
+        + (", rank int" if rank else ""),
+    )
 
 
 def ann_query(

@@ -29,23 +29,23 @@ index family there is; registry rows ``ivfbq_knn`` /
 
 Scale (100 TB): build is ivf_assign's one broadcast-join argmin plus a
 map-only packed encode (no bounds pass — BQ has no trained state
-beyond optional thresholds); the query collects O(nprobe) probe ids
-from the O(P) centroid table, prunes the at-rest layout with a LITERAL
-``isin`` (a static Parquet PartitionFilter, plan-gated), and the
-candidate scan is codegen xor+popcount ending in one
-TakeOrderedAndProject (top-k) or a codegen filter whose exchange
-volume is |result| (radius).
-
-r12 (VERDICT r11 #3/#4/#6) completes the serving grid: batch phase 1
-is ONE probe pass (`_batch_probe_rows` — the shared
-dimension-major fold, or one distributed `select_probes_df` job with
-``collect_centroids=False``; the former per-query `_probe_ids` loop
-scheduled Q driver jobs), every path grows the exact-refine mode
-(`rerank`/`rerank_factor` on top-k, a separate ``exact_radius`` on
-the radius paths — the FAISS IndexBinaryIVF+IndexRefine shape;
-binary codes are the coarsest quantizer here, so they gain the most),
-batch radius lands (`ivfbq_range_query_batch`), and the ITQ
-composition serves batches (`itq_ivfbq_query_batch`).
+beyond optional thresholds). Serving is one scan core, `_scored`
+(FAISS's IndexIVF / InvertedListScanner split, as on the SQ side):
+probe selection (the shared driver fold over the collected O(P)
+centroid table, or one distributed job), a probe table of one (query,
+cell, query words) row per probe shipped as an Arrow LocalRelation,
+the scan of only the probed cells (a LITERAL ``partition_id IN`` that
+lands in the Parquet PartitionFilters, plan-gated), and one codegen
+join-form scorer — popcount(xor) for the sign-bit and ITQ codes, the
+query's micro-unit margins for asymmetric scoring. The families differ
+only in how a query becomes words. Every public form is a tail of that
+core: top-k (an ordered limit for one query, WindowGroupLimit per
+query for a batch), a radius filter whose exchange volume is
+|result|, and the exact re-rank (`rerank`/`rerank_factor` on top-k, a
+separate ``exact_radius`` on the radius paths — the FAISS
+IndexBinaryIVF+IndexRefine shape; binary codes are the coarsest
+quantizer here, so they gain the most). A query whose width is not the
+index's raises ValueError before any scan is planned.
 """
 
 from __future__ import annotations
@@ -53,21 +53,24 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flechasdb_spark.functions.linalg import squared_l2
 from flechasdb_spark.operators.bq import (
-    _hamming_dist_checked,
     _packed_words,
+    asymmetric_score_join_checked,
+    asymmetric_weights_micro,
     pack_bits_py,
 )
-from flechasdb_spark.operators.knn import flat_knn
-from flechasdb_spark.operators.sq import _lit_arr
 from flechasdb_spark.plans.ivf import (
     _centroid_probes,
+    _driver_frame,
+    _empty,
+    _exact,
+    _nearest,
     _probed_rows,
-    cent_col_name,
+    _score_sql,
     ivf_assign,
 )
 
@@ -139,63 +142,6 @@ def build_ivfbq(
     )
 
 
-def _probe_ids(model: IVFBQModel, query_vector, nprobe: int) -> list[int]:
-    """O(nprobe) cell ids from one tiny job over the O(P) centroid
-    table, so the cell filter is a LITERAL isin — a static Parquet
-    PartitionFilter on the at-rest layout (the ivfsq_query rationale:
-    a semi-join against a lazy probe DataFrame never becomes a
-    partition filter on this shape)."""
-    cc = cent_col_name(model.centroids)
-    return [
-        int(r["partition_id"])
-        for r in flat_knn(
-            model.centroids,
-            [float(x) for x in query_vector],
-            k=int(nprobe),
-            id_col="partition_id",
-            vec_col=cc,
-        ).collect()
-    ]
-
-
-def _batch_probe_rows(
-    centroids: DataFrame,
-    queries: list,
-    nprobe: int,
-    qids: list[int],
-    collect_centroids: bool = True,
-) -> list[tuple[int, int]]:
-    """Phase 1 for batch serving in ONE pass (VERDICT r11 #3): the
-    former shape called `_probe_ids` once per query — Q sequential
-    driver jobs of Spark job-scheduling latency (~0.1 s each) before
-    any scanning started, ~15 minutes of driver dead time at Q=1e4.
-    Now phase 1 is `plans.ivf._centroid_probes`, shared with IVF+SQ:
-
-    - ``collect_centroids=True`` (default): ONE collect of the O(P)
-      centroid table + the dimension-major O(Q*P) driver fold
-      `plans.ivf._probe_fold` — the exact left-fold the engine's
-      ``squared_l2`` aggregate performs, so near-tie centroid
-      distances order IDENTICALLY to the per-query
-      `_probe_ids`/flat_knn path (stable argsort, ties by
-      partition_id; equivalence is pytest-gated in
-      tests/test_ivfbq.py).
-    - ``False``: ONE distributed `plans.ivf.select_probes_df` job
-      (broadcast queries x centroid scan, WindowGroupLimit top-nprobe)
-      for indexes whose centroid table no longer fits on the driver —
-      huge-P parity with the PQ/SQ families.
-
-    Either way the driver schedules O(1) probe jobs, never O(Q), and a
-    query whose width is not the centroids' raises ValueError.
-    Returns [(query_id, partition_id)] pairs, nprobe per query."""
-    import numpy as np
-
-    qarr = np.array([[float(x) for x in v] for v in queries], np.float64)
-    qidx, pids, _ = _centroid_probes(
-        centroids, qarr, qids, int(nprobe), collect_centroids
-    )
-    return [(int(qids[i]), int(p)) for i, p in zip(qidx, pids)]
-
-
 def _hamming_dist_join_checked(n_words: int):
     """popcount(xor) of the encoded ``words`` against the joined
     query's ``__qw`` column, with the width-mismatch guard (ADVICE
@@ -222,6 +168,118 @@ def _hamming_dist_join_checked(n_words: int):
     )
 
 
+def _scored(
+    model, queries, nprobe, id_col, where, collect_centroids, asymmetric
+) -> tuple[DataFrame, list[int], np.ndarray]:
+    """The scan core of every IVF+BQ serving path: (scored, qids, qarr)
+    where ``scored`` is ``(query_id, id_col, partition_id, __score)``,
+    the binary distance of each candidate in each query's probed cells.
+
+    Probe selection is `plans.ivf._centroid_probes` (the driver fold
+    over the collected centroids, or the distributed job with
+    ``collect_centroids=False``); a query whose width is not the
+    centroids' raises ValueError there. The families differ only in how
+    a query becomes words: its sign bits under the model's thresholds,
+    its one ITQ word (`_itq_query_word`), or, ``asymmetric``, the sign
+    bits plus per-dim micro-unit margins (``__qwt``). The probe table,
+    one (query_id, partition_id, ``__qw``[, ``__qwt``]) row per probe,
+    is an Arrow LocalRelation coalesced to one partition and broadcast
+    into the literal-``IN`` pruned scan, so a candidate is scored only
+    against the queries that probed its cell, by one join-form scorer
+    whose plan size does not grow with Q or dim."""
+    qids = [int(q) for q, _ in queries]
+    qarr = np.array([[float(x) for x in v] for _, v in queries])
+    qidx, pid, _ = _centroid_probes(
+        model.centroids, qarr, qids, int(nprobe), collect_centroids
+    )
+    if isinstance(model, ITQIVFBQModel):
+        words = [[_itq_query_word(model.itq, v)] for v in qarr]
+        score = _hamming_dist_join_checked(1)
+    else:
+        words = [pack_bits_py(v, model.thresholds) for v in qarr]
+        score = _hamming_dist_join_checked((model.dim + 31) // 32)
+    probes = {
+        "query_id": np.asarray(qids, dtype=np.int64)[qidx],
+        "partition_id": pid.astype(np.int32),
+        "__qw": np.array(words, dtype=np.int64)[qidx],
+    }
+    if asymmetric:
+        margins = [asymmetric_weights_micro(v, model.thresholds) for v in qarr]
+        probes["__qwt"] = np.array(margins, dtype=np.int64)[qidx]
+        score = asymmetric_score_join_checked(model.dim)
+    table = _driver_frame(model.encoded.sparkSession, probes)
+    scored = (
+        _probed_rows(model, pid, where)
+        .join(F.broadcast(table.coalesce(1)), "partition_id")
+        .select(
+            "query_id", F.col(id_col), "partition_id", score.alias("__score")
+        )
+    )
+    return scored, qids, qarr
+
+
+def _search(
+    model, queries, query_ids, nprobe, id_col, where, solo, k=None,
+    radius=None, limit=None, collect_centroids=True, rerank=None,
+    rerank_factor=4, exact_radius=None, round_to=None, asymmetric=False,
+) -> DataFrame:
+    """Every public IVF+BQ serving form as a tail of `_scored`.
+
+    Top-k (``k``) is `plans.ivf._nearest`: an ordered limit for a solo
+    query, a per-query WindowGroupLimit for a batch. Radius
+    (``radius``) is a filter on the integer score, ordered for a solo
+    query and cut by ``limit`` (``limit_per_query`` for a batch). With
+    ``rerank`` the survivors, top ``k * rerank_factor`` or every radius
+    match, are re-scored exactly (`plans.ivf._exact`) and the top-k or
+    the ``exact_radius`` cut applies to the (``round_to``-rounded)
+    squared L2 distance. The result is (id_col, partition_id, score)
+    for a solo query, (query_id, id_col, score[, rank]) for a batch,
+    the score named ``hamming_distance``, ``asym_micro`` or, reranked,
+    ``squared_distance``; an empty batch returns that schema."""
+    if radius is not None and rerank is not None and exact_radius is None:
+        raise ValueError(
+            "rerank=... needs exact_radius — the Hamming radius gates "
+            "candidates (bits), the exact radius filters refined "
+            "distances (squared L2)"
+        )
+    # round_to applies to the exact re-rank only: integer scores carry
+    # no rounding contract
+    if rerank is not None:
+        name, sql_type = "squared_distance", "double"
+    elif asymmetric:
+        name, sql_type, round_to = "asym_micro", "long", None
+    else:
+        name, sql_type, round_to = "hamming_distance", "int", None
+    rank = not solo and (k is not None or limit is not None)
+    ids = query_ids if query_ids is not None else range(len(queries))
+    queries = list(zip(ids, queries))
+    if not queries:
+        return _empty(model, id_col, f"{name} {sql_type}", rank)
+    scored, qids, qarr = _scored(
+        model, queries, nprobe, id_col, where, collect_centroids, asymmetric
+    )
+    if k is not None:
+        cut = int(k) * int(rerank_factor) if rerank is not None else k
+        out = _nearest(scored, cut, None, id_col, solo)
+        if rerank is not None:
+            exact = _exact(rerank, out, id_col, qids, qarr)
+            out = _nearest(exact, k, round_to, id_col, solo)
+    else:
+        out = scored.where(F.col("__score") <= int(radius))
+        if rerank is not None:
+            out = _exact(rerank, out, id_col, qids, qarr).where(
+                F.expr(_score_sql(round_to)) <= float(exact_radius)
+            )
+        if solo or limit is not None:
+            out = _nearest(out, limit, round_to, id_col, solo)
+    keys = [id_col, "partition_id"] if solo else ["query_id", id_col]
+    return out.selectExpr(
+        *(f"`{c}`" for c in keys),
+        f"{_score_sql(round_to)} AS {name}",
+        *(["rank"] if rank else []),
+    )
+
+
 def ivfbq_query(
     model: IVFBQModel,
     query_vector: list,
@@ -233,13 +291,16 @@ def ivfbq_query(
     rerank_factor: int = 4,
     round_to: int | None = None,
 ) -> DataFrame:
-    """Probe-pruned Hamming top-k: the float query picks its nprobe
-    nearest cells (exact squared L2 over centroids, the shared Q1),
-    is packed with the model's thresholds (the same rule as the
+    """Probe-pruned Hamming top-k, the Q=1 form of `ivfbq_query_batch`:
+    probe selection collects the O(P) centroid table (as `ann_query`'s
+    IndexModel holds it) and picks the query's nprobe nearest cells on
+    the driver (exact squared L2 over centroids, the shared Q1); the
+    query is packed with the model's thresholds (the same rule as the
     encode), and the candidate scan is codegen popcount(xor) ending in
-    TakeOrderedAndProject. Integer distances — no rounding contract;
-    ties break by id ascending. ``where`` pre-filters the encoded rows
-    (attributes included) BEFORE scoring.
+    an ordered limit (TakeOrderedAndProject). Integer distances — no
+    rounding contract; ties break by id ascending. ``where``
+    pre-filters the encoded rows (attributes included) BEFORE scoring.
+    A query whose width is not the index's raises ValueError.
 
     ``rerank``/``rerank_factor`` (VERDICT r11 #4 — the FAISS
     IndexBinaryIVF-wrapped-in-IndexRefine shape, matching the PQ/SQ
@@ -255,39 +316,9 @@ def ivfbq_query(
     the result is (id_col, partition_id, squared_distance).
 
     Returns (id_col, partition_id, hamming_distance)."""
-    probe_ids = _probe_ids(model, query_vector, nprobe)
-    cands = _probed_rows(model, probe_ids, where)
-    qw = pack_bits_py(query_vector, model.thresholds)
-    dist = _hamming_dist_checked(qw)
-    adc_k = int(k) * int(rerank_factor) if rerank is not None else int(k)
-    out = (
-        cands.select(
-            F.col(id_col), F.col("partition_id"), dist.alias("hamming_distance")
-        )
-        .orderBy(F.col("hamming_distance").asc(), F.col(id_col).asc())
-        .limit(adc_k)
-    )
-    if rerank is None:
-        return out
-    # exact refine: the O(k * factor) survivor set broadcasts; the
-    # originals scan once map-side (the SQ side's rerank shape)
-    qA = _lit_arr([float(x) for x in query_vector])
-    cand_ids = out.select(id_col, "partition_id")
-    exact = squared_l2(qA, F.col("embedding").cast("array<double>"))
-    ranked = (
-        rerank.select(id_col, "embedding")
-        .join(F.broadcast(cand_ids), id_col)
-        .select(F.col(id_col), F.col("partition_id"), exact.alias("__d"))
-    )
-    rank2 = (
-        F.round(F.col("__d"), round_to)
-        if round_to is not None
-        else F.col("__d")
-    )
-    return (
-        ranked.orderBy(rank2.asc(), F.col(id_col).asc())
-        .limit(int(k))
-        .select(id_col, "partition_id", rank2.alias("squared_distance"))
+    return _search(
+        model, [query_vector], [0], nprobe, id_col, where, solo=True, k=k,
+        rerank=rerank, rerank_factor=rerank_factor, round_to=round_to,
     )
 
 
@@ -305,13 +336,15 @@ def ivfbq_range_query(
 ) -> DataFrame:
     """Probe-pruned Hamming RADIUS search: every code in the probed
     cells within ``radius`` flipped bits of the packed query — the
-    SimHash near-dup sweep primitive at index cost. The radius cut
-    executes IN the scan (codegen filter), so exchange volume is
-    |result|, never the probed-cell volume; ``limit`` (ordered) caps a
-    pathological radius. NOTE the IVF contract: recall is bounded by
-    the probed cells, exactly as on the SQ/PQ radius paths — matches
-    in unprobed cells are not seen (full-probe nprobe=P restores exact
-    range semantics, integer-exact).
+    SimHash near-dup sweep primitive at index cost. The Q=1 form of
+    `ivfbq_range_query_batch`: probe selection collects the O(P)
+    centroid table, as `ivfbq_query`. The radius cut executes IN the
+    scan (codegen filter), so exchange volume is |result|, never the
+    probed-cell volume; ``limit`` (ordered) caps a pathological radius.
+    NOTE the IVF contract: recall is bounded by the probed cells,
+    exactly as on the SQ/PQ radius paths — matches in unprobed cells
+    are not seen (full-probe nprobe=P restores exact range semantics,
+    integer-exact).
 
     ``rerank``/``exact_radius`` (VERDICT r11 #4): exact refinement of
     the radius contract on the binary family. Hamming bits and
@@ -325,45 +358,11 @@ def ivfbq_range_query(
     ROUNDED distance when ``round_to`` is set (the frozen-row
     convention). With ``rerank`` the result is (id_col, partition_id,
     squared_distance)."""
-    probe_ids = _probe_ids(model, query_vector, nprobe)
-    cands = _probed_rows(model, probe_ids, where)
-    qw = pack_bits_py(query_vector, model.thresholds)
-    dist = _hamming_dist_checked(qw)
-    out = (
-        cands.select(
-            F.col(id_col), F.col("partition_id"), dist.alias("hamming_distance")
-        )
-        .where(F.col("hamming_distance") <= int(radius))
-        .orderBy(F.col("hamming_distance").asc(), F.col(id_col).asc())
+    return _search(
+        model, [query_vector], [0], nprobe, id_col, where, solo=True,
+        radius=radius, limit=limit, rerank=rerank,
+        exact_radius=exact_radius, round_to=round_to,
     )
-    if rerank is not None:
-        if exact_radius is None:
-            raise ValueError(
-                "ivfbq_range_query(rerank=...) needs exact_radius — the "
-                "Hamming radius gates candidates (bits), the exact "
-                "radius filters refined distances (squared L2)"
-            )
-        qA = _lit_arr([float(x) for x in query_vector])
-        cand_ids = out.select(id_col, "partition_id")
-        exact = squared_l2(qA, F.col("embedding").cast("array<double>"))
-        refined = (
-            rerank.select(id_col, "embedding")
-            .join(F.broadcast(cand_ids), id_col)
-            .select(F.col(id_col), F.col("partition_id"), exact.alias("__d"))
-        )
-        scr = (
-            F.round(F.col("__d"), round_to)
-            if round_to is not None
-            else F.col("__d")
-        )
-        out = (
-            refined.where(scr <= float(exact_radius))
-            .orderBy(scr.asc(), F.col(id_col).asc())
-            .select(id_col, "partition_id", scr.alias("squared_distance"))
-        )
-    if limit is not None:
-        out = out.limit(int(limit))
-    return out
 
 
 def ivfbq_query_batch(
@@ -380,17 +379,16 @@ def ivfbq_query_batch(
     round_to: int | None = None,
 ) -> DataFrame:
     """Batched serving: Q queries share ONE pruned scan AND one probe
-    pass. Phase 1 is `_batch_probe_rows` (VERDICT r11 #3 — the former
-    per-query `_probe_ids` loop ran Q sequential driver jobs before
-    any scanning started; now it is ONE dimension-major fold over the
-    collected centroids, or ONE distributed `select_probes_df` job
+    pass (`_scored`). Probe selection is ONE dimension-major fold over
+    the collected centroids, or ONE distributed `select_probes_df` job
     with ``collect_centroids=False`` for huge-P parity with the PQ/SQ
-    families). The union of probed cells becomes the literal partition
-    filter; each query's packed words broadcast as a tiny (query_id,
-    qwords, probed cells) table, the scan joins it on partition_id (so
-    a candidate is scored ONLY against queries that probed its cell),
-    and per-query top-k is one WindowGroupLimit — each task forwards
-    <= k rows per query to the exchange.
+    families — never a per-query job. The union of probed cells becomes
+    the literal partition filter; each query's packed words ride in the
+    probe LocalRelation (one row per probe), the scan joins it on
+    partition_id (so a candidate is scored ONLY against queries that
+    probed its cell), and per-query top-k is one WindowGroupLimit —
+    each task forwards <= k rows per query to the exchange. An empty
+    batch returns no rows with the contract schema.
 
     ``rerank``/``rerank_factor`` (VERDICT r11 #4): per-query Hamming
     top ``k * rerank_factor`` survivors broadcast into ONE exact
@@ -400,93 +398,10 @@ def ivfbq_query_batch(
     is (query_id, id_col, squared_distance, rank).
 
     Returns (query_id, id_col, hamming_distance, rank)."""
-    from pyspark.sql import Window
-
-    qids = (
-        list(query_ids) if query_ids is not None else list(range(len(queries)))
-    )
-    spark = model.encoded.sparkSession
-    if not qids:
-        # an empty batch is a legal call (the SQ side's contract) —
-        # return an empty frame with the contract schema
-        id_type = model.encoded.schema[id_col].dataType.simpleString()
-        if rerank is not None:
-            return spark.createDataFrame(
-                [],
-                f"query_id long, {id_col} {id_type}, "
-                "squared_distance double, rank int",
-            )
-        return spark.createDataFrame(
-            [],
-            f"query_id long, {id_col} {id_type}, "
-            "hamming_distance int, rank int",
-        )
-    probe_rows = _batch_probe_rows(
-        model.centroids, queries, nprobe, qids, collect_centroids
-    )
-    qwords = {
-        int(qid): [int(x) for x in pack_bits_py(qv, model.thresholds)]
-        for qid, qv in zip(qids, queries)
-    }
-    rows = [(qid, c, qwords[qid]) for qid, c in probe_rows]
-    qdf = F.broadcast(
-        spark.createDataFrame(
-            rows, "query_id long, partition_id int, __qw array<bigint>"
-        )
-    )
-    cands = _probed_rows(model, [c for _, c in probe_rows], where)
-    dist = _hamming_dist_join_checked((model.dim + 31) // 32)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("hamming_distance").asc(), F.col(id_col).asc()
-    )
-    adc_k = int(k) * int(rerank_factor) if rerank is not None else int(k)
-    topk = (
-        cands.join(qdf, "partition_id")
-        .select(
-            "query_id",
-            F.col(id_col),
-            F.col("partition_id"),
-            dist.alias("hamming_distance"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= adc_k)
-    )
-    if rerank is None:
-        return topk.select("query_id", id_col, "hamming_distance", "rank")
-    qvdf = F.broadcast(
-        spark.createDataFrame(
-            [
-                (int(qid), [float(x) for x in qv])
-                for qid, qv in zip(qids, queries)
-            ],
-            "query_id long, __qv array<double>",
-        )
-    )
-    cand = topk.select("query_id", id_col, "partition_id")
-    exact = (
-        rerank.select(id_col, "embedding")
-        .join(F.broadcast(cand), id_col)
-        .join(qvdf, "query_id")
-        .select(
-            "query_id",
-            F.col(id_col),
-            squared_l2(
-                F.col("embedding").cast("array<double>"), F.col("__qv")
-            ).alias("__d"),
-        )
-    )
-    rank2 = (
-        F.round(F.col("__d"), round_to)
-        if round_to is not None
-        else F.col("__d")
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        rank2.asc(), F.col(id_col).asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= int(k))
-        .select("query_id", id_col, rank2.alias("squared_distance"), "rank")
+    return _search(
+        model, queries, query_ids, nprobe, id_col, where, solo=False, k=k,
+        collect_centroids=collect_centroids, rerank=rerank,
+        rerank_factor=rerank_factor, round_to=round_to,
     )
 
 
@@ -504,16 +419,15 @@ def ivfbq_range_query_batch(
     exact_radius: float | None = None,
     round_to: int | None = None,
 ) -> DataFrame:
-    """Batch Hamming RADIUS search — `ivfbq_query_batch`'s serving
-    shape with `ivfbq_range_query`'s filter tail, completing the
-    radius x batch cell of the binary serving grid (the SQ analogue
-    is `ivfsq_range_query_batch`): ONE probe pass for Q queries
-    (`_batch_probe_rows`), one literal-isin pruned scan joined against
-    the broadcast (query_id, cell, qwords) table, and a codegen radius
-    filter so the only rows reaching any exchange are the matches.
-    ``limit_per_query`` caps each query's result to its nearest
-    members via WindowGroupLimit. Same probed-cell recall contract as
-    every IVF radius path.
+    """Batch Hamming RADIUS search — `ivfbq_query_batch`'s scan core
+    with `ivfbq_range_query`'s filter tail, completing the radius x
+    batch cell of the binary serving grid (the SQ analogue is
+    `ivfsq_range_query_batch`): ONE probe pass for Q queries, one
+    literal-isin pruned scan joined against the probe LocalRelation,
+    and a codegen radius filter so the only rows reaching any exchange
+    are the matches. ``limit_per_query`` caps each query's result to
+    its nearest members via WindowGroupLimit. Same probed-cell recall
+    contract as every IVF radius path.
 
     ``rerank``/``exact_radius``: the solo path's exact refinement —
     Hamming ``radius`` gates candidates (bits), then the O(matches)
@@ -523,97 +437,12 @@ def ivfbq_range_query_batch(
     squared_distance[, rank]).
 
     Returns (query_id, id_col, hamming_distance[, rank])."""
-    from pyspark.sql import Window
-
-    qids = (
-        list(query_ids) if query_ids is not None else list(range(len(queries)))
+    return _search(
+        model, queries, query_ids, nprobe, id_col, where, solo=False,
+        radius=radius, limit=limit_per_query,
+        collect_centroids=collect_centroids, rerank=rerank,
+        exact_radius=exact_radius, round_to=round_to,
     )
-    spark = model.encoded.sparkSession
-    if rerank is not None and exact_radius is None:
-        raise ValueError(
-            "ivfbq_range_query_batch(rerank=...) needs exact_radius — "
-            "the Hamming radius gates candidates (bits), the exact "
-            "radius filters refined distances (squared L2)"
-        )
-    if not qids:
-        id_type = model.encoded.schema[id_col].dataType.simpleString()
-        score = (
-            "squared_distance double"
-            if rerank is not None
-            else "hamming_distance int"
-        )
-        rank = ", rank int" if limit_per_query is not None else ""
-        return spark.createDataFrame(
-            [], f"query_id long, {id_col} {id_type}, {score}{rank}"
-        )
-    probe_rows = _batch_probe_rows(
-        model.centroids, queries, nprobe, qids, collect_centroids
-    )
-    qwords = {
-        int(qid): [int(x) for x in pack_bits_py(qv, model.thresholds)]
-        for qid, qv in zip(qids, queries)
-    }
-    rows = [(qid, c, qwords[qid]) for qid, c in probe_rows]
-    qdf = F.broadcast(
-        spark.createDataFrame(
-            rows, "query_id long, partition_id int, __qw array<bigint>"
-        )
-    )
-    cands = _probed_rows(model, [c for _, c in probe_rows], where)
-    dist = _hamming_dist_join_checked((model.dim + 31) // 32)
-    matches = (
-        cands.join(qdf, "partition_id")
-        .select(
-            "query_id",
-            F.col(id_col),
-            F.col("partition_id"),
-            dist.alias("hamming_distance"),
-        )
-        .where(F.col("hamming_distance") <= int(radius))
-    )
-    if rerank is not None:
-        qvdf = F.broadcast(
-            spark.createDataFrame(
-                [
-                    (int(qid), [float(x) for x in qv])
-                    for qid, qv in zip(qids, queries)
-                ],
-                "query_id long, __qv array<double>",
-            )
-        )
-        cand = matches.select("query_id", id_col)
-        refined = (
-            rerank.select(id_col, "embedding")
-            .join(F.broadcast(cand), id_col)
-            .join(qvdf, "query_id")
-            .select(
-                "query_id",
-                F.col(id_col),
-                squared_l2(
-                    F.col("embedding").cast("array<double>"), F.col("__qv")
-                ).alias("__d"),
-            )
-        )
-        scr = (
-            F.round(F.col("__d"), round_to)
-            if round_to is not None
-            else F.col("__d")
-        )
-        out = refined.where(scr <= float(exact_radius)).select(
-            "query_id", id_col, scr.alias("squared_distance")
-        )
-        score_col = "squared_distance"
-    else:
-        out = matches.select("query_id", id_col, "hamming_distance")
-        score_col = "hamming_distance"
-    if limit_per_query is not None:
-        w = Window.partitionBy("query_id").orderBy(
-            F.col(score_col).asc(), F.col(id_col).asc()
-        )
-        out = out.withColumn("rank", F.row_number().over(w)).where(
-            F.col("rank") <= int(limit_per_query)
-        )
-    return out
 
 
 def merge_ivfbq(
@@ -769,8 +598,6 @@ def train_ivfbq(
     plans/transform with the fixed-zero default instead); None keeps
     fixed 0.0, the bit-exact default. The oracle rows keep the
     frozen-centroid path."""
-    import numpy as np
-
     from flechasdb_spark.operators.bq import bq_thresholds
     from flechasdb_spark.operators.itq import sample_to_driver
     from flechasdb_spark.operators.kmeans_np import kmeans_fit
@@ -866,22 +693,13 @@ def itq_ivfbq_query(
     where=None,
 ) -> DataFrame:
     """Probe-pruned Hamming top-k over learned-rotation codes: float
-    probe selection, single-word popcount(xor) scan (the
+    probe selection over the collected O(P) centroid table (as
+    `ivfbq_query`), single-word popcount(xor) scan (the
     `bq.hamming_knn` composition `itq_encode` documents, now at index
-    cost). Integer distances, ties by id."""
-    base = IVFBQModel(
-        centroids=model.centroids, encoded=model.encoded,
-        dim=model.itq.bits, thresholds=None,
-    )
-    probe_ids = _probe_ids(base, query_vector, nprobe)
-    cands = _probed_rows(model, probe_ids, where)
-    dist = _hamming_dist_checked([_itq_query_word(model.itq, query_vector)])
-    return (
-        cands.select(
-            F.col(id_col), F.col("partition_id"), dist.alias("hamming_distance")
-        )
-        .orderBy(F.col("hamming_distance").asc(), F.col(id_col).asc())
-        .limit(int(k))
+    cost). Integer distances, ties by id. A query whose width is not
+    the centroids' raises ValueError."""
+    return _search(
+        model, [query_vector], [0], nprobe, id_col, where, solo=True, k=k
     )
 
 
@@ -897,23 +715,10 @@ def itq_ivfbq_range_query(
     """Radius form of `itq_ivfbq_query` — every probed-cell code within
     ``radius`` flipped bits of the query's ITQ word; the cut executes
     in the scan, exchange volume |result|."""
-    base = IVFBQModel(
-        centroids=model.centroids, encoded=model.encoded,
-        dim=model.itq.bits, thresholds=None,
+    return _search(
+        model, [query_vector], [0], nprobe, id_col, where, solo=True,
+        radius=radius, limit=limit,
     )
-    probe_ids = _probe_ids(base, query_vector, nprobe)
-    cands = _probed_rows(model, probe_ids, where)
-    dist = _hamming_dist_checked([_itq_query_word(model.itq, query_vector)])
-    out = (
-        cands.select(
-            F.col(id_col), F.col("partition_id"), dist.alias("hamming_distance")
-        )
-        .where(F.col("hamming_distance") <= int(radius))
-        .orderBy(F.col("hamming_distance").asc(), F.col(id_col).asc())
-    )
-    if limit is not None:
-        out = out.limit(int(limit))
-    return out
 
 
 def itq_ivfbq_query_batch(
@@ -928,53 +733,19 @@ def itq_ivfbq_query_batch(
 ) -> DataFrame:
     """Batched serving on the ITQ composition (VERDICT r11 #6 — the
     one serving mode the learned-rotation family was missing): the
-    SAME one-pass phase 1 as `ivfbq_query_batch` (`_batch_probe_rows`
-    — one dimension-major fold over collected float centroids, or one
-    distributed `select_probes_df` job with
-    ``collect_centroids=False``), each query packed driver-side to its
-    single ITQ word with the engine's exact bit rule
-    (`_itq_query_word`), one literal-isin pruned popcount scan shared
-    by all Q queries, per-query top-k via WindowGroupLimit.
-    Equivalence with Q solo `itq_ivfbq_query` calls is pytest-gated.
+    SAME scan core as `ivfbq_query_batch` (one dimension-major fold
+    over collected float centroids, or one distributed
+    `select_probes_df` job with ``collect_centroids=False``), each
+    query packed driver-side to its single ITQ word with the engine's
+    exact bit rule (`_itq_query_word`), one literal-isin pruned
+    popcount scan shared by all Q queries, per-query top-k via
+    WindowGroupLimit. Equivalence with Q solo `itq_ivfbq_query` calls
+    is pytest-gated.
 
     Returns (query_id, id_col, hamming_distance, rank)."""
-    from pyspark.sql import Window
-
-    qids = (
-        list(query_ids) if query_ids is not None else list(range(len(queries)))
-    )
-    spark = model.encoded.sparkSession
-    if not qids:
-        id_type = model.encoded.schema[id_col].dataType.simpleString()
-        return spark.createDataFrame(
-            [],
-            f"query_id long, {id_col} {id_type}, "
-            "hamming_distance int, rank int",
-        )
-    probe_rows = _batch_probe_rows(
-        model.centroids, queries, nprobe, qids, collect_centroids
-    )
-    qword = {
-        int(qid): [int(_itq_query_word(model.itq, qv))]
-        for qid, qv in zip(qids, queries)
-    }
-    rows = [(qid, c, qword[qid]) for qid, c in probe_rows]
-    qdf = F.broadcast(
-        spark.createDataFrame(
-            rows, "query_id long, partition_id int, __qw array<bigint>"
-        )
-    )
-    cands = _probed_rows(model, [c for _, c in probe_rows], where)
-    # ITQ codes are a single packed BIGINT word (bits <= 63)
-    dist = _hamming_dist_join_checked(1)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("hamming_distance").asc(), F.col(id_col).asc()
-    )
-    return (
-        cands.join(qdf, "partition_id")
-        .select("query_id", F.col(id_col), dist.alias("hamming_distance"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= int(k))
+    return _search(
+        model, queries, query_ids, nprobe, id_col, where, solo=False, k=k,
+        collect_centroids=collect_centroids,
     )
 
 
@@ -1045,22 +816,15 @@ def ivfbq_asymmetric_query(
     1 bit/dim and partition-pruned, but the query is never quantized —
     each disagreeing dim in the probed cells costs the query's
     micro-unit margin from the bit hyperplane
-    (`bq.asymmetric_score_checked`, integer-exact, no rounding
-    contract). The full serving ladder on the binary family now
+    (`bq.asymmetric_score_join_checked`, integer-exact, no rounding
+    contract). Probe selection collects the O(P) centroid table, as
+    `ivfbq_query`. The full serving ladder on the binary family now
     mirrors the PQ side: symmetric Hamming (SDC analogue) /
     asymmetric margins (ADC analogue) / radius / batch, all behind
     the same literal-isin PartitionFilter."""
-    from flechasdb_spark.operators.bq import asymmetric_score_checked
-
-    probe_ids = _probe_ids(model, query_vector, nprobe)
-    cands = _probed_rows(model, probe_ids, where)
-    score = asymmetric_score_checked(query_vector, model.thresholds)
-    return (
-        cands.select(
-            F.col(id_col), F.col("partition_id"), score.alias("asym_micro")
-        )
-        .orderBy(F.col("asym_micro").asc(), F.col(id_col).asc())
-        .limit(int(k))
+    return _search(
+        model, [query_vector], [0], nprobe, id_col, where, solo=True, k=k,
+        asymmetric=True,
     )
 
 
@@ -1076,56 +840,15 @@ def ivfbq_asymmetric_range_query(
     """ASYMMETRIC radius search (r12): every probed-cell code whose
     summed disagreement margin stays within ``radius_micro``
     micro-units of the float query — the asymmetric ladder's radius
-    form (`ivfbq_range_query` is its symmetric sibling). The cut
-    executes in the scan (codegen filter, |result| exchange);
-    integer-exact, ties and ordering by (asym_micro, id);
-    ``limit`` (ordered) caps a pathological radius.
-
-    Scoring uses the JOIN-form aggregate
-    (`bq.asymmetric_score_join_checked` against a broadcast 1-row
-    query table), NOT the solo literal unroll: Catalyst collapses the
-    projection into the radius filter and would duplicate the
-    unrolled O(dim) expression into both — at dim=64 that crossed
-    the JVM's 64 KB method limit and whole-stage codegen fell back
-    to interpreted execution (observed; the aggregate form stays a
-    few hundred bytes regardless of dim, and value equality with the
-    literal scorer is pytest-gated)."""
-    from flechasdb_spark.operators.bq import (
-        asymmetric_score_join_checked,
-        asymmetric_weights_micro,
+    form (`ivfbq_range_query` is its symmetric sibling). Probe
+    selection collects the O(P) centroid table, as `ivfbq_query`. The
+    cut executes in the scan (codegen filter, |result| exchange);
+    integer-exact, ties and ordering by (asym_micro, id); ``limit``
+    (ordered) caps a pathological radius."""
+    return _search(
+        model, [query_vector], [0], nprobe, id_col, where, solo=True,
+        radius=radius_micro, limit=limit, asymmetric=True,
     )
-
-    spark = model.encoded.sparkSession
-    probe_ids = _probe_ids(model, query_vector, nprobe)
-    cands = _probed_rows(model, probe_ids, where)
-    qdf = F.broadcast(
-        spark.createDataFrame(
-            [
-                (
-                    [int(x) for x in pack_bits_py(query_vector, model.thresholds)],
-                    [
-                        int(x)
-                        for x in asymmetric_weights_micro(
-                            query_vector, model.thresholds
-                        )
-                    ],
-                )
-            ],
-            "__qw array<bigint>, __qwt array<bigint>",
-        )
-    )
-    score = asymmetric_score_join_checked(model.dim)
-    out = (
-        cands.crossJoin(qdf)
-        .select(
-            F.col(id_col), F.col("partition_id"), score.alias("asym_micro")
-        )
-        .where(F.col("asym_micro") <= int(radius_micro))
-        .orderBy(F.col("asym_micro").asc(), F.col(id_col).asc())
-    )
-    if limit is not None:
-        out = out.limit(int(limit))
-    return out
 
 
 def ivfbq_asymmetric_query_batch(
@@ -1140,59 +863,16 @@ def ivfbq_asymmetric_query_batch(
 ) -> DataFrame:
     """Batched ASYMMETRIC binary serving (r12 — completing the
     asymmetric ladder: solo/radius got it in r11, batch closes it):
-    ONE probe pass (`_batch_probe_rows`), one pruned scan joined
-    against a broadcast (query_id, cell, packed query bits, per-dim
-    micro-unit margins) table, scored by
-    `bq.asymmetric_score_join_checked` — a single codegen aggregate
-    over sequence(0, dim-1), so the plan stays O(1) nodes for any Q
-    (the solo scorer's per-dim literal unroll would grow it
+    ONE probe pass, one pruned scan joined against the probe
+    LocalRelation (query_id, cell, packed query bits, per-dim
+    micro-unit margins), scored by `bq.asymmetric_score_join_checked`
+    — a single codegen aggregate over sequence(0, dim-1), so the plan
+    stays O(1) nodes for any Q (a per-dim literal unroll would grow it
     O(Q * dim)); per-query top-k via WindowGroupLimit. Integer-exact,
     no rounding contract.
 
     Returns (query_id, id_col, asym_micro, rank)."""
-    from pyspark.sql import Window
-
-    from flechasdb_spark.operators.bq import (
-        asymmetric_score_join_checked,
-        asymmetric_weights_micro,
-    )
-
-    qids = (
-        list(query_ids) if query_ids is not None else list(range(len(queries)))
-    )
-    spark = model.encoded.sparkSession
-    if not qids:
-        id_type = model.encoded.schema[id_col].dataType.simpleString()
-        return spark.createDataFrame(
-            [],
-            f"query_id long, {id_col} {id_type}, asym_micro long, rank int",
-        )
-    probe_rows = _batch_probe_rows(
-        model.centroids, queries, nprobe, qids, collect_centroids
-    )
-    qinfo = {
-        int(qid): (
-            [int(x) for x in pack_bits_py(qv, model.thresholds)],
-            [int(x) for x in asymmetric_weights_micro(qv, model.thresholds)],
-        )
-        for qid, qv in zip(qids, queries)
-    }
-    rows = [(qid, c, *qinfo[qid]) for qid, c in probe_rows]
-    qdf = F.broadcast(
-        spark.createDataFrame(
-            rows,
-            "query_id long, partition_id int, __qw array<bigint>, "
-            "__qwt array<bigint>",
-        )
-    )
-    cands = _probed_rows(model, [c for _, c in probe_rows], where)
-    score = asymmetric_score_join_checked(model.dim)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("asym_micro").asc(), F.col(id_col).asc()
-    )
-    return (
-        cands.join(qdf, "partition_id")
-        .select("query_id", F.col(id_col), score.alias("asym_micro"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= int(k))
+    return _search(
+        model, queries, query_ids, nprobe, id_col, where, solo=False, k=k,
+        collect_centroids=collect_centroids, asymmetric=True,
     )

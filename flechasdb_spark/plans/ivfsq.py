@@ -57,9 +57,11 @@ from flechasdb_spark.operators.sq import (
 from flechasdb_spark.plans.ivf import (
     _centroid_probes,
     _driver_frame,
+    _empty,
+    _exact,
+    _nearest,
     _probed_rows,
     _score_sql,
-    _top_per_query,
     cent_col_name,
     ivf_assign,
 )
@@ -366,59 +368,6 @@ def _scored(
     return scored, qids, qarr
 
 
-def _exact(
-    rerank: DataFrame,
-    survivors: DataFrame,
-    id_col: str,
-    qids: list[int],
-    qarr: np.ndarray,
-) -> DataFrame:
-    """The shared exact re-score: ``survivors`` (query_id, id_col,
-    partition_id) broadcast into one join against the ORIGINAL vectors
-    (id_col + 'embedding'), each scored against its query as
-    ``__score``. A survivor absent from ``rerank`` is dropped (the
-    FAISS refine-storage contract)."""
-    qv = _driver_frame(
-        rerank.sparkSession,
-        {"query_id": np.asarray(qids, dtype=np.int64), "__qv": qarr},
-    )
-    return (
-        rerank.select(id_col, "embedding")
-        .join(
-            F.broadcast(survivors.select("query_id", id_col, "partition_id")),
-            id_col,
-        )
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            F.col(id_col),
-            "partition_id",
-            squared_l2(F.col("embedding"), F.col("__qv")).alias("__score"),
-        )
-    )
-
-
-def _nearest(
-    df: DataFrame, n, round_to: int | None, id_col: str, solo: bool
-) -> DataFrame:
-    """The ``n`` nearest rows of each query by (rounded ``__score``,
-    id). A solo query is an ordered limit (TakeOrderedAndProject); with
-    ``n`` None it is all rows, gathered to one partition and sorted
-    there, which skips a global sort's range-sampling pass over the
-    scan. A batch is `_top_per_query`, which adds ``rank``. Ranking on
-    the rounded score when the caller asks for rounded output keeps a
-    sub-rounding float divergence from flipping the selected ids
-    against the oracle."""
-    if not solo:
-        return _top_per_query(
-            df, f"{_score_sql(round_to)} ASC, `{id_col}` ASC", n
-        )
-    order = (F.expr(_score_sql(round_to)), F.col(id_col))
-    if n is None:
-        return df.repartition(1).sortWithinPartitions(*order)
-    return df.orderBy(*order).limit(int(n))
-
-
 def _top_k(
     model, queries, k, nprobe, id_col, round_to, where, collect_centroids,
     rerank, rerank_factor, solo,
@@ -459,17 +408,6 @@ def _in_radius(
     out = scored.where(dist <= float(radius) * float(rerank_slack))
     return _exact(rerank, out, id_col, qids, qarr).where(
         dist <= float(radius)
-    )
-
-
-def _empty(model: IVFSQModel, id_col: str, rank: bool) -> DataFrame:
-    """An empty batch's result: the contract schema, ``rank`` included
-    iff the non-empty path carries it."""
-    id_type = model.encoded.schema[id_col].dataType.simpleString()
-    return model.encoded.sparkSession.createDataFrame(
-        [],
-        f"query_id long, {id_col} {id_type}, partition_id int, "
-        "squared_distance double" + (", rank int" if rank else ""),
     )
 
 
@@ -564,7 +502,9 @@ def ivfsq_query_batch(
     broadcast join of the O(Q * k * factor) survivor set); emitted
     distances become exact."""
     if not queries:
-        return _empty(model, id_col, rank=True)
+        return _empty(
+            model, id_col, "partition_id int, squared_distance double", True
+        )
     return _top_k(
         model, queries, k, nprobe, id_col, round_to, where,
         collect_centroids, rerank, rerank_factor, solo=False,
@@ -649,7 +589,10 @@ def ivfsq_range_query_batch(
     vectors, final filter of the EXACT (rounded) distance at
     ``radius`` (see `ivfsq_range_query`)."""
     if not queries:
-        return _empty(model, id_col, rank=limit_per_query is not None)
+        return _empty(
+            model, id_col, "partition_id int, squared_distance double",
+            limit_per_query is not None,
+        )
     out = _in_radius(
         model, queries, radius, nprobe, id_col, round_to, where,
         collect_centroids, rerank, rerank_slack,

@@ -380,24 +380,34 @@ def test_ivfbq_upsert_and_generic_deletes(spark, emb, model, tmp_path):
 def test_batch_probe_fold_matches_per_query_and_distributed(spark, emb, model):
     """VERDICT r11 #3 equivalence gate: the one-pass dimension-major
     probe fold (collect_centroids=True), the distributed
-    select_probes_df path (False), and the per-query `_probe_ids`
-    baseline all select the SAME probed cells per query, so the batch
-    result is identical across modes and to Q solo queries."""
-    from flechasdb_spark.plans.ivfbq import _batch_probe_rows, _probe_ids
+    select_probes_df path (False), and a per-query `flat_knn` over the
+    centroid table all select the SAME probed cells per query, in the
+    same order (ties by partition_id), so the batch result is
+    identical across modes and to Q solo queries."""
+    import numpy as np
+
+    from flechasdb_spark.operators.knn import flat_knn
+    from flechasdb_spark.plans.ivf import _centroid_probes
 
     qids = [2, 9, 17, 33]
     qs = [
         [float(x) for x in r.embedding]
         for r in emb.where(F.col("vec_id").isin(qids)).orderBy("vec_id").collect()
     ]
-    fold = _batch_probe_rows(model.centroids, qs, 3, qids, True)
-    dist = _batch_probe_rows(model.centroids, qs, 3, qids, False)
+    probes = {}
+    for cc in (True, False):
+        qidx, pids, _ = _centroid_probes(
+            model.centroids, np.array(qs), qids, 3, cc
+        )
+        probes[cc] = [(qids[i], int(p)) for i, p in zip(qidx, pids)]
     per_query = [
-        (qid, pid)
+        (qid, int(r["partition_id"]))
         for qid, qv in zip(qids, qs)
-        for pid in _probe_ids(model, qv, 3)
+        for r in flat_knn(
+            model.centroids, qv, k=3, id_col="partition_id", vec_col="centroid"
+        ).collect()
     ]
-    assert sorted(fold) == sorted(dist) == sorted(per_query)
+    assert probes[True] == probes[False] == per_query
     a = ivfbq_query_batch(model, qs, k=5, nprobe=3, query_ids=qids).collect()
     b = ivfbq_query_batch(
         model, qs, k=5, nprobe=3, query_ids=qids, collect_centroids=False
@@ -759,3 +769,181 @@ def test_merge_ivfbq_shards(spark, emb, model):
         merge_itq_ivfbq(
             ia, build_itq_ivfbq(emb.where(F.col("vec_id") % 2 == 1), cent, itq2)
         )
+
+
+def _bq_entry_points(model, itq_model, qv, qs, cc=True, nprobe=3):
+    """Every public IVF+BQ serving call on one query (solo forms) or
+    one batch, by name."""
+    from flechasdb_spark.plans.ivfbq import (
+        itq_ivfbq_query,
+        itq_ivfbq_query_batch,
+        itq_ivfbq_range_query,
+        ivfbq_asymmetric_query,
+        ivfbq_asymmetric_query_batch,
+        ivfbq_asymmetric_range_query,
+        ivfbq_range_query_batch,
+    )
+
+    return {
+        "ivfbq_query": lambda: ivfbq_query(model, qv, k=5, nprobe=nprobe),
+        "ivfbq_range_query": lambda: ivfbq_range_query(
+            model, qv, radius=26, nprobe=nprobe
+        ),
+        "ivfbq_query_batch": lambda: ivfbq_query_batch(
+            model, qs, k=5, nprobe=nprobe, collect_centroids=cc
+        ),
+        "ivfbq_range_query_batch": lambda: ivfbq_range_query_batch(
+            model, qs, radius=26, nprobe=nprobe, collect_centroids=cc
+        ),
+        "itq_ivfbq_query": lambda: itq_ivfbq_query(
+            itq_model, qv, k=5, nprobe=nprobe
+        ),
+        "itq_ivfbq_range_query": lambda: itq_ivfbq_range_query(
+            itq_model, qv, radius=5, nprobe=nprobe
+        ),
+        "itq_ivfbq_query_batch": lambda: itq_ivfbq_query_batch(
+            itq_model, qs, k=5, nprobe=nprobe, collect_centroids=cc
+        ),
+        "ivfbq_asymmetric_query": lambda: ivfbq_asymmetric_query(
+            model, qv, k=5, nprobe=nprobe
+        ),
+        "ivfbq_asymmetric_range_query": lambda: ivfbq_asymmetric_range_query(
+            model, qv, radius_micro=9_000_000, nprobe=nprobe
+        ),
+        "ivfbq_asymmetric_query_batch": lambda: ivfbq_asymmetric_query_batch(
+            model, qs, k=5, nprobe=nprobe, collect_centroids=cc
+        ),
+    }
+
+
+@pytest.fixture(scope="module")
+def itq_model(spark, emb):
+    from flechasdb_spark.operators.itq import itq_train
+    from flechasdb_spark.plans.ivfbq import build_itq_ivfbq
+
+    cent = emb.where(F.col("vec_id") < P).select(
+        F.col("vec_id").cast("int").alias("partition_id"),
+        F.col("embedding").alias("centroid"),
+    )
+    itq = itq_train(emb, bits=16, iters=8, sample_n=10_000)
+    return build_itq_ivfbq(emb, cent, itq)
+
+
+@pytest.mark.parametrize("width", [61, 66])
+def test_query_width_mismatch_raises(spark, emb, model, itq_model, width):
+    """A query narrower or wider than the index (dim 64) raises
+    ValueError at plan construction — never rows scored against a
+    truncated or null-padded query, nor an executor-side
+    ArrayIndexOutOfBoundsException — on all ten entry points, with the
+    batch forms in both probe-selection modes."""
+    row = emb.where(F.col("vec_id") == 3).first()
+    qv = ([float(x) for x in row["embedding"]] * 2)[:width]
+    qs = [qv, qv]
+    for cc in (True, False):
+        calls = _bq_entry_points(model, itq_model, qv, qs, cc)
+        assert len(calls) == 10
+        for call in calls.values():
+            with pytest.raises(ValueError, match="width"):
+                call()
+
+
+def test_serving_plans_ship_no_pickled_tables(spark, emb, model, itq_model, tmp_path):
+    """Every probe and query table of BQ serving is an Arrow
+    LocalRelation: the executed plan reads a LocalTableScan and no
+    pickled RDD (Scan ExistingRDD, whose broadcast starts Python
+    workers), and the literal probe cut stays in the Parquet
+    PartitionFilters of a loaded index."""
+    from flechasdb_spark.plans.ivfbq import (
+        itq_ivfbq_query_batch,
+        ivfbq_asymmetric_query_batch,
+        ivfbq_asymmetric_range_query,
+        ivfbq_range_query_batch,
+        load_itq_ivfbq,
+        save_itq_ivfbq,
+    )
+
+    save_ivfbq(model, str(tmp_path / "bq"))
+    save_itq_ivfbq(itq_model, str(tmp_path / "itq"))
+    m = load_ivfbq(spark, str(tmp_path / "bq"))
+    im = load_itq_ivfbq(spark, str(tmp_path / "itq"))
+    qs = [
+        [float(x) for x in r.embedding]
+        for r in emb.where(F.col("vec_id").isin(2, 9, 17)).orderBy("vec_id").collect()
+    ]
+    calls = {
+        "ivfbq_query_batch": ivfbq_query_batch(m, qs, k=5, nprobe=3),
+        "ivfbq_query_batch+rerank": ivfbq_query_batch(
+            m, qs, k=5, nprobe=3, rerank=emb, round_to=4
+        ),
+        "ivfbq_range_query_batch+rerank": ivfbq_range_query_batch(
+            m, qs, radius=26, nprobe=3, rerank=emb, exact_radius=30.0
+        ),
+        "itq_ivfbq_query_batch": itq_ivfbq_query_batch(im, qs, k=5, nprobe=3),
+        "ivfbq_asymmetric_query_batch": ivfbq_asymmetric_query_batch(
+            m, qs, k=5, nprobe=3
+        ),
+        "ivfbq_asymmetric_range_query": ivfbq_asymmetric_range_query(
+            m, qs[0], radius_micro=9_000_000, nprobe=3
+        ),
+    }
+    for name, df in calls.items():
+        assert df.count() > 0, name
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, (name, plan)
+        assert "ExistingRDD" not in plan, (name, plan)
+        assert "PartitionFilters: [partition_id" in plan.replace("\n", " "), (
+            name,
+            plan,
+        )
+
+
+def test_batch_empty_queries(spark, emb, model, itq_model):
+    """An empty batch is a legal call on all four batch forms: no rows,
+    with exactly the contract schema of the non-empty path (the rerank
+    score, and ``rank`` iff the path ranks). Probing no cells
+    (nprobe=0) likewise scans nothing and returns no rows, solo and
+    batch."""
+    from flechasdb_spark.plans.ivfbq import (
+        itq_ivfbq_query_batch,
+        ivfbq_asymmetric_query_batch,
+        ivfbq_range_query_batch,
+    )
+
+    def schema(df):
+        assert df.count() == 0
+        return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+    head = [("query_id", "bigint"), ("vec_id", "bigint")]
+    ham, sq = ("hamming_distance", "int"), ("squared_distance", "double")
+    rank = [("rank", "int")]
+    assert schema(ivfbq_query_batch(model, [], k=5, nprobe=2)) == [
+        *head, ham, *rank
+    ]
+    assert schema(
+        ivfbq_query_batch(model, [], k=5, nprobe=2, rerank=emb)
+    ) == [*head, sq, *rank]
+    for lim in (None, 3):
+        tail = rank if lim is not None else []
+        assert schema(
+            ivfbq_range_query_batch(
+                model, [], radius=20, nprobe=2, limit_per_query=lim
+            )
+        ) == [*head, ham, *tail]
+        assert schema(
+            ivfbq_range_query_batch(
+                model, [], radius=20, nprobe=2, limit_per_query=lim,
+                rerank=emb, exact_radius=30.0,
+            )
+        ) == [*head, sq, *tail]
+    assert schema(itq_ivfbq_query_batch(itq_model, [], k=5, nprobe=2)) == [
+        *head, ham, *rank
+    ]
+    assert schema(
+        ivfbq_asymmetric_query_batch(model, [], k=5, nprobe=2)
+    ) == [*head, ("asym_micro", "bigint"), *rank]
+
+    qv = [float(x) for x in emb.where(F.col("vec_id") == 3).first()["embedding"]]
+    for cc in (True, False):
+        calls = _bq_entry_points(model, itq_model, qv, [qv, qv], cc, nprobe=0)
+        for name, call in calls.items():
+            assert call().count() == 0, (name, cc)
