@@ -9,15 +9,19 @@ Phase 1 (driver, tiny data): for a batch of Q query vectors
 Phase 2 (executors): scan ONLY the probed Parquet partitions (a literal
 ``partition_id IN (...)`` — partition pruning == the reference's lazy
 partition load, S3) and score every encoded vector
-dist = sum_d T[probe, d, codes[d]] (Q3), then per-query top-k via
-``row_number`` which Spark executes with WindowGroupLimit — partial
-top-k before the shuffle (Q4+Q5, the reference's NBest merge). The
-"sql" scorer joins the probe table (query_id, partition_id, T) — built
-on the driver as an Arrow LocalRelation, so it needs no Python worker —
-and gathers with one codegen'd Catalyst expression; a small query runs
-that join and its top-k as one task, a larger one broadcasts the probe
-table. The "batch" scorer broadcasts T to a mapInPandas NumPy gather
-with a batch-local top-k.
+dist = sum_d T[probe, d, codes[d]] (Q3) in one scan core, `_scored`,
+with either of two scorers that return the same bits. The "sql" scorer
+joins the probe table (query_id, partition_id, T) — built on the driver
+as an Arrow LocalRelation, so it needs no Python worker — and gathers
+with one codegen'd Catalyst expression; a small query runs that join
+and its top-k as one task, a larger one broadcasts the probe table. The
+"batch" scorer broadcasts T to one mapInPandas NumPy kernel that cuts
+each Arrow batch to the rows the result can use. Every public form is
+a tail of that core (FAISS's IndexIVF / InvertedListScanner split, as
+for SQ and BQ): per-query top-k via ``row_number``, which Spark
+executes with WindowGroupLimit — partial top-k before the shuffle
+(Q4+Q5, the reference's NBest merge) — a radius filter, and the exact
+re-rank.
 
 Scale: probe list and ADC tables are O(Q * nprobe * D * C) — broadcast;
 the scan shuffles only k rows per (query, partition). The reference's
@@ -25,6 +29,8 @@ async I/O-overlap machinery (A1) is Spark task parallelism.
 """
 
 from __future__ import annotations
+
+import time
 
 import numpy as np
 import pandas as pd
@@ -321,10 +327,13 @@ def select_probes(
 
     Returns (probe_qidx [Q*nprobe], probe_pid [Q*nprobe]); errors when
     nprobe > P, matching /root/reference/src/db/stored.rs:403-409.
+    A negative nprobe raises ValueError too.
     """
     p = model.centroids.shape[0]
     if nprobe > p:
         raise ValueError(f"nprobe {nprobe} exceeds num_partitions {p}")
+    if nprobe < 0:
+        raise ValueError(f"nprobe {nprobe} is negative")
     probed = _probe_fold(model.centroids, queries, nprobe)  # (Q, nprobe)
     q_idx = np.repeat(np.arange(queries.shape[0]), nprobe)
     return q_idx, probed.ravel()
@@ -375,9 +384,9 @@ def _centroid_probes(
     nprobe: int,
     collect_centroids: bool = True,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Probe selection over a (partition_id, centroid) DataFrame for the
-    SQ and BQ families: (probe_qidx, probe_pid, probe_centroid), one row
-    per probe, query-major in probe order.
+    """Probe selection over a (partition_id, centroid) DataFrame, for SQ,
+    BQ and PQ's lazy-centroid mode: (probe_qidx, probe_pid,
+    probe_centroid), one row per probe, query-major in probe order.
 
     ``collect_centroids=True`` collects the O(P) table once (no
     ``orderBy``: it would add a sampling job and a shuffle; the rows are
@@ -385,7 +394,10 @@ def _centroid_probes(
     ``False`` runs the distributed `select_probes_df` job and collects
     only the O(Q * nprobe) winners, for a centroid table too large for
     the driver. Either way a query whose width is not the centroids'
-    raises ValueError before any scan is planned."""
+    raises ValueError before any scan is planned, as does a negative
+    ``nprobe``."""
+    if nprobe < 0:
+        raise ValueError(f"nprobe {nprobe} is negative")
     if collect_centroids:
         cc = cent_col_name(centroids)
         rows = sorted(
@@ -461,19 +473,12 @@ def _adc_tables(
     model: IndexModel,
     queries: np.ndarray,
     probe_qidx: np.ndarray,
-    probe_pid: np.ndarray,
-    probe_centroids: np.ndarray | None = None,
+    probe_centroids: np.ndarray,
 ) -> np.ndarray:
-    """Q2: T[i, d, c] for each probe i = (query, partition) pair.
-    ``probe_centroids`` (QP, N) supplies the probed centroids directly
-    when the full (P, N) table is not on the driver (lazy mode)."""
+    """Q2: T[i, d, c] for each probe i = (query, partition) pair, from
+    the (QP, N) probed centroids."""
     d, c, w = model.codebooks.shape
-    cent = (
-        probe_centroids
-        if probe_centroids is not None
-        else model.centroids[probe_pid]
-    )
-    localized = queries[probe_qidx] - cent  # (QP, N)
+    localized = queries[probe_qidx] - probe_centroids  # (QP, N)
     if model.dim_perm is not None:
         # OPQ-style split: codes quantize the PERMUTED residual, so the
         # ADC table must be built from the same reordering
@@ -485,45 +490,27 @@ def _adc_tables(
 
 
 def _phase1(
-    model: IndexModel,
-    qarr: np.ndarray,
-    qids: list[int],
-    nprobe: int,
-    mark=None,
+    model: IndexModel, qarr: np.ndarray, qids: list[int], nprobe: int, mark
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Shared Phase 1 of every PQ serving path (top-k and radius):
-    probe selection — driver-side `select_probes` when the centroid
-    table is collected, the distributed `select_probes_df` job in
-    huge-P lazy mode — followed by the broadcast ADC tables. Returns
-    (probe_qidx, probe_pid, tables)."""
-    spark = model.encoded.sparkSession
+    """Phase 1 of every PQ serving path: probe selection, then the ADC
+    tables. Probes come from `select_probes` when the centroids are on
+    the driver, else (an index loaded with ``collect_centroids=False``,
+    huge P) from the distributed `_centroid_probes` job, which collects
+    only the O(Q * nprobe) probed centroids. Returns (probe_qidx,
+    probe_pid, tables)."""
     if model.centroids is None:
-        # lazy-centroid serving mode (huge P): Phase 1 is a Spark job;
-        # only the O(Q * nprobe) probed (query, partition, centroid)
-        # rows are collected, never the full (P, N) table.
         p = model.config.num_partitions
         if nprobe > p:
             raise ValueError(f"nprobe {nprobe} exceeds num_partitions {p}")
-        rows = select_probes_df(
-            model.centroids_df(spark), qarr, nprobe, query_ids=qids
-        ).collect()
-        qpos_map = {int(q): i for i, q in enumerate(qids)}
-        rows.sort(key=lambda r: (qpos_map[r.query_id], r.probe_rank))
-        probe_qidx = np.array([qpos_map[r.query_id] for r in rows], dtype=int)
-        probe_pid = np.array([r.partition_id for r in rows], dtype=int)
-        probe_cent = np.array([r.centroid for r in rows], dtype=np.float64)
-        if mark is not None:
-            mark("select_probes")
-        tables = _adc_tables(
-            model, qarr, probe_qidx, probe_pid, probe_centroids=probe_cent
+        probe_qidx, probe_pid, cent = _centroid_probes(
+            model.centroids_source, qarr, qids, nprobe, collect_centroids=False
         )
     else:
         probe_qidx, probe_pid = select_probes(model, qarr, nprobe)
-        if mark is not None:
-            mark("select_probes")
-        tables = _adc_tables(model, qarr, probe_qidx, probe_pid)  # (QP, D, C)
-    if mark is not None:
-        mark("adc_tables")
+        cent = model.centroids[probe_pid]
+    mark("select_probes")
+    tables = _adc_tables(model, qarr, probe_qidx, cent)
+    mark("adc_tables")
     return probe_qidx, probe_pid, tables
 
 
@@ -546,6 +533,24 @@ def _adc_score(d: int) -> str:
 _SINGLE_TASK_MAX_PAIRS = 32_000
 
 
+# ADC-table doubles, Q * nprobe * D * C, from which scorer="auto" runs
+# the NumPy kernel instead of the sql plan (see `ann_query` for why it
+# sits below the warm crossover).
+_KERNEL_MIN_DOUBLES = 100_000
+
+
+def _query_ids(ids, n: int) -> list[int]:
+    """``ids`` as ints, checked to be one per query and all distinct:
+    two queries sharing an id would share one top-k window partition and
+    get the top-k of their union, so either fault raises ValueError."""
+    qids = [int(q) for q in ids]
+    if len(qids) != n:
+        raise ValueError(f"{len(qids)} query ids for {n} queries")
+    if len(set(qids)) != n:
+        raise ValueError("duplicate query ids")
+    return qids
+
+
 def _query_batch(
     model: IndexModel, queries, query_ids
 ) -> tuple[list[int], np.ndarray]:
@@ -554,26 +559,16 @@ def _query_batch(
     batch, list or (0, N) array, is Q = 0 and skips the width check."""
     if isinstance(queries, np.ndarray):
         qarr = queries.astype(np.float64)
-        qids = list(query_ids) if query_ids is not None else list(range(len(qarr)))
+        ids = query_ids if query_ids is not None else range(len(qarr))
     else:
-        qids = [int(q[0]) for q in queries]
+        ids = [q[0] for q in queries]
         qarr = np.array([q[1] for q in queries], dtype=np.float64)
+    qids = _query_ids(ids, len(qarr))
     if qids and (qarr.ndim != 2 or qarr.shape[1] != model.vector_size):
         raise ValueError(
             f"query width {qarr.shape} != vector_size {model.vector_size}"
         )
     return qids, qarr
-
-
-def _empty_result(model: IndexModel, rank: bool) -> DataFrame:
-    """The contract schema with no rows, ``rank`` included iff the
-    non-empty path carries it (the ivfsq ADVICE r9 #3 rule)."""
-    id_type = model.encoded.schema[model.config.id_col].dataType.simpleString()
-    schema = (
-        f"query_id long, vector_id {id_type}, partition_id int, "
-        "squared_distance double"
-    ) + (", rank int" if rank else "")
-    return model.encoded.sparkSession.createDataFrame([], schema)
 
 
 def _probed_rows(model, probe_pid, where) -> DataFrame:
@@ -634,34 +629,9 @@ def _sql_scored(
     )
 
 
-def _query_vectors(spark, qids: list[int], qarr: np.ndarray) -> DataFrame:
-    """Broadcast (query_id, __qv array<float>) for the exact re-rank."""
-    return F.broadcast(
-        _driver_frame(
-            spark,
-            {
-                "query_id": np.asarray(qids, dtype=np.int64),
-                "__qv": qarr.astype(np.float32),
-            },
-        )
-    )
-
-
 def _score_sql(round_to: int | None) -> str:
     """``__score`` as SQL, rounded when ``round_to`` is set."""
     return f"round(__score, {int(round_to)})" if round_to is not None else "__score"
-
-
-def _top_per_query(df: DataFrame, order_by: str, cut: int) -> DataFrame:
-    """``df`` plus ``rank`` = row_number over query_id by ``order_by``,
-    kept to rank <= ``cut`` — Spark runs the window as WindowGroupLimit,
-    a partial top-k before the shuffle (Q4+Q5, the reference's NBest
-    merge)."""
-    return df.selectExpr(
-        "*",
-        f"row_number() OVER (PARTITION BY query_id ORDER BY {order_by}) "
-        "AS rank",
-    ).where(f"rank <= {int(cut)}")
 
 
 def _nearest(
@@ -671,14 +641,18 @@ def _nearest(
     id). A solo query is an ordered limit (TakeOrderedAndProject); with
     ``n`` None it is all rows, gathered to one partition and sorted
     there, which skips a global sort's range-sampling pass over the
-    scan. A batch is `_top_per_query`, which adds ``rank``. Ranking on
-    the rounded score when the caller asks for rounded output keeps a
-    sub-rounding float divergence from flipping the selected ids
-    against the oracle."""
+    scan. A batch adds ``rank``, a row_number over query_id kept to
+    rank <= ``n``, which Spark runs as WindowGroupLimit: a partial
+    top-k before the shuffle (Q4+Q5, the reference's NBest merge).
+    Ranking on the rounded score when the caller asks for rounded
+    output keeps a sub-rounding float divergence from flipping the
+    selected ids against the oracle."""
     if not solo:
-        return _top_per_query(
-            df, f"{_score_sql(round_to)} ASC, `{id_col}` ASC", n
-        )
+        return df.selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY query_id ORDER BY "
+            f"{_score_sql(round_to)} ASC, `{id_col}` ASC) AS rank",
+        ).where(f"rank <= {int(n)}")
     order = (F.expr(_score_sql(round_to)), F.col(id_col))
     if n is None:
         return df.repartition(1).sortWithinPartitions(*order)
@@ -691,18 +665,19 @@ def _exact(
     id_col: str,
     qids: list[int],
     qarr: np.ndarray,
+    vec_col: str = "embedding",
 ) -> DataFrame:
-    """The shared exact re-score of the SQ and BQ families:
-    ``survivors`` (query_id, id_col, partition_id) broadcast into one
-    join against the ORIGINAL vectors (id_col + 'embedding'), each
-    scored against its query as ``__score``. A survivor absent from
-    ``rerank`` is dropped (the FAISS refine-storage contract)."""
+    """The shared exact re-score of every family: ``survivors``
+    (query_id, id_col, partition_id) broadcast into one join against the
+    ORIGINAL vectors (id_col + ``vec_col``), each scored against its
+    float64 query as ``__score``. A survivor absent from ``rerank`` is
+    dropped (the FAISS refine-storage contract)."""
     qv = _driver_frame(
         rerank.sparkSession,
         {"query_id": np.asarray(qids, dtype=np.int64), "__qv": qarr},
     )
     return (
-        rerank.select(id_col, "embedding")
+        rerank.select(id_col, vec_col)
         .join(
             F.broadcast(survivors.select("query_id", id_col, "partition_id")),
             id_col,
@@ -712,13 +687,13 @@ def _exact(
             "query_id",
             F.col(id_col),
             "partition_id",
-            squared_l2(F.col("embedding"), F.col("__qv")).alias("__score"),
+            squared_l2(F.col(vec_col), F.col("__qv")).alias("__score"),
         )
     )
 
 
 def _empty(model, id_col: str, score: str, rank: bool) -> DataFrame:
-    """An empty batch's result of the SQ and BQ families: (query_id,
+    """An empty batch's result of every family: (query_id,
     id_col, then ``score``, a schema string) and ``rank`` iff the
     non-empty path carries it."""
     id_type = model.encoded.schema[id_col].dataType.simpleString()
@@ -727,6 +702,196 @@ def _empty(model, id_col: str, score: str, rank: bool) -> DataFrame:
         f"query_id long, {id_col} {id_type}, {score}"
         + (", rank int" if rank else ""),
     )
+
+
+def _left_fold(terms: np.ndarray) -> np.ndarray:
+    """Row sums of an (n, m) array as the left fold from 0.0 in column
+    order: the order of `_adc_score` and `squared_l2`, so every sum is
+    bit-identical to theirs (``ndarray.sum`` adds pairwise)."""
+    acc = np.zeros(len(terms))
+    for col in terms.T:
+        acc += col
+    return acc
+
+
+def _kernel_scored(
+    model: IndexModel, candidates: DataFrame, qids, qarr, probe_qidx,
+    probe_pid, tables, cut, radius, slack, stored,
+) -> DataFrame:
+    """The "batch" scorer: `_sql_scored`'s rows, scored in NumPy by one
+    mapInPandas pass with the ADC tables and probe lists broadcast. Per
+    Arrow batch, cell and probing query it keeps only rows that can
+    reach the result: ADC score <= ``radius`` and, with ``cut``, the
+    ``cut`` nearest plus their ties. ``slack`` (twice the rounding unit)
+    widens both tests, so whatever Spark's rounding decides downstream,
+    no row the tail keeps is dropped here. ``stored`` adds ``__exact``,
+    the squared L2 of each kept row's stored vector (``vec_col``) to
+    its float64 query, for the fused re-rank."""
+    id_col, vec_col = model.config.id_col, model.config.vec_col
+    by_pid: dict[int, list[tuple[int, int, int]]] = {}
+    for i, (qi, pid) in enumerate(zip(probe_qidx, probe_pid)):
+        by_pid.setdefault(int(pid), []).append((qids[qi], int(qi), i))
+    shipped = candidates.sparkSession.sparkContext.broadcast(
+        (tables, by_pid, qarr if stored else None)
+    )
+    div = np.arange(model.config.num_divisions)
+
+    def score(batches):
+        t, probes, qv = shipped.value
+        for pdf in batches:
+            outs = []
+            for pid, grp in pdf.groupby("partition_id"):
+                codes = np.vstack(grp["codes"].to_numpy())
+                ids = grp[id_col].to_numpy()
+                if qv is not None:
+                    vecs = np.vstack(grp[vec_col].to_numpy()).astype(np.float64)
+                for query_id, qi, pi in probes.get(int(pid), ()):
+                    s = _left_fold(t[pi, div, codes])
+                    keep = np.arange(len(s))
+                    if radius is not None:
+                        keep = keep[s <= radius + slack]
+                    if cut is not None and len(keep) > cut:
+                        worst = np.partition(s[keep], cut - 1)[cut - 1]
+                        keep = keep[s[keep] <= worst + slack]
+                    if not len(keep):
+                        continue
+                    cols = {
+                        "query_id": query_id,
+                        id_col: ids[keep],
+                        "partition_id": int(pid),
+                        "__score": s[keep],
+                    }
+                    if qv is not None:
+                        diff = vecs[keep] - qv[qi]
+                        cols["__exact"] = _left_fold(diff * diff)
+                    outs.append(pd.DataFrame(cols))
+            if outs:
+                yield pd.concat(outs, ignore_index=True)
+
+    id_type = model.encoded.schema[id_col].dataType.simpleString()
+    return candidates.select(
+        id_col, "partition_id", "codes", *([vec_col] if stored else [])
+    ).mapInPandas(
+        score,
+        f"query_id long, `{id_col}` {id_type}, partition_id int, "
+        "__score double" + (", __exact double" if stored else ""),
+    )
+
+
+def _scored(
+    model: IndexModel, qids, qarr, nprobe, where, scorer, stored, cut,
+    radius, round_to, mark,
+) -> DataFrame:
+    """The scan core of every IVF+PQ serving path: (query_id, id_col,
+    partition_id, __score[, __exact]), the ADC distance of each
+    candidate in each query's probed cells, from either scorer. Both
+    sum the ADC gather (and ``__exact``) as the same left fold, so they
+    return the same bits; the kernel's ``cut``/``radius`` pre-cut only
+    drops rows the tail would drop. "auto" runs the kernel for a stored
+    re-rank or from `_KERNEL_MIN_DOUBLES` table doubles, else sql."""
+    probe_qidx, probe_pid, tables = _phase1(model, qarr, qids, nprobe, mark)
+    if scorer == "auto":
+        kernel = stored or tables.size >= _KERNEL_MIN_DOUBLES
+        scorer = "batch" if kernel else "sql"
+    candidates = _probed_rows(model, probe_pid, where)
+    if scorer == "sql":
+        return _sql_scored(
+            model, candidates, qids, probe_qidx, probe_pid, tables
+        )
+    slack = 2.0 * 10.0 ** -round_to if round_to is not None else 0.0
+    return _kernel_scored(
+        model, candidates, qids, qarr, probe_qidx, probe_pid, tables, cut,
+        radius, slack, stored,
+    )
+
+
+def _search(
+    model: IndexModel, queries, query_ids, nprobe, round_to, where, scorer,
+    rerank, solo=False, k=None, rerank_factor=4, radius=None, limit=None,
+    rerank_slack=1.5, on_event=None,
+) -> DataFrame:
+    """Every public IVF+PQ serving form as a tail of `_scored`, as
+    `plans.ivfbq._search` is for BQ.
+
+    Top-k (``k``) is `_nearest` on the (rounded) ADC score; with
+    ``rerank`` it keeps ``k * rerank_factor`` survivors, re-scores them
+    exactly (`_exact`, or the kernel's in-scan ``__exact`` for
+    ``rerank="stored"``) and takes the top-k of that. Radius
+    (``radius``) filters the (rounded) score at ``radius``, or with
+    ``rerank`` at ``radius * rerank_slack`` before the exact re-score is
+    filtered at ``radius``; a solo query is then ordered and ``limit``
+    caps each query to its nearest. The result is (vector_id,
+    partition_id, squared_distance) for a solo query, else (query_id,
+    vector_id, partition_id, squared_distance[, rank]); an empty batch
+    returns that schema."""
+    id_col, vec_col = model.config.id_col, model.config.vec_col
+    qids, qarr = _query_batch(model, queries, query_ids)
+    stored = isinstance(rerank, str)
+    if stored:
+        if rerank != "stored":
+            raise ValueError(f"unknown rerank mode: {rerank!r}")
+        if k is None:
+            raise ValueError("rerank='stored' serves top-k queries only")
+        if vec_col not in model.encoded.columns:
+            raise ValueError(
+                "rerank='stored' needs the original vectors on the encoded "
+                "rows — build with IndexConfig(keep_vectors=True)"
+            )
+        if scorer == "sql":
+            raise ValueError("rerank='stored' requires scorer='batch'")
+    if scorer not in ("auto", "sql", "batch"):
+        raise ValueError(f"unknown scorer: {scorer}")
+    rank = not solo and (k is not None or limit is not None)
+    if not qids:
+        return _empty(
+            model, id_col, "partition_id int, squared_distance double", rank
+        ).withColumnRenamed(id_col, "vector_id")
+    started = [time.perf_counter()]
+
+    def mark(stage: str) -> None:
+        if on_event is not None:
+            on_event(stage, time.perf_counter() - started[0])
+        started[0] = time.perf_counter()
+
+    if k is not None:
+        cut = int(k) * int(rerank_factor) if rerank is not None else int(k)
+    else:
+        cut = limit if rerank is None else None
+        exact_radius = float(radius)
+        slack = float(rerank_slack) if rerank is not None else 1.0
+        radius = exact_radius * slack
+    scored = _scored(
+        model, qids, qarr, nprobe, where, scorer, stored, cut, radius,
+        round_to, mark,
+    )
+    if k is not None:
+        out = _nearest(scored, cut, round_to, id_col, solo)
+        if stored:
+            out = out.selectExpr(
+                "query_id", f"`{id_col}`", "partition_id", "__exact AS __score"
+            )
+        elif rerank is not None:
+            out = _exact(rerank, out, id_col, qids, qarr, vec_col)
+        if rerank is not None:
+            out = _nearest(out, k, round_to, id_col, solo)
+    else:
+        dist = F.expr(_score_sql(round_to))
+        out = scored.where(dist <= radius)
+        if rerank is not None:
+            out = _exact(rerank, out, id_col, qids, qarr, vec_col).where(
+                dist <= exact_radius
+            )
+        if solo or limit is not None:
+            out = _nearest(out, limit, round_to, id_col, solo)
+    out = out.selectExpr(
+        *([] if solo else ["query_id"]),
+        f"`{id_col}` AS vector_id",
+        "partition_id",
+        f"{_score_sql(round_to)} AS squared_distance",
+        *(["rank"] if rank else []),
+    )
+    mark("plan_built")
+    return out
 
 
 def ann_query(
@@ -746,7 +911,9 @@ def ann_query(
     (Q, N) array with ``query_ids``. Returns (query_id, vector_id,
     partition_id, squared_distance, rank) — the reference's QueryResult
     shape (/root/reference/src/db/build.rs:577-587) plus batch columns.
-    An empty batch returns no rows with that schema.
+    An empty batch returns no rows with that schema. Query ids must be
+    distinct and, given as ``query_ids``, one per query (else
+    ValueError).
 
     ``where``: optional filtered-search predicate (Column or SQL string)
     over the index's attribute columns, applied to candidates BEFORE
@@ -754,11 +921,13 @@ def ann_query(
     that all satisfy the predicate (no reference counterpart; free in
     Spark because attributes live on the encoded rows).
 
-    ``scorer``: "sql" gathers the ADC table with one pure Catalyst
-    expression, an unrolled sum of array lookups inside whole-stage
-    codegen; the Q * nprobe tables ride as an Arrow LocalRelation probe
-    table joined to the pruned scan on partition_id without Python
-    workers. The sql plan depends on the estimated pair count,
+    ``scorer`` picks how `_scored` computes the ADC sums; both scorers
+    fold them in the same order, so they return bit-identical rows.
+    "sql" gathers the ADC table with one pure Catalyst expression, an
+    unrolled sum of array lookups inside whole-stage codegen; the
+    Q * nprobe tables ride as an Arrow LocalRelation probe table joined
+    to the pruned scan on partition_id without Python workers. The sql
+    plan depends on the estimated pair count,
     Q * nprobe * num_vectors / num_partitions. Under
     `_SINGLE_TASK_MAX_PAIRS` (32k) both sides are coalesced to one
     partition and hash-joined: no broadcast, no shuffle, and the query
@@ -769,16 +938,19 @@ def ann_query(
     4-core host), the median request took 0.29 s single-task vs 0.32 s
     broadcast at 25k pairs, 0.30 vs 0.31 s at 35k, and 0.35 vs 0.34 s
     at 40k. "batch" scores whole Arrow batches in NumPy via mapInPandas
-    AND applies a batch-local top-k with the same (rounded score, id)
-    order as the global window, so the rank shuffle sees O(Q * k * batches)
-    rows instead of every scored candidate. "auto" (default) picks by
-    total table size, Q * nprobe * D * C doubles: up to 100k the sql
-    form wins; past it the batch form's vectorized gather and
-    pre-shuffle cut win. That 100k threshold was measured with the
-    since-removed pickled probe table and the former interpreted gather
-    (200k vectors, Q=100, D=16, C=64: sql 66 s, batch ~6 s) and is kept
-    as it was. Both scorers agree under the rounded-score contract
-    (tested).
+    with the tables broadcast, and cuts each batch to the rows that can
+    reach the result before the top-k shuffle. "auto" (default) runs
+    the kernel from `_KERNEL_MIN_DOUBLES` (100k) table doubles,
+    Q * nprobe * D * C, and sql below it. Warm, the two crossed near
+    1,000 probes on the 20k x 64 store above (1,024 doubles a probe;
+    median of 6 alternating calls, Q=100 unless noted, sql vs kernel):
+    0.69 vs 1.33 s at 100 probes, 0.69 vs 1.16 s at 400, 1.42 vs 1.58 s
+    at 800 (Q=200), 1.33 vs 1.31 s at 1,200 (Q=300), 1.42 vs 1.28 s at
+    1,600 and 4.05 vs 2.06 s at 4,096 (Q=1024). But a bound of 2^20
+    doubles moved the cold nprobe=1 and 4 arms of perfbench's
+    ingest-sweep sweep to sql, and that sweep then took longer in 3 of
+    3 alternating pairs (median 8.7 vs 7.8 s), so the bound stays at
+    100k, about 100 probes at D=16, C=64.
 
     ``on_event(stage, seconds)`` mirrors the reference's query event
     handlers (/root/reference/src/db/stored.rs:513-532): fired after the
@@ -798,172 +970,19 @@ def ann_query(
 
     ``rerank="stored"``: FUSED refinement for indexes built with
     ``IndexConfig(keep_vectors=True)`` (original vectors stored on the
-    encoded rows). The batch scorer computes the exact distance for its
-    batch-local ADC top-``k * rerank_factor`` survivors inside the SAME
-    mapInPandas pass over the pruned partitions — no second table, no
-    second scan, no join; the global ADC cut then picks exactly the
-    same candidate set as the join form (both cut by rounded ADC score,
-    id), so results are identical. This is the right shape when the
-    re-rank source would otherwise be a full scan of the vector corpus.
+    encoded rows). The kernel computes the exact distance of the rows
+    it keeps inside the SAME mapInPandas pass over the pruned
+    partitions — no second table, no second scan, no join — so "auto"
+    runs the kernel and scorer="sql" raises ValueError. The global ADC
+    cut picks the same candidate set as the join form, and the exact
+    distance is the same fold, so the rows are identical. This is the
+    right shape when the re-rank source would otherwise be a full scan
+    of the vector corpus.
     """
-    qids, qarr = _query_batch(model, queries, query_ids)
-    if not qids:
-        return _empty_result(model, rank=True)
-
-    import time as _time
-
-    _t0 = {"t": _time.perf_counter()}
-
-    def _mark(stage: str) -> None:
-        if on_event is not None:
-            on_event(stage, _time.perf_counter() - _t0["t"])
-        _t0["t"] = _time.perf_counter()
-
-    spark = model.encoded.sparkSession
-    probe_qidx, probe_pid, tables = _phase1(
-        model, qarr, qids, nprobe, mark=_mark
+    return _search(
+        model, queries, query_ids, nprobe, round_to, where, scorer, rerank,
+        k=k, rerank_factor=rerank_factor, on_event=on_event,
     )
-
-    d = model.config.num_divisions
-    id_col = model.config.id_col
-    vec_col = model.config.vec_col
-    adc_k = k * rerank_factor if rerank is not None else k
-
-    fused = isinstance(rerank, str)
-    if fused:
-        if rerank != "stored":
-            raise ValueError(f"unknown rerank mode: {rerank!r}")
-        if vec_col not in model.encoded.columns:
-            raise ValueError(
-                "rerank='stored' needs the original vectors on the encoded "
-                "rows — build with IndexConfig(keep_vectors=True)"
-            )
-        if scorer == "auto":
-            scorer = "batch"
-        elif scorer != "batch":
-            raise ValueError("rerank='stored' requires scorer='batch'")
-    if scorer == "auto":
-        scorer = "batch" if tables.size > 100_000 else "sql"
-    if scorer not in ("sql", "batch"):
-        raise ValueError(f"unknown scorer: {scorer}")
-
-    candidates = _probed_rows(model, probe_pid, where)
-    if scorer == "batch":
-        # whole-batch NumPy scoring + BATCH-LOCAL top-k inside the UDF:
-        # for each Arrow batch, score every (probing query, row) pair
-        # with one vectorized gather and keep only the adc_k best rows
-        # per query by the same (rounded score, id) order the global
-        # window uses — union of per-batch top-k provably contains the
-        # global top-k, so the window input shrinks from
-        # O(rows * probes/partition) to O(Q * adc_k * batches).
-        sc = spark.sparkContext
-        b_tables = sc.broadcast(tables)
-        by_pid: dict[int, list[tuple[int, int]]] = {}
-        qpos = {int(q): i for i, q in enumerate(qids)}
-        for i, (qi, pid) in enumerate(zip(probe_qidx, probe_pid)):
-            by_pid.setdefault(int(pid), []).append((int(qids[qi]), int(i)))
-        b_probes = sc.broadcast(by_pid)
-        b_queries = sc.broadcast((qarr, qpos)) if fused else None
-        id_type = model.encoded.schema[id_col].dataType.simpleString()
-        out_schema = (
-            f"query_id long, {id_col} {id_type}, "
-            "partition_id int, __score double"
-        ) + (", __exact double" if fused else "")
-        cut, rt, dd = adc_k, round_to, d
-        in_cols = [id_col, "partition_id", "codes"] + (
-            [vec_col] if fused else []
-        )
-        vcol = vec_col
-
-        def score_partition(batches):
-            t = b_tables.value
-            probes = b_probes.value
-            qv, qp = b_queries.value if b_queries is not None else (None, None)
-            ar = np.arange(dd)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                outs = []
-                for pid, grp in pdf.groupby("partition_id"):
-                    plist = probes.get(int(pid))
-                    if not plist:
-                        continue
-                    cd = np.vstack(grp["codes"].to_numpy())
-                    vids = grp[id_col].to_numpy()
-                    embs = (
-                        np.vstack(grp[vcol].to_numpy()).astype(np.float64)
-                        if qv is not None
-                        else None
-                    )
-                    for query_id, pi in plist:
-                        s = t[pi, ar[None, :], cd].sum(axis=1)
-                        rs = np.round(s, rt) if rt is not None else s
-                        sel = (
-                            np.lexsort((vids, rs))[:cut]
-                            if len(s) > cut
-                            else np.arange(len(s))
-                        )
-                        cols = {
-                            "query_id": query_id,
-                            id_col: vids[sel],
-                            "partition_id": int(pid),
-                            "__score": s[sel],
-                        }
-                        if embs is not None:
-                            # fused refinement: exact squared L2 for the
-                            # batch-local ADC survivors only — O(cut * N)
-                            # per probe, in the same Arrow pass
-                            diff = embs[sel] - qv[qp[query_id]]
-                            cols["__exact"] = np.einsum(
-                                "ij,ij->i", diff, diff
-                            )
-                        outs.append(pd.DataFrame(cols))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        scored = candidates.select(*in_cols).mapInPandas(
-            score_partition, out_schema
-        )
-    else:
-        scored = _sql_scored(
-            model, candidates, qids, probe_qidx, probe_pid, tables
-        )
-    # With round_to set, RANKING uses the rounded score (ties by id) —
-    # the determinism contract: unrounded ADC sums differ across engines
-    # in the last ulp (summation order), so only the rounded value is a
-    # stable sort key for oracle comparison (SURVEY.md §2.4 tie-breaks).
-    order_by = f"{_score_sql(round_to)} ASC, `{id_col}` ASC"
-    topk = _top_per_query(scored, order_by, adc_k)
-    if fused:
-        # exact scores already computed in-scan for every candidate that
-        # could survive the global ADC cut; swap them in and re-rank.
-        # Both windows hash-partition by query_id, so the second one
-        # reuses the first's exchange (sort-only within partitions).
-        topk = _top_per_query(
-            topk.selectExpr(
-                "query_id", f"`{id_col}`", "partition_id", "__exact AS __score"
-            ),
-            order_by,
-            k,
-        )
-    elif rerank is not None:
-        cand = topk.select("query_id", id_col, "partition_id")
-        exact = (
-            rerank.select(id_col, vec_col)
-            .join(F.broadcast(cand), id_col)
-            .join(_query_vectors(spark, qids, qarr), "query_id")
-            .withColumn("__score", squared_l2(F.col(vec_col), F.col("__qv")))
-        )
-        topk = _top_per_query(exact, order_by, k)
-    result = topk.selectExpr(
-        "query_id",
-        f"`{id_col}` AS vector_id",
-        "partition_id",
-        f"{_score_sql(round_to)} AS squared_distance",
-        "rank",
-    )
-    _mark("plan_built")
-    return result
 
 
 def ann_range_query_batch(
@@ -979,8 +998,8 @@ def ann_range_query_batch(
     rerank: DataFrame | None = None,
     rerank_slack: float = 1.5,
 ) -> DataFrame:
-    """Batch RADIUS search over the IVF+PQ index — `ann_query`'s
-    serving shape with a FILTER tail instead of top-k (the FAISS
+    """Batch RADIUS search over the IVF+PQ index — `ann_query`'s scan
+    core with a FILTER tail instead of top-k (the FAISS
     ``IndexIVFPQ::range_search`` contract; the reference itself serves
     top-k only, /root/reference/src/db/stored.rs:331-389, so this is
     extension-surface parity with the SQ side's
@@ -990,18 +1009,14 @@ def ann_range_query_batch(
     plus ``rank`` when ``limit_per_query`` caps a pathological radius
     to each query's nearest matches.
 
-    Phase 1 (probe selection + broadcast ADC tables) is shared with
-    `ann_query`, INCLUDING the huge-P lazy-centroid mode — on an index
-    loaded with ``collect_centroids=False`` the probe phase composes
-    `select_probes_df` and collects only the O(Q * nprobe) winners.
-    Phase 2 scans ONLY the probed ``partition_id=`` directories (the
-    literal isin lands in the Parquet PartitionFilters at rest), and
-    the radius cut happens AT THE SCAN — with the "sql" scorer it is a
-    codegen'd filter over the gathered ADC sum, with the "batch"
-    scorer the Arrow kernel emits only matching rows — so the only
-    rows that ever reach an exchange are the matches (the property
-    that makes radius search safe at 100 TB: shuffle volume is
-    |result|, never |scanned|).
+    Probe selection, the huge-P lazy-centroid mode, the scorers and
+    the query-id checks are `ann_query`'s. Phase 2 scans ONLY the
+    probed ``partition_id=`` directories (the literal isin lands in the
+    Parquet PartitionFilters at rest), and the radius cut happens AT
+    THE SCAN — a codegen'd filter over the sql scorer's ADC sum, or
+    inside the kernel — so the only rows that ever reach an exchange
+    are the matches (the property that makes radius search safe at
+    100 TB: shuffle volume is |result|, never |scanned|).
 
     ``round_to`` rounds the emitted distance AND applies the filter to
     the rounded value (the frozen-row convention — a boundary member
@@ -1021,129 +1036,10 @@ def ann_range_query_batch(
     the exact (rounded) distance. Residual misses are only true
     members whose ADC distance exceeds the slack band — widen
     ``rerank_slack`` to trade scan volume for that tail."""
-    qids, qarr = _query_batch(model, queries, query_ids)
-    if not qids:
-        return _empty_result(model, rank=limit_per_query is not None)
-    spark = model.encoded.sparkSession
-    id_col = model.config.id_col
-    probe_qidx, probe_pid, tables = _phase1(model, qarr, qids, nprobe)
-    d = model.config.num_divisions
-    if scorer == "auto":
-        scorer = "batch" if tables.size > 100_000 else "sql"
-
-    candidates = _probed_rows(model, probe_pid, where)
-    if scorer == "sql":
-        scored = _sql_scored(
-            model, candidates, qids, probe_qidx, probe_pid, tables
-        )
-    elif scorer == "batch":
-        # Arrow kernel: one vectorized gather per (probing query,
-        # batch), the radius filter applied IN the kernel so only
-        # matches cross back (plus a batch-local nearest-L cut when
-        # limit_per_query bounds the result — union of per-batch
-        # top-L provably contains the global top-L).
-        sc = spark.sparkContext
-        b_tables = sc.broadcast(tables)
-        by_pid: dict[int, list[tuple[int, int]]] = {}
-        for i, (qi, pid) in enumerate(zip(probe_qidx, probe_pid)):
-            by_pid.setdefault(int(pid), []).append((int(qids[qi]), int(i)))
-        b_probes = sc.broadcast(by_pid)
-        id_type = model.encoded.schema[id_col].dataType.simpleString()
-        out_schema = (
-            f"query_id long, {id_col} {id_type}, "
-            "partition_id int, __score double"
-        )
-        rt, dd = round_to, d
-        # under rerank the kernel keeps the slack band, and the
-        # batch-local limit cut is disabled — an ADC-order cut could
-        # drop rows that belong in the EXACT-order top-L
-        rad = (
-            float(radius) * float(rerank_slack)
-            if rerank is not None
-            else float(radius)
-        )
-        cut = (
-            None
-            if (limit_per_query is None or rerank is not None)
-            else int(limit_per_query)
-        )
-
-        def score_partition(batches):
-            t = b_tables.value
-            probes = b_probes.value
-            ar = np.arange(dd)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                outs = []
-                for pid, grp in pdf.groupby("partition_id"):
-                    plist = probes.get(int(pid))
-                    if not plist:
-                        continue
-                    cd = np.vstack(grp["codes"].to_numpy())
-                    vids = grp[id_col].to_numpy()
-                    for query_id, pi in plist:
-                        s = t[pi, ar[None, :], cd].sum(axis=1)
-                        rs = np.round(s, rt) if rt is not None else s
-                        m = rs <= rad
-                        if not m.any():
-                            continue
-                        sv, rv, vv = s[m], rs[m], vids[m]
-                        if cut is not None and len(sv) > cut:
-                            sel = np.lexsort((vv, rv))[:cut]
-                            sv, vv = sv[sel], vv[sel]
-                        outs.append(
-                            pd.DataFrame(
-                                {
-                                    "query_id": query_id,
-                                    id_col: vv,
-                                    "partition_id": int(pid),
-                                    "__score": sv,
-                                }
-                            )
-                        )
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        scored = candidates.select(id_col, "partition_id", "codes").mapInPandas(
-            score_partition, out_schema
-        )
-    else:
-        raise ValueError(f"unknown scorer: {scorer}")
-
-    cutoff = (
-        float(radius) * float(rerank_slack)
-        if rerank is not None
-        else float(radius)
+    return _search(
+        model, queries, query_ids, nprobe, round_to, where, scorer, rerank,
+        radius=radius, limit=limit_per_query, rerank_slack=rerank_slack,
     )
-    out = scored.selectExpr(
-        "query_id",
-        f"`{id_col}` AS vector_id",
-        "partition_id",
-        f"{_score_sql(round_to)} AS squared_distance",
-    ).where(F.col("squared_distance") <= cutoff)
-    if rerank is not None:
-        vec_col = model.config.vec_col
-        survivors = out.select(
-            "query_id", F.col("vector_id").alias(id_col), "partition_id"
-        )
-        ex = (
-            rerank.select(id_col, vec_col)
-            .join(F.broadcast(survivors), id_col)
-            .join(_query_vectors(spark, qids, qarr), "query_id")
-            .withColumn("__score", squared_l2(F.col(vec_col), F.col("__qv")))
-        )
-        out = ex.selectExpr(
-            "query_id",
-            f"`{id_col}` AS vector_id",
-            "partition_id",
-            f"{_score_sql(round_to)} AS squared_distance",
-        ).where(F.col("squared_distance") <= float(radius))
-    if limit_per_query is not None:
-        out = _top_per_query(
-            out, "squared_distance ASC, vector_id ASC", limit_per_query
-        )
-    return out
 
 
 def ann_range_query(
@@ -1158,28 +1054,15 @@ def ann_range_query(
     rerank: DataFrame | None = None,
     rerank_slack: float = 1.5,
 ) -> DataFrame:
-    """Solo RADIUS search over the IVF+PQ index — the single-query
-    form of `ann_range_query_batch`, contract-matching the SQ side's
+    """Solo RADIUS search over the IVF+PQ index — the Q=1 form of
+    `ann_range_query_batch`, contract-matching the SQ side's
     `plans.ivfsq.ivfsq_range_query`: ``(vector_id, partition_id,
     squared_distance)`` ascending by (rounded) distance with id
     tie-break; ``limit`` is an ordered safety cap (keeps the nearest);
     ``where`` pre-filters before scoring; ``rerank``/``rerank_slack``
     refine to EXACT radius semantics (see the batch form)."""
-    out = ann_range_query_batch(
-        model,
-        [(0, [float(x) for x in query_vector])],
-        radius,
-        nprobe,
-        round_to=round_to,
-        where=where,
-        limit_per_query=limit,
-        scorer=scorer,
-        rerank=rerank,
+    return _search(
+        model, [(0, query_vector)], None, nprobe, round_to, where, scorer,
+        rerank, solo=True, radius=radius, limit=limit,
         rerank_slack=rerank_slack,
-    )
-    return (
-        out.select("vector_id", "partition_id", "squared_distance")
-        .orderBy(
-            F.col("squared_distance").asc(), F.col("vector_id").asc()
-        )
     )

@@ -70,6 +70,7 @@ from flechasdb_spark.plans.ivf import (
     _exact,
     _nearest,
     _probed_rows,
+    _query_ids,
     _score_sql,
     ivf_assign,
 )
@@ -169,11 +170,13 @@ def _hamming_dist_join_checked(n_words: int):
 
 
 def _scored(
-    model, queries, nprobe, id_col, where, collect_centroids, asymmetric
+    model, ids, queries, nprobe, id_col, where, collect_centroids, asymmetric
 ) -> tuple[DataFrame, list[int], np.ndarray]:
     """The scan core of every IVF+BQ serving path: (scored, qids, qarr)
     where ``scored`` is ``(query_id, id_col, partition_id, __score)``,
     the binary distance of each candidate in each query's probed cells.
+    ``ids`` must hold one distinct id per query vector in ``queries``
+    (`plans.ivf._query_ids`, else ValueError).
 
     Probe selection is `plans.ivf._centroid_probes` (the driver fold
     over the collected centroids, or the distributed job with
@@ -187,8 +190,8 @@ def _scored(
     into the literal-``IN`` pruned scan, so a candidate is scored only
     against the queries that probed its cell, by one join-form scorer
     whose plan size does not grow with Q or dim."""
-    qids = [int(q) for q, _ in queries]
-    qarr = np.array([[float(x) for x in v] for _, v in queries])
+    qids = _query_ids(ids, len(queries))
+    qarr = np.array([[float(x) for x in v] for v in queries])
     qidx, pid, _ = _centroid_probes(
         model.centroids, qarr, qids, int(nprobe), collect_centroids
     )
@@ -251,12 +254,12 @@ def _search(
     else:
         name, sql_type, round_to = "hamming_distance", "int", None
     rank = not solo and (k is not None or limit is not None)
-    ids = query_ids if query_ids is not None else range(len(queries))
-    queries = list(zip(ids, queries))
-    if not queries:
+    if not len(queries):
         return _empty(model, id_col, f"{name} {sql_type}", rank)
+    ids = query_ids if query_ids is not None else range(len(queries))
     scored, qids, qarr = _scored(
-        model, queries, nprobe, id_col, where, collect_centroids, asymmetric
+        model, ids, queries, nprobe, id_col, where, collect_centroids,
+        asymmetric,
     )
     if k is not None:
         cut = int(k) * int(rerank_factor) if rerank is not None else k

@@ -61,6 +61,7 @@ from flechasdb_spark.plans.ivf import (
     _exact,
     _nearest,
     _probed_rows,
+    _query_ids,
     _score_sql,
     cent_col_name,
     ivf_assign,
@@ -325,7 +326,8 @@ def _scored(
     """The scan core of every IVF+SQ serving path: (scored, qids, qarr)
     where ``scored`` is ``(query_id, id_col, partition_id, __score)``,
     the asymmetric distance of each candidate in each query's probed
-    cells.
+    cells. Query ids must be distinct (`plans.ivf._query_ids`, else
+    ValueError).
 
     Probe selection is `plans.ivf._centroid_probes` (the driver fold
     over the collected centroids, or the distributed job with
@@ -337,7 +339,7 @@ def _scored(
     no centroid-table join. The table is coalesced to one partition
     first, so its broadcast is a one-task job. Per-cell bounds add one
     broadcast join of the O(P) bounds table."""
-    qids = [int(q) for q, _ in queries]
+    qids = _query_ids([q for q, _ in queries], len(queries))
     qarr = np.array([[float(x) for x in v] for _, v in queries])
     qidx, pid, cent = _centroid_probes(
         model.centroids, qarr, qids, int(nprobe), collect_centroids

@@ -3,8 +3,12 @@ exact oracle + manifest invariants; randomness pinned by seeds)."""
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from flechasdb_spark.operators.build import IndexConfig, build_index
@@ -243,40 +247,35 @@ def test_rerank_distances_are_exact(model, emb):
         assert abs(r.squared_distance - true_d) < 1e-6
 
 
-def test_fused_rerank_matches_join_rerank(emb):
-    """rerank='stored' (exact distances computed inside the pruned ADC
-    scan, keep_vectors index) returns the same rows as the join-based
-    rerank under the rounded contract, and errors without stored
-    vectors or with a non-batch scorer."""
-    from flechasdb_spark.operators.build import assemble_index, build_index
+@pytest.fixture(scope="module")
+def kept(emb):
+    """The fixture index built with keep_vectors=True (stored vectors)."""
+    import dataclasses
 
-    kept = build_index(
-        emb,
-        IndexConfig(
-            num_partitions=CFG.num_partitions,
-            num_divisions=CFG.num_divisions,
-            num_codes=CFG.num_codes,
-            seed=CFG.seed,
-            keep_vectors=True,
-        ),
-    )
+    return build_index(emb, dataclasses.replace(CFG, keep_vectors=True))
+
+
+def test_fused_rerank_matches_join_rerank(emb, kept):
+    """rerank='stored' (exact distances computed inside the pruned ADC
+    scan, keep_vectors index) returns bit-identical rows to the
+    join-based rerank, unrounded, for queries float32 cannot represent
+    (both score the float64 query), and errors without stored vectors or
+    with a non-batch scorer."""
     assert "embedding" in kept.encoded.columns
     qs = [
-        (int(r.vec_id), [float(x) for x in r.embedding])
+        (int(r.vec_id), [float(x) / 3.0 for x in r.embedding])
         for r in emb.where(F.col("vec_id") < 5).collect()
     ]
+    assert any(np.float32(x) != x for _, v in qs for x in v)
     joined = sorted(
-        (r.query_id, r.vector_id, r.squared_distance, r.rank)
-        for r in ann_query(
-            kept, qs, k=5, nprobe=8, round_to=4, rerank=emb, rerank_factor=4
-        ).collect()
+        ann_query(kept, qs, k=5, nprobe=8, rerank=emb, rerank_factor=4).collect()
     )
     fused = sorted(
-        (r.query_id, r.vector_id, r.squared_distance, r.rank)
-        for r in ann_query(
-            kept, qs, k=5, nprobe=8, round_to=4, rerank="stored", rerank_factor=4
+        ann_query(
+            kept, qs, k=5, nprobe=8, rerank="stored", rerank_factor=4
         ).collect()
     )
+    assert len(fused) == 25
     assert fused == joined
 
     no_vec = build_index(emb, CFG)
@@ -288,22 +287,10 @@ def test_fused_rerank_matches_join_rerank(emb):
         ann_query(kept, qs, k=5, nprobe=8, rerank="bogus")
 
 
-def test_fused_rerank_survives_save_load(emb, spark, tmp_path_factory):
+def test_fused_rerank_survives_save_load(emb, kept, spark, tmp_path_factory):
     """keep_vectors indexes persist the raw vectors in the partition
     files; after save_index -> load_index the fused rerank path still
     works and matches the in-memory result."""
-    from flechasdb_spark.operators.build import build_index
-
-    kept = build_index(
-        emb,
-        IndexConfig(
-            num_partitions=CFG.num_partitions,
-            num_divisions=CFG.num_divisions,
-            num_codes=CFG.num_codes,
-            seed=CFG.seed,
-            keep_vectors=True,
-        ),
-    )
     path = str(tmp_path_factory.mktemp("kept_idx"))
     save_index(kept, path)
     loaded = load_index(spark, path)
@@ -349,22 +336,23 @@ def test_query_and_cluster_event_callbacks(model, emb):
 
 
 def test_scorers_agree_on_rounded_contract(model, emb):
-    """sql and batch ADC scorers return the same rows under the
-    rounded-ranking contract (auto picks between them by table size)."""
+    """sql and batch ADC scorers return bit-identical rows, unrounded as
+    well as rounded: both sum the ADC gather as the same left fold."""
     qs = [
         (int(r.vec_id), [float(x) for x in r.embedding])
         for r in emb.where(F.col("vec_id") < 5).collect()
     ]
-    results = {
-        scorer: sorted(
-            (r.query_id, r.vector_id, r.squared_distance)
-            for r in ann_query(
-                model, qs, k=5, nprobe=4, round_to=4, scorer=scorer
-            ).collect()
-        )
-        for scorer in ("sql", "batch")
-    }
-    assert results["sql"] == results["batch"]
+    for round_to in (None, 4):
+        results = {
+            scorer: sorted(
+                ann_query(
+                    model, qs, k=5, nprobe=4, round_to=round_to, scorer=scorer
+                ).collect()
+            )
+            for scorer in ("sql", "batch")
+        }
+        assert len(results["sql"]) == 25
+        assert results["sql"] == results["batch"], round_to
 
 
 def test_lazy_centroids_distributed_probes(model, emb, spark, tmp_path_factory):
@@ -931,9 +919,9 @@ def test_single_task_plan_matches_broadcast_plan(
 
 
 def test_sql_scores_equal_left_fold_of_adc_tables(model, emb, spark, tmp_path_factory):
-    """Every unrounded sql-scored distance is exactly the left fold, in
-    division order from 0.0, of its probe's ADC table entries — with
-    and without a where pre-filter."""
+    """Every unrounded distance, from either scorer, is exactly the left
+    fold, in division order from 0.0, of its probe's ADC table entries —
+    with and without a where pre-filter."""
     from flechasdb_spark.plans.ivf import _adc_tables
 
     loaded = _saved_index(model, spark, tmp_path_factory, "left_fold")
@@ -941,16 +929,16 @@ def test_sql_scores_equal_left_fold_of_adc_tables(model, emb, spark, tmp_path_fa
     qids = [int(r.vec_id) for r in rows]
     qarr = np.array([r.embedding for r in rows], dtype=np.float64)
     probe_qidx, probe_pid = select_probes(loaded, qarr, 3)
-    tables = _adc_tables(loaded, qarr, probe_qidx, probe_pid)
+    tables = _adc_tables(loaded, qarr, probe_qidx, loaded.centroids[probe_pid])
     probe = {
         (qids[qi], int(pid)): i
         for i, (qi, pid) in enumerate(zip(probe_qidx, probe_pid))
     }
     codes = {r.vec_id: list(r.codes) for r in loaded.encoded.collect()}
-    for where in (None, "label = 1"):
+    for where, scorer in itertools.product((None, "label = 1"), ("sql", "batch")):
         out = ann_query(
             loaded, qarr, k=7, nprobe=3, query_ids=qids, where=where,
-            scorer="sql",
+            scorer=scorer,
         ).collect()
         assert len(out) == 3 * 7
         for r in out:
@@ -958,4 +946,178 @@ def test_sql_scores_equal_left_fold_of_adc_tables(model, emb, spark, tmp_path_fa
             acc = 0.0
             for d, c in enumerate(codes[r.vector_id]):
                 acc = acc + float(t[d, c])
-            assert r.squared_distance == acc, (where, r)
+            assert r.squared_distance == acc, (where, scorer, r)
+
+
+def _sq_bq_models(emb):
+    """An IVF+SQ and an IVF+BQ index over the fixture, whose centroids
+    are its first P vectors."""
+    from flechasdb_spark.plans.ivfbq import build_ivfbq
+    from flechasdb_spark.plans.ivfsq import build_ivfsq
+
+    cent = emb.where(F.col("vec_id") < CFG.num_partitions).select(
+        F.col("vec_id").cast("int").alias("partition_id"),
+        F.col("embedding").alias("centroid"),
+    )
+    return build_ivfsq(emb, cent), build_ivfbq(emb, cent, dim=64)
+
+
+def test_negative_nprobe_raises(model, emb, spark, tmp_path_factory):
+    """A negative nprobe raises ValueError on every family, with the
+    centroids collected and with distributed probe selection."""
+    from flechasdb_spark.plans.ivf import ann_range_query, ann_range_query_batch
+    from flechasdb_spark.plans.ivfbq import ivfbq_query, ivfbq_query_batch
+    from flechasdb_spark.plans.ivfsq import ivfsq_query, ivfsq_query_batch
+
+    sq, bq = _sq_bq_models(emb)
+    path = str(tmp_path_factory.mktemp("neg_nprobe"))
+    save_index(model, path)
+    lazy = load_index(spark, path, collect_centroids=False)
+    qv = [float(x) for x in emb.where(F.col("vec_id") == 3).first()["embedding"]]
+    calls = [
+        lambda: select_probes(model, np.array([qv]), -1),
+        lambda: ann_range_query(model, qv, radius=2.0, nprobe=-1),
+        lambda: ivfsq_query(sq, qv, k=3, nprobe=-1),
+        lambda: ivfbq_query(bq, qv, k=3, nprobe=-1),
+    ]
+    for pq in (model, lazy):
+        calls += [
+            lambda pq=pq: ann_query(pq, [(3, qv)], k=3, nprobe=-1),
+            lambda pq=pq: ann_range_query_batch(
+                pq, [(3, qv)], radius=2.0, nprobe=-1
+            ),
+        ]
+    for cc in (True, False):
+        calls += [
+            lambda cc=cc: ivfsq_query_batch(
+                sq, [(3, qv)], k=3, nprobe=-1, collect_centroids=cc
+            ),
+            lambda cc=cc: ivfbq_query_batch(
+                bq, [qv], k=3, nprobe=-1, collect_centroids=cc
+            ),
+        ]
+    for call in calls:
+        with pytest.raises(ValueError, match="negative"):
+            call()
+
+
+def test_duplicate_or_missing_query_ids_raise(model, emb):
+    """Two queries sharing an id, or a query_ids list whose length is
+    not the query count, raise ValueError on every family's batch
+    forms instead of pooling the two queries' candidates."""
+    from flechasdb_spark.plans.ivf import ann_range_query_batch
+    from flechasdb_spark.plans.ivfbq import (
+        ivfbq_query_batch,
+        ivfbq_range_query_batch,
+    )
+    from flechasdb_spark.plans.ivfsq import (
+        ivfsq_query_batch,
+        ivfsq_range_query_batch,
+    )
+
+    sq, bq = _sq_bq_models(emb)
+    rows = emb.where(F.col("vec_id").isin(3, 9)).orderBy("vec_id").collect()
+    vs = [[float(x) for x in r.embedding] for r in rows]
+    qarr = np.array(vs)
+    calls = {
+        "duplicate": [
+            lambda: ann_query(model, [(1, vs[0]), (1, vs[1])], k=3, nprobe=2),
+            lambda: ann_query(model, qarr, k=3, nprobe=2, query_ids=[4, 4]),
+            lambda: ann_range_query_batch(
+                model, qarr, radius=2.0, nprobe=2, query_ids=[4, 4]
+            ),
+            lambda: ivfsq_query_batch(sq, [(1, vs[0]), (1, vs[1])], 3, 2),
+            lambda: ivfsq_range_query_batch(
+                sq, [(1, vs[0]), (1, vs[1])], 2.0, 2
+            ),
+            lambda: ivfbq_query_batch(bq, vs, 3, 2, query_ids=[4, 4]),
+            lambda: ivfbq_range_query_batch(bq, vs, 9, 2, query_ids=[4, 4]),
+        ],
+        "query ids for": [
+            lambda: ann_query(model, qarr, k=3, nprobe=2, query_ids=[4]),
+            lambda: ann_range_query_batch(
+                model, qarr, radius=2.0, nprobe=2, query_ids=[4, 5, 6]
+            ),
+            lambda: ivfbq_query_batch(bq, vs, 3, 2, query_ids=[4]),
+        ],
+    }
+    for match, fns in calls.items():
+        for call in fns:
+            with pytest.raises(ValueError, match=match):
+                call()
+
+
+@pytest.fixture(scope="module")
+def first_vectors(emb):
+    """The fixture's first 40 vectors as a (40, 64) float64 array."""
+    rows = emb.where(F.col("vec_id") < 40).orderBy("vec_id").collect()
+    return np.array([r.embedding for r in rows], dtype=np.float64)
+
+
+@settings(max_examples=12, deadline=None)
+@given(
+    n_q=st.integers(1, 6),
+    k=st.integers(1, 8),
+    nprobe=st.integers(0, CFG.num_partitions),
+    where=st.sampled_from([None, "label = 1"]),
+    rerank=st.sampled_from([None, "frame", "stored"]),
+    round_to=st.sampled_from([None, 4]),
+    seed=st.integers(0, 2**16),
+)
+def test_pq_scorers_plans_and_batching_return_the_same_bits(
+    kept, emb, first_vectors, n_q, k, nprobe, where, rerank, round_to, seed
+):
+    """Forced sql (under both single-task plans), forced kernel and
+    auto return bit-identical rows, and a batch returns exactly the
+    rows of its queries run one at a time."""
+    from flechasdb_spark.plans import ivf
+
+    rng = np.random.RandomState(seed)
+    base = first_vectors[rng.choice(len(first_vectors), n_q)]
+    qarr = base + rng.randn(n_q, 64) * 0.05
+    qids = [int(q) for q in rng.choice(1000, n_q, replace=False)]
+    kw = dict(
+        k=k, nprobe=nprobe, where=where, round_to=round_to,
+        rerank=emb if rerank == "frame" else rerank,
+    )
+
+    def run(queries, ids, scorer):
+        return sorted(
+            ann_query(kept, queries, query_ids=ids, scorer=scorer, **kw)
+            .collect()
+        )
+
+    results = {s: run(qarr, qids, s) for s in ("auto", "batch")}
+    if rerank != "stored":
+        with pytest.MonkeyPatch.context() as mp:
+            for bound in (float("inf"), 0):
+                mp.setattr(ivf, "_SINGLE_TASK_MAX_PAIRS", bound)
+                results[f"sql-{bound}"] = run(qarr, qids, "sql")
+    results["per-query"] = sorted(
+        r for i in range(n_q) for r in run(qarr[i : i + 1], qids[i : i + 1], "auto")
+    )
+    want = results.pop("auto")
+    for name, got in results.items():
+        assert got == want, name
+
+
+def test_auto_scorer_switches_at_kernel_constant(model, emb, kept):
+    """scorer='auto' plans the sql scorer (no MapInPandas) just under
+    `_KERNEL_MIN_DOUBLES` ADC-table doubles and the NumPy kernel at it;
+    rerank='stored' always runs the kernel, and scorer='sql' with it
+    raises."""
+    from flechasdb_spark.plans import ivf
+
+    nprobe = 8
+    per_query = nprobe * CFG.num_divisions * CFG.num_codes
+    n_q = -(-ivf._KERNEL_MIN_DOUBLES // per_query)
+    qarr = np.random.RandomState(0).randn(n_q, 64)
+    under = ann_query(model, qarr[: n_q - 1], k=5, nprobe=nprobe)
+    assert "MapInPandas" not in "\n".join(_plan_lines(under))
+    at = ann_query(model, qarr, k=5, nprobe=nprobe)
+    assert "MapInPandas" in "\n".join(_plan_lines(at))
+    qs = [(0, [0.0] * 64)]
+    stored = ann_query(kept, qs, k=5, nprobe=2, rerank="stored")
+    assert "MapInPandas" in "\n".join(_plan_lines(stored))
+    with pytest.raises(ValueError, match="scorer"):
+        ann_query(kept, qs, k=5, nprobe=2, rerank="stored", scorer="sql")
