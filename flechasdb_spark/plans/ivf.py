@@ -23,6 +23,14 @@ executes with WindowGroupLimit — partial top-k before the shuffle
 (Q4+Q5, the reference's NBest merge) — a radius filter, and the exact
 re-rank.
 
+A query the single-task plan would serve, with no ``where``, ``rerank``
+or ``round_to``, on a store opened with `load_index` from ``file:``,
+runs no Spark job at all (`_driver_served`), as the reference serves a
+query in one process (src/db/stored.rs:331-389): the driver reads the
+probed cells' files from Spark's own listing with pyarrow, scores them
+with the kernel's NumPy fold, cuts the tail in NumPy and returns the
+rows as one LocalRelation — the single-task plan's rows, bit for bit.
+
 Scale: probe list and ADC tables are O(Q * nprobe * D * C) — broadcast;
 the scan shuffles only k rows per (query, partition). The reference's
 async I/O-overlap machinery (A1) is Spark task parallelism.
@@ -30,12 +38,15 @@ async I/O-overlap machinery (A1) is Spark task parallelism.
 
 from __future__ import annotations
 
+import re
 import time
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 
 from flechasdb_spark.functions.linalg import (
     lit_double_matrix,
@@ -68,7 +79,9 @@ import weakref
 # so nothing persists across runs or reps — the collect still happens
 # inside every timed execution. (Caveat shared with Spark's own
 # file-index caching: re-collecting the SAME DataFrame object after its
-# underlying files were rewritten was never well-defined.)
+# underlying files were rewritten was never well-defined.) `load_index`
+# marks the encoded frame it returns with its packing mode ("packed"),
+# and `_store_cells` keeps that frame's file listing beside it.
 _PLAN_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
@@ -296,11 +309,13 @@ def cent_col_name(centroids: DataFrame) -> str:
     return "centroid" if "centroid" in centroids.columns else centroids.columns[-1]
 
 
-def _driver_frame(spark, columns: dict) -> DataFrame:
-    """A driver-built table (probe lists, ADC tables, query vectors) as
-    ONE Arrow table, column type from the NumPy dtype (int64 -> long,
-    int32 -> int, float64 -> double, float32 -> float) and nesting from
-    the shape: (n, m) is array<T>, (n, m, l) array<array<T>>. Spark
+def _driver_frame(spark, columns: dict, schema=None) -> DataFrame:
+    """A driver-built table (probe lists, ADC tables, query vectors,
+    driver-served results) as ONE Arrow table, column type from the
+    NumPy dtype (int64 -> long, int32 -> int, float64 -> double, float32
+    -> float) or from ``schema`` (a StructType, nullability included)
+    when given, and nesting from the shape: (n, m) is array<T>, (n, m,
+    l) array<array<T>>. Spark
     keeps a table under spark.sql.execution.arrow.localRelationThreshold
     (48 MB) as a LocalRelation, so its broadcast collects rows already
     in the JVM — a list of Python rows becomes a pickled RDD, and its
@@ -317,7 +332,7 @@ def _driver_frame(spark, columns: dict) -> DataFrame:
             offsets = np.arange(outer + 1, dtype=np.int32) * v.shape[axis]
             arr = pa.ListArray.from_arrays(pa.array(offsets), arr)
         arrays.append(arr)
-    return spark.createDataFrame(pa.table(arrays, names=list(columns)))
+    return spark.createDataFrame(pa.table(arrays, names=list(columns)), schema)
 
 
 def select_probes(
@@ -409,6 +424,7 @@ def _centroid_probes(
         rows.sort(key=lambda r: (qpos[r.query_id], r.probe_rank))
     pids = np.array([r.partition_id for r in rows], dtype=np.int64)
     cents = np.array([r[-1] for r in rows], dtype=np.float64)
+    cents = cents if len(rows) else np.empty((0, qarr.shape[-1]))
     if qarr.ndim != 2 or (len(cents) and qarr.shape[1] != cents.shape[1]):
         raise ValueError(
             f"query width {qarr.shape} != centroid width {cents.shape[-1]}"
@@ -614,8 +630,7 @@ def _sql_scored(
             "__tbl": tables,
         },
     )
-    pairs = len(probe_pid) * model.num_vectors / model.config.num_partitions
-    if pairs < _SINGLE_TASK_MAX_PAIRS:
+    if _single_task(model, len(probe_pid)):
         joined = candidates.coalesce(1).join(
             probes.coalesce(1).hint("shuffle_hash"), "partition_id"
         )
@@ -626,6 +641,97 @@ def _sql_scored(
         f"`{id_col}`",
         "partition_id",
         f"{_adc_score(model.config.num_divisions)} AS __score",
+    )
+
+
+def _single_task(model: IndexModel, n_probes: int) -> bool:
+    """Whether ``n_probes`` probes estimate fewer (probe, candidate)
+    pairs, probes x rows per cell, than `_SINGLE_TASK_MAX_PAIRS`."""
+    pairs = n_probes * model.num_vectors / model.config.num_partitions
+    return pairs < _SINGLE_TASK_MAX_PAIRS
+
+
+def _store_cells(model: IndexModel) -> dict | None:
+    """{partition_id: [local paths]} of the files Spark's scan of
+    ``model.encoded`` lists, memoised per frame, when that frame is the
+    one `load_index` returned for a ``file:`` store; else None."""
+    memo = _PLAN_MEMO.get(model.encoded)
+    if memo is None or "packed" not in memo:
+        return None
+    if "cells" not in memo:
+        cells = {}
+        for f in model.encoded.inputFiles():
+            url = urlparse(f)
+            cell = re.search(r"/partition_id=(\d+)/[^/]+$", url.path)
+            if url.scheme != "file" or cell is None:
+                cells = None
+                break
+            cells.setdefault(int(cell.group(1)), []).append(unquote(url.path))
+        memo["cells"] = cells
+    return memo["cells"]
+
+
+def _cell_codes(col, d: int, packed: str | None) -> np.ndarray:
+    """(rows, D) codes of a pyarrow-read cell: the ``codes`` lists, or a
+    packed store's ``codes_bin`` decoded as `unpack_codes_expr` does: hex
+    digit i is code i, so a "nibble" byte holds two codes, high first."""
+    if packed is None:
+        return col.combine_chunks().flatten().to_numpy().reshape(len(col), d)
+    width = d if packed == "byte" else (d + 1) // 2
+    b = np.frombuffer(b"".join(col.to_pylist()), np.uint8).reshape(len(col), width)
+    if packed == "nibble":
+        b = np.stack([b >> 4, b & 15], axis=-1).reshape(len(col), -1)
+    return b[:, :d]
+
+
+def _driver_served(
+    model: IndexModel, cells: dict, qids, qarr, nprobe, cut, radius, solo,
+    rank, mark,
+) -> DataFrame:
+    """`_search`'s unfiltered, unrounded sql result computed on the
+    driver, as the reference serves a query in one process: pyarrow
+    reads ``id`` and ``codes`` of the probed cells' listed ``cells``
+    files, `_adc_sums` scores every (probe, row), and NumPy cuts each
+    query's rows sorted by (score, id) to rank <= ``cut`` and score <=
+    ``radius``. The rows, their order and the schema are the
+    single-task plan's; the result is one LocalRelation, so collecting
+    it runs no Spark job. A listed file gone since the listing raises,
+    as Spark's scan of it does."""
+    import pyarrow.parquet as pq
+
+    probe_qidx, probe_pid, tables = _phase1(model, qarr, qids, nprobe, mark)
+    id_col, d = model.config.id_col, model.config.num_divisions
+    packed = _df_memo(model.encoded)["packed"]
+    qid = np.asarray(qids, dtype=np.int64)[probe_qidx]
+    # (query_id, id, partition_id, score) per (probe, file), from no rows
+    found = [(np.empty(0, np.int64),) * 2 + (np.empty(0, np.int32), np.empty(0))]
+    for pid in np.unique(probe_pid):
+        for f in cells.get(int(pid), ()):
+            t = pq.read_table(f, columns=[id_col, "codes_bin" if packed else "codes"])
+            ids = t.column(0).to_numpy()
+            codes = _cell_codes(t.column(1), d, packed)
+            for pi in np.flatnonzero(probe_pid == pid):
+                found.append((
+                    np.full(len(ids), qid[pi]), ids,
+                    np.full(len(ids), pid, np.int32), _adc_sums(tables[pi], codes),
+                ))
+    q, ids, pids, s = (np.concatenate(c) for c in zip(*found))
+    order = np.lexsort((ids, s, q))
+    q, ids, pids, s = q[order], ids[order], pids[order], s[order]
+    ranks = (np.arange(len(q)) - np.searchsorted(q, q) + 1).astype(np.int32)
+    keep = ranks <= (np.inf if cut is None else cut)
+    keep &= s <= (np.inf if radius is None else radius)
+    cols = [
+        *([] if solo else [("query_id", q, LongType())]),
+        ("vector_id", ids, model.encoded.schema[id_col].dataType),
+        ("partition_id", pids, IntegerType()),
+        ("squared_distance", s, DoubleType()),
+        *([("rank", ranks, IntegerType())] if rank else []),
+    ]
+    return _driver_frame(
+        model.encoded.sparkSession,
+        {n: v[keep] for n, v, _ in cols},
+        StructType([StructField(n, t, n != "rank") for n, _, t in cols]),
     )
 
 
@@ -714,6 +820,13 @@ def _left_fold(terms: np.ndarray) -> np.ndarray:
     return acc
 
 
+def _adc_sums(table: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """ADC distances of one cell's (rows, D) ``codes`` against one
+    probe's (D, C) ``table``: the gather of `_adc_score` summed as its
+    left fold. The one NumPy scorer of the kernel and the driver path."""
+    return _left_fold(table[np.arange(len(table)), codes])
+
+
 def _kernel_scored(
     model: IndexModel, candidates: DataFrame, qids, qarr, probe_qidx,
     probe_pid, tables, cut, radius, slack, stored,
@@ -734,7 +847,6 @@ def _kernel_scored(
     shipped = candidates.sparkSession.sparkContext.broadcast(
         (tables, by_pid, qarr if stored else None)
     )
-    div = np.arange(model.config.num_divisions)
 
     def score(batches):
         t, probes, qv = shipped.value
@@ -746,7 +858,7 @@ def _kernel_scored(
                 if qv is not None:
                     vecs = np.vstack(grp[vec_col].to_numpy()).astype(np.float64)
                 for query_id, qi, pi in probes.get(int(pid), ()):
-                    s = _left_fold(t[pi, div, codes])
+                    s = _adc_sums(t[pi], codes)
                     keep = np.arange(len(s))
                     if radius is not None:
                         keep = keep[s <= radius + slack]
@@ -823,7 +935,8 @@ def _search(
     caps each query to its nearest. The result is (vector_id,
     partition_id, squared_distance) for a solo query, else (query_id,
     vector_id, partition_id, squared_distance[, rank]); an empty batch
-    returns that schema."""
+    returns that schema. A single-task query with none of ``where``,
+    ``rerank`` and ``round_to`` on a loaded store is `_driver_served`."""
     id_col, vec_col = model.config.id_col, model.config.vec_col
     qids, qarr = _query_batch(model, queries, query_ids)
     stored = isinstance(rerank, str)
@@ -860,6 +973,15 @@ def _search(
         exact_radius = float(radius)
         slack = float(rerank_slack) if rerank is not None else 1.0
         radius = exact_radius * slack
+    driven = rerank is None and where is None and round_to is None
+    if driven and scorer != "batch" and _single_task(model, len(qids) * nprobe):
+        cells = _store_cells(model)
+        if cells is not None:
+            out = _driver_served(
+                model, cells, qids, qarr, nprobe, cut, radius, solo, rank, mark
+            )
+            mark("plan_built")
+            return out
     scored = _scored(
         model, qids, qarr, nprobe, where, scorer, stored, cut, radius,
         round_to, mark,
@@ -952,11 +1074,27 @@ def ann_query(
     3 alternating pairs (median 8.7 vs 7.8 s), so the bound stays at
     100k, about 100 probes at D=16, C=64.
 
+    Driver path: a query under `_SINGLE_TASK_MAX_PAIRS`, scorer "auto"
+    or "sql", no ``where``, ``rerank`` or ``round_to``, on the
+    ``model.encoded`` that `load_index` returned for a ``file:`` store,
+    runs no Spark job. The driver reads ``id`` and ``codes`` of the
+    probed cells' files, as Spark's scan of that frame lists them, with
+    pyarrow, scores them with the kernel's NumPy left fold and cuts the
+    top-k in NumPy; the result is one LocalRelation holding the single-task
+    plan's rows, in its order and schema. It is materialised when
+    ``ann_query`` is called, not when an action runs on it, so a cell
+    file removed after the model was loaded raises here, as Spark's scan
+    raises at the action. Any other model, a built or derived one
+    included, keeps the Spark plans.
+
     ``on_event(stage, seconds)`` mirrors the reference's query event
     handlers (/root/reference/src/db/stored.rs:513-532): fired after the
-    driver phases ``select_probes`` and ``adc_tables`` and after the
-    distributed ``plan_built`` — instrumentation only (the scan itself
-    is lazy; time it at the action with Spark's UI/listeners).
+    driver phases ``select_probes`` and ``adc_tables`` and after
+    ``plan_built`` — instrumentation only. On the Spark plans the scan
+    is lazy (time it at the action with Spark's UI/listeners); on the
+    driver path ``plan_built`` includes the scan, scoring and top-k, so
+    a caller timing plan and action (perfbench's ``ivf.plan_s`` and
+    ``ivf.execute_s``) sees the plan grow and the action shrink.
 
     ``rerank``: optional DataFrame holding the ORIGINAL vectors
     (cfg.id_col, cfg.vec_col). When given, the top ``k * rerank_factor``
@@ -1009,8 +1147,11 @@ def ann_range_query_batch(
     plus ``rank`` when ``limit_per_query`` caps a pathological radius
     to each query's nearest matches.
 
-    Probe selection, the huge-P lazy-centroid mode, the scorers and
-    the query-id checks are `ann_query`'s. Phase 2 scans ONLY the
+    Probe selection, the huge-P lazy-centroid mode, the scorers, the
+    driver path and the query-id checks are `ann_query`'s: a small
+    query with no ``where``, ``rerank`` or ``round_to`` on a loaded
+    ``file:`` store is computed on the driver when this is called, not
+    when an action runs. Phase 2 scans ONLY the
     probed ``partition_id=`` directories (the literal isin lands in the
     Parquet PartitionFilters at rest), and the radius cut happens AT
     THE SCAN — a codegen'd filter over the sql scorer's ADC sum, or
@@ -1060,7 +1201,10 @@ def ann_range_query(
     squared_distance)`` ascending by (rounded) distance with id
     tie-break; ``limit`` is an ordered safety cap (keeps the nearest);
     ``where`` pre-filters before scoring; ``rerank``/``rerank_slack``
-    refine to EXACT radius semantics (see the batch form)."""
+    refine to EXACT radius semantics (see the batch form). Without
+    ``where``, ``rerank`` and ``round_to``, on a loaded ``file:``
+    store, the query runs on the driver when this is called (see
+    `ann_query`)."""
     return _search(
         model, [(0, query_vector)], None, nprobe, round_to, where, scorer,
         rerank, solo=True, radius=radius, limit=limit,

@@ -212,6 +212,8 @@ def load_index(
         d, c, w
     )
 
+    from flechasdb_spark.plans.ivf import _df_memo
+
     encoded = spark.read.parquet(os.path.join(path, "index")).withColumn(
         "partition_id", F.col("partition_id").cast("int")
     )
@@ -226,6 +228,9 @@ def load_index(
                 "codes_bin", d, manifest["packed"]
             ).cast("array<int>"),
         ).drop("codes_bin")
+    # the frame serves small unfiltered queries on the driver
+    # (plans.ivf._driver_served), which must decode codes_bin the same way
+    _df_memo(encoded)["packed"] = manifest.get("packed")
     cfg = IndexConfig(
         num_partitions=p,
         num_divisions=d,

@@ -771,8 +771,10 @@ def test_packed_pq_save_load_roundtrip_and_query_equality(
         for r in ann_range_query(lk, qv, radius=2.0, nprobe=4, round_to=4).collect()
     )
     assert va == vb
+    # a rounded query keeps the Spark scan (an unrounded one is served
+    # on the driver, from the probed cells' files only)
     plan = (
-        ann_query(lk, qs[:1], k=5, nprobe=2)
+        ann_query(lk, qs[:1], k=5, nprobe=2, round_to=4)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -815,39 +817,51 @@ def _has_literal_probe_cut(lines) -> bool:
     )
 
 
+def _jobs_of_collect(spark, df, group: str):
+    """(rows, Spark job ids) of ``df.collect()``, run under job group
+    ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "ivfpq plan-shape gate")
+    try:
+        rows = df.collect()
+        return rows, sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup(f"{group}-done", "")
+
+
 def test_small_sql_query_runs_as_one_task(model, emb, spark, tmp_path_factory):
-    """A sql-scored query under the single-task bound coalesces the
-    pruned scan and the probe LocalRelation to one partition each and
-    hash-joins them: the plan has no exchange of any kind, keeps the
+    """A filtered sql-scored query under the single-task bound coalesces
+    the pruned scan and the probe LocalRelation to one partition each
+    and hash-joins them: the plan has no exchange of any kind, keeps the
     literal probe cut in the PartitionFilters, and the whole query is
-    ONE Spark job."""
+    ONE Spark job. The same query unfiltered, on a loaded store, is
+    served on the driver: its plan is one LocalTableScan, and collecting
+    it runs no Spark job."""
     from flechasdb_spark.plans import ivf
 
     loaded = _saved_index(model, spark, tmp_path_factory, "one_task")
     pairs = 2 * loaded.num_vectors / loaded.config.num_partitions
     assert pairs < ivf._SINGLE_TASK_MAX_PAIRS
     qv = [float(x) for x in emb.where(F.col("vec_id") == 3).first()["embedding"]]
-    sc = spark.sparkContext
-    for where in (None, "label = 1"):
-        out = ann_query(loaded, [(3, qv)], k=5, nprobe=2, where=where, scorer="sql")
-        lines = _plan_lines(out)
-        plan = "\n".join(lines)
-        assert "Exchange" not in plan, plan
-        joins = [i for i, ln in enumerate(lines) if "ShuffledHashJoin" in ln]
-        assert len(joins) == 1, plan
-        below = [ln.lstrip(" :+-") for ln in lines[joins[0] + 1 :]]
-        assert sum(b.startswith("Coalesce 1") for b in below) == 2, plan
-        assert "WindowGroupLimit" in plan, plan
-        assert _has_literal_probe_cut(lines), plan
-        group = f"ivfpq-one-task-{where is not None}"
-        sc.setJobGroup(group, "single-task query gate")
-        try:
-            rows = out.collect()
-            jobs = sc.statusTracker().getJobIdsForGroup(group)
-        finally:
-            sc.setJobGroup(f"{group}-done", "")
-        assert len(rows) == 5
-        assert len(jobs) == 1, jobs
+    out = ann_query(loaded, [(3, qv)], k=5, nprobe=2, where="label = 1", scorer="sql")
+    lines = _plan_lines(out)
+    plan = "\n".join(lines)
+    assert "Exchange" not in plan, plan
+    joins = [i for i, ln in enumerate(lines) if "ShuffledHashJoin" in ln]
+    assert len(joins) == 1, plan
+    below = [ln.lstrip(" :+-") for ln in lines[joins[0] + 1 :]]
+    assert sum(b.startswith("Coalesce 1") for b in below) == 2, plan
+    assert "WindowGroupLimit" in plan, plan
+    assert _has_literal_probe_cut(lines), plan
+    rows, jobs = _jobs_of_collect(spark, out, "ivfpq-one-task-True")
+    assert len(rows) == 5
+    assert len(jobs) == 1, jobs
+
+    out = ann_query(loaded, [(3, qv)], k=5, nprobe=2, scorer="sql")
+    assert _served_on_driver(out), _plan_lines(out)
+    rows, jobs = _jobs_of_collect(spark, out, "ivfpq-one-task-False")
+    assert len(rows) == 5
+    assert len(jobs) == 0, jobs
 
 
 def test_sql_probe_table_is_local_relation(model, emb, spark, tmp_path_factory):
@@ -916,6 +930,155 @@ def test_single_task_plan_matches_broadcast_plan(
     broadcast = results()
     assert all(single), single
     assert single == broadcast
+
+
+@pytest.fixture(scope="module")
+def stores(model, emb, spark, tmp_path_factory):
+    """Loaded stores of the fixture index: plain, packed, plain with
+    lazy centroids, and an OPQ (balance_dims) index saved plain."""
+    import dataclasses
+
+    plain = str(tmp_path_factory.mktemp("st_plain"))
+    packed = str(tmp_path_factory.mktemp("st_packed"))
+    opq = str(tmp_path_factory.mktemp("st_opq"))
+    save_index(model, plain)
+    save_index(model, packed, pack_codes=True)
+    opq_model = build_index(emb, dataclasses.replace(CFG, balance_dims=True))
+    assert opq_model.dim_perm is not None
+    save_index(opq_model, opq)
+    return {
+        "plain": load_index(spark, plain),
+        "packed": load_index(spark, packed),
+        "lazy": load_index(spark, plain, collect_centroids=False),
+        "opq": load_index(spark, opq),
+    }
+
+
+def _served_on_driver(df) -> bool:
+    lines = _plan_lines(df)
+    return len(lines) == 1 and lines[0].startswith("LocalTableScan")
+
+
+def test_driver_path_matches_single_task_plan(stores, emb):
+    """A small unfiltered query on a loaded store is served on the driver
+    (a LocalTableScan-only plan) and returns the single-task Spark plan's
+    rows bit for bit, unrounded, in the same order (the unlimited batch
+    radius form, whose Spark order is the scan's, compared sorted),
+    with an equal schema, nullability included: every entry point, Q 1
+    and 5, nprobe 0 and 4, k above the probed rows, on plain, packed,
+    OPQ and lazy-centroid stores."""
+    from flechasdb_spark.plans import ivf
+    from flechasdb_spark.plans.ivf import ann_range_query, ann_range_query_batch
+
+    rows = emb.where(F.col("vec_id").isin(3, 9, 21, 40, 55)).orderBy("vec_id").collect()
+    qids = [int(r.vec_id) for r in rows]
+    qarr = np.array([r.embedding for r in rows], dtype=np.float64)
+
+    def forms(store, n_q, nprobe):
+        q, ids = qarr[:n_q], qids[:n_q]
+        yield "top-k", lambda: ann_query(store, q, k=1000, nprobe=nprobe, query_ids=ids)
+        for limit in (None, 3):
+            yield f"radius-batch-{limit}", lambda limit=limit: ann_range_query_batch(
+                store, q, radius=4.0, nprobe=nprobe, query_ids=ids,
+                limit_per_query=limit,
+            )
+            if n_q == 1:
+                yield f"radius-{limit}", lambda limit=limit: ann_range_query(
+                    store, list(q[0]), radius=4.0, nprobe=nprobe, limit=limit
+                )
+
+    compared = 0
+    for name, store in stores.items():
+        for n_q, nprobe in itertools.product((1, 5), (0, 4)):
+            for form, call in forms(store, n_q, nprobe):
+                driver = call()
+                assert _served_on_driver(driver), (name, form)
+                with pytest.MonkeyPatch.context() as mp:
+                    mp.setattr(ivf, "_store_cells", lambda model: None)
+                    spark_plan = call()
+                # Spark folds an empty probe cut to a LocalTableScan too
+                assert nprobe == 0 or not _served_on_driver(spark_plan), form
+                got, want = driver.collect(), spark_plan.collect()
+                if form == "radius-batch-None":
+                    got, want = sorted(got), sorted(want)
+                assert got == want, (name, n_q, nprobe, form)
+                assert driver.schema == spark_plan.schema, (name, form)
+                assert bool(got) == (nprobe > 0), (name, form)
+                compared += 1
+    assert compared == 4 * 2 * 2 * 3 + 4 * 2 * 2
+
+
+def test_driver_path_fires_on_event(stores, emb):
+    """On the driver path on_event still fires select_probes, adc_tables
+    and plan_built, in that order; plan_built then includes the scan."""
+    qv = [float(x) for x in emb.where(F.col("vec_id") == 3).first()["embedding"]]
+    events = []
+    out = ann_query(
+        stores["plain"], [(3, qv)], k=5, nprobe=4,
+        on_event=lambda stage, seconds: events.append((stage, seconds)),
+    )
+    assert _served_on_driver(out)
+    assert [e[0] for e in events] == ["select_probes", "adc_tables", "plan_built"]
+    assert all(e[1] >= 0 for e in events)
+
+
+def test_cell_codes_decode_like_unpack_codes_expr(spark, tmp_path):
+    """The driver path's pyarrow decode of ``codes_bin`` equals Spark's
+    `unpack_codes_expr` in both packing modes, for an odd D."""
+    import pyarrow.parquet as pq
+
+    from flechasdb_spark.operators.sq import pack_codes_expr, unpack_codes_expr
+    from flechasdb_spark.plans.ivf import _cell_codes
+
+    rng = np.random.RandomState(4)
+    for mode, levels in (("nibble", 16), ("byte", 256)):
+        codes = rng.randint(0, levels, size=(40, 7))
+        df = spark.createDataFrame(
+            [(i, [int(c) for c in row]) for i, row in enumerate(codes)],
+            "id long, codes array<int>",
+        ).select("id", pack_codes_expr("codes", mode).alias("codes_bin"))
+        path = str(tmp_path / mode)
+        df.coalesce(1).write.parquet(path)
+        want = {
+            r.id: list(r.c)
+            for r in spark.read.parquet(path)
+            .select("id", unpack_codes_expr("codes_bin", 7, mode).alias("c"))
+            .collect()
+        }
+        t = pq.read_table(path, columns=["id", "codes_bin"])
+        got = _cell_codes(t.column(1), 7, mode)
+        assert got.shape == (40, 7)
+        assert {int(i): list(g) for i, g in zip(t.column(0).to_pylist(), got)} == want
+        assert want == {i: list(row) for i, row in enumerate(codes)}
+
+
+def test_stale_listing_raises_on_both_paths(model, emb, spark, tmp_path_factory):
+    """A model loaded before upsert_vectors rewrote its cells lists
+    files that are gone: a query through the driver path and through the
+    forced single-task Spark plan both raise, neither returns fewer rows;
+    the store loaded again serves the same rows on both paths."""
+    from flechasdb_spark.operators.maintenance import upsert_vectors
+    from flechasdb_spark.plans import ivf
+
+    path = str(tmp_path_factory.mktemp("stale"))
+    save_index(model, path)
+    stale = load_index(spark, path)
+    qv = np.array([emb.where(F.col("vec_id") == 3).first()["embedding"]])
+    before = ann_query(stale, qv, k=1000, nprobe=8).collect()
+    moved = emb.where(F.col("vec_id") < 40).withColumn(
+        "embedding", F.transform("embedding", lambda x: x * 1.01)
+    )
+    assert upsert_vectors(spark, stale, path, moved)
+    with pytest.raises(FileNotFoundError):
+        ann_query(stale, qv, k=1000, nprobe=8).collect()
+    fresh = load_index(spark, path)
+    after = ann_query(fresh, qv, k=1000, nprobe=8).collect()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ivf, "_store_cells", lambda model: None)
+        with pytest.raises(Exception, match="FILE_NOT_EXIST"):
+            ann_query(stale, qv, k=1000, nprobe=8).collect()
+        assert ann_query(fresh, qv, k=1000, nprobe=8).collect() == after
+    assert len(after) == len(before) == model.num_vectors
 
 
 def test_sql_scores_equal_left_fold_of_adc_tables(model, emb, spark, tmp_path_factory):
@@ -1001,6 +1164,43 @@ def test_negative_nprobe_raises(model, emb, spark, tmp_path_factory):
             call()
 
 
+def test_nprobe_zero_returns_no_rows(stores, emb):
+    """nprobe=0 returns no rows, with the schema of the eager form, on
+    every family with collected and with distributed probe selection:
+    PQ loaded eagerly and with lazy centroids (filtered, the Spark plan,
+    and unfiltered, the driver path), SQ and BQ batch forms."""
+    from flechasdb_spark.plans.ivf import ann_range_query, ann_range_query_batch
+    from flechasdb_spark.plans.ivfbq import ivfbq_query_batch
+    from flechasdb_spark.plans.ivfsq import ivfsq_query_batch
+
+    sq, bq = _sq_bq_models(emb)
+    qv = [float(x) for x in emb.where(F.col("vec_id") == 3).first()["embedding"]]
+    calls = {
+        f"pq-{where}": lambda lazy, where=where: ann_query(
+            stores["lazy" if lazy else "plain"], [(3, qv)], k=3, nprobe=0,
+            where=where,
+        )
+        for where in (None, "label = 1")
+    }
+    calls["pq-range-batch"] = lambda lazy: ann_range_query_batch(
+        stores["lazy" if lazy else "plain"], [(3, qv)], radius=2.0, nprobe=0,
+        where="label = 1",
+    )
+    calls["pq-range"] = lambda lazy: ann_range_query(
+        stores["lazy" if lazy else "plain"], qv, radius=2.0, nprobe=0
+    )
+    calls["sq"] = lambda lazy: ivfsq_query_batch(
+        sq, [(3, qv)], k=3, nprobe=0, collect_centroids=not lazy
+    )
+    calls["bq"] = lambda lazy: ivfbq_query_batch(
+        bq, [qv], 3, 0, collect_centroids=not lazy
+    )
+    for name, call in calls.items():
+        eager, lazy = call(False), call(True)
+        assert eager.collect() == lazy.collect() == [], name
+        assert eager.schema == lazy.schema, name
+
+
 def test_duplicate_or_missing_query_ids_raise(model, emb):
     """Two queries sharing an id, or a query_ids list whose length is
     not the query count, raise ValueError on every family's batch
@@ -1054,6 +1254,17 @@ def first_vectors(emb):
     return np.array([r.embedding for r in rows], dtype=np.float64)
 
 
+@pytest.fixture(scope="module")
+def kept_stores(kept, spark, tmp_path_factory):
+    """`kept` saved plain and with pack_codes=True, each loaded back."""
+    out = {}
+    for name, pack in (("plain", False), ("packed", True)):
+        path = str(tmp_path_factory.mktemp(f"kept_{name}"))
+        save_index(kept, path, pack_codes=pack)
+        out[name] = load_index(spark, path)
+    return out
+
+
 @settings(max_examples=12, deadline=None)
 @given(
     n_q=st.integers(1, 6),
@@ -1065,11 +1276,14 @@ def first_vectors(emb):
     seed=st.integers(0, 2**16),
 )
 def test_pq_scorers_plans_and_batching_return_the_same_bits(
-    kept, emb, first_vectors, n_q, k, nprobe, where, rerank, round_to, seed
+    kept, kept_stores, emb, first_vectors, n_q, k, nprobe, where, rerank,
+    round_to, seed,
 ):
     """Forced sql (under both single-task plans), forced kernel and
     auto return bit-identical rows, and a batch returns exactly the
-    rows of its queries run one at a time."""
+    rows of its queries run one at a time. On `kept` saved plain and
+    packed, the driver path returns the forced single-task plan's rows,
+    unrounded, in order."""
     from flechasdb_spark.plans import ivf
 
     rng = np.random.RandomState(seed)
@@ -1099,6 +1313,13 @@ def test_pq_scorers_plans_and_batching_return_the_same_bits(
     want = results.pop("auto")
     for name, got in results.items():
         assert got == want, name
+    for name, store in kept_stores.items():
+        driver = ann_query(store, qarr, k=k, nprobe=nprobe, query_ids=qids)
+        assert _served_on_driver(driver), name
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(ivf, "_store_cells", lambda model: None)
+            single = ann_query(store, qarr, k=k, nprobe=nprobe, query_ids=qids)
+        assert driver.collect() == single.collect(), name
 
 
 def test_auto_scorer_switches_at_kernel_constant(model, emb, kept):
