@@ -23,13 +23,14 @@ executes with WindowGroupLimit — partial top-k before the shuffle
 (Q4+Q5, the reference's NBest merge) — a radius filter, and the exact
 re-rank.
 
-A query the single-task plan would serve, with no ``where``, ``rerank``
-or ``round_to``, on a store opened with `load_index` from ``file:``,
-runs no Spark job at all (`_driver_served`), as the reference serves a
-query in one process (src/db/stored.rs:331-389): the driver reads the
-probed cells' files from Spark's own listing with pyarrow, scores them
-with the kernel's NumPy fold, cuts the tail in NumPy and returns the
-rows as one LocalRelation — the single-task plan's rows, bit for bit.
+A query under `_DRIVER_MAX_PAIRS` estimated pairs, with no ``where``,
+``rerank`` or ``round_to``, on a store opened with `load_index` from
+``file:``, runs no Spark job at all (`_driver_served`), as the reference
+serves a query in one process (src/db/stored.rs:331-389): the driver
+reads the probed cells' files from Spark's own listing with pyarrow,
+scores each file once for all of its probing queries with the kernel's
+NumPy fold and pre-cut, cuts the tail in NumPy and returns the rows as
+one LocalRelation — the Spark plans' rows, bit for bit.
 
 Scale: probe list and ADC tables are O(Q * nprobe * D * C) — broadcast;
 the scan shuffles only k rows per (query, partition). The reference's
@@ -549,6 +550,15 @@ def _adc_score(d: int) -> str:
 _SINGLE_TASK_MAX_PAIRS = 32_000
 
 
+# Bound on the same estimated pair count under which `_search` serves an
+# unfiltered query on a loaded store on the driver (`_driver_served`).
+# Measured against the kernel and the broadcast sql plan up to 10M pairs
+# (see `ann_query`), the driver was faster at every size, so the bound is
+# a driver-memory budget: pairs are at least the rows read, and the rows
+# the pre-cut keeps, 28 B each, at most the pairs (about 120 MB here).
+_DRIVER_MAX_PAIRS = 1 << 22
+
+
 # ADC-table doubles, Q * nprobe * D * C, from which scorer="auto" runs
 # the NumPy kernel instead of the sql plan (see `ann_query` for why it
 # sits below the warm crossover).
@@ -630,7 +640,7 @@ def _sql_scored(
             "__tbl": tables,
         },
     )
-    if _single_task(model, len(probe_pid)):
+    if _pairs(model, len(probe_pid)) < _SINGLE_TASK_MAX_PAIRS:
         joined = candidates.coalesce(1).join(
             probes.coalesce(1).hint("shuffle_hash"), "partition_id"
         )
@@ -644,11 +654,11 @@ def _sql_scored(
     )
 
 
-def _single_task(model: IndexModel, n_probes: int) -> bool:
-    """Whether ``n_probes`` probes estimate fewer (probe, candidate)
-    pairs, probes x rows per cell, than `_SINGLE_TASK_MAX_PAIRS`."""
-    pairs = n_probes * model.num_vectors / model.config.num_partitions
-    return pairs < _SINGLE_TASK_MAX_PAIRS
+def _pairs(model: IndexModel, n_probes: int) -> float:
+    """The estimated (probe, candidate) pairs of ``n_probes`` probes,
+    probes x rows per cell: what `_SINGLE_TASK_MAX_PAIRS` and
+    `_DRIVER_MAX_PAIRS` bound."""
+    return n_probes * model.num_vectors / model.config.num_partitions
 
 
 def _store_cells(model: IndexModel) -> dict | None:
@@ -674,11 +684,21 @@ def _store_cells(model: IndexModel) -> dict | None:
 def _cell_codes(col, d: int, packed: str | None) -> np.ndarray:
     """(rows, D) codes of a pyarrow-read cell: the ``codes`` lists, or a
     packed store's ``codes_bin`` decoded as `unpack_codes_expr` does: hex
-    digit i is code i, so a "nibble" byte holds two codes, high first."""
+    digit i is code i, so a "nibble" byte holds two codes, high first.
+    Every ``codes_bin`` value has the same width, so the values are one
+    slice of the Arrow value buffer, viewed without a Python object per
+    row."""
+    arr = col.combine_chunks()
     if packed is None:
-        return col.combine_chunks().flatten().to_numpy().reshape(len(col), d)
+        return arr.flatten().to_numpy().reshape(len(arr), d)
     width = d if packed == "byte" else (d + 1) // 2
-    b = np.frombuffer(b"".join(col.to_pylist()), np.uint8).reshape(len(col), width)
+    if not len(arr):
+        return np.empty((0, d), np.uint8)
+    _, offsets, values = arr.buffers()
+    wide = arr.type.equals("large_binary")
+    bounds = np.frombuffer(offsets, np.int64 if wide else np.int32)
+    first, last = bounds[arr.offset], bounds[arr.offset + len(arr)]
+    b = np.frombuffer(values, np.uint8)[first:last].reshape(len(arr), width)
     if packed == "nibble":
         b = np.stack([b >> 4, b & 15], axis=-1).reshape(len(col), -1)
     return b[:, :d]
@@ -691,30 +711,29 @@ def _driver_served(
     """`_search`'s unfiltered, unrounded sql result computed on the
     driver, as the reference serves a query in one process: pyarrow
     reads ``id`` and ``codes`` of the probed cells' listed ``cells``
-    files, `_adc_sums` scores every (probe, row), and NumPy cuts each
-    query's rows sorted by (score, id) to rank <= ``cut`` and score <=
-    ``radius``. The rows, their order and the schema are the
-    single-task plan's; the result is one LocalRelation, so collecting
-    it runs no Spark job. A listed file gone since the listing raises,
-    as Spark's scan of it does."""
+    files, `_cell_hits` scores each file once for all of its probing
+    queries and keeps the kernel's per-probe pre-cut, and NumPy cuts
+    each query's rows sorted by (score, id) to rank <= ``cut`` and
+    score <= ``radius``. The rows, their order and the schema are the
+    Spark plans'; the result is one LocalRelation, so collecting it runs
+    no Spark job. A listed file gone since the listing raises, as
+    Spark's scan of it does."""
     import pyarrow.parquet as pq
 
     probe_qidx, probe_pid, tables = _phase1(model, qarr, qids, nprobe, mark)
     id_col, d = model.config.id_col, model.config.num_divisions
     packed = _df_memo(model.encoded)["packed"]
     qid = np.asarray(qids, dtype=np.int64)[probe_qidx]
-    # (query_id, id, partition_id, score) per (probe, file), from no rows
+    # (query_id, id, partition_id, score) per (cell, file), from no rows
     found = [(np.empty(0, np.int64),) * 2 + (np.empty(0, np.int32), np.empty(0))]
     for pid in np.unique(probe_pid):
+        pis = np.flatnonzero(probe_pid == pid)
         for f in cells.get(int(pid), ()):
             t = pq.read_table(f, columns=[id_col, "codes_bin" if packed else "codes"])
             ids = t.column(0).to_numpy()
             codes = _cell_codes(t.column(1), d, packed)
-            for pi in np.flatnonzero(probe_pid == pid):
-                found.append((
-                    np.full(len(ids), qid[pi]), ids,
-                    np.full(len(ids), pid, np.int32), _adc_sums(tables[pi], codes),
-                ))
+            p, r, s = _cell_hits(tables, pis, codes, cut, radius, 0.0)
+            found.append((qid[pis[p]], ids[r], np.full(len(r), pid, np.int32), s))
     q, ids, pids, s = (np.concatenate(c) for c in zip(*found))
     order = np.lexsort((ids, s, q))
     q, ids, pids, s = q[order], ids[order], pids[order], s[order]
@@ -820,11 +839,43 @@ def _left_fold(terms: np.ndarray) -> np.ndarray:
     return acc
 
 
-def _adc_sums(table: np.ndarray, codes: np.ndarray) -> np.ndarray:
-    """ADC distances of one cell's (rows, D) ``codes`` against one
-    probe's (D, C) ``table``: the gather of `_adc_score` summed as its
-    left fold. The one NumPy scorer of the kernel and the driver path."""
-    return _left_fold(table[np.arange(len(table)), codes])
+def _adc_sums(tables: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """(probes, rows) ADC distances of one cell's (rows, D) ``codes``
+    against its probes' (probes, D, C) ``tables``: the gather of
+    `_adc_score` summed as its left fold from 0.0, one division at a
+    time for every probe at once, so each sum is bit-identical to the
+    sql plan's."""
+    acc = np.zeros((len(tables), len(codes)))
+    for j in range(codes.shape[1]):
+        acc += np.take(tables[:, j], codes[:, j], axis=1)
+    return acc
+
+
+# Score-matrix elements, probes x rows, `_cell_hits` holds at once (8 MB)
+_CELL_CHUNK = 1 << 20
+
+
+def _cell_hits(tables, pis, codes, cut, radius, slack):
+    """(positions into ``pis``, row positions, scores) of the (probe,
+    row) pairs of one cell's (rows, D) ``codes``, scored by `_adc_sums`
+    against the probes ``tables[pis]``, that can reach the result: ADC
+    score <= ``radius`` and, with ``cut``, each probe's ``cut`` nearest
+    plus their ties, both widened by ``slack``. Probe-major, rows in
+    cell order. The one scorer and pre-cut of the kernel and the driver
+    path; probes are scored in chunks of at most `_CELL_CHUNK` pairs."""
+    step = max(1, _CELL_CHUNK // max(1, len(codes)))
+    bound = np.inf if radius is None else radius + slack
+    out = [(np.empty(0, np.int64),) * 2 + (np.empty(0),)]
+    for lo in range(0, len(pis), step):
+        s = _adc_sums(tables[pis[lo : lo + step]], codes)
+        keep = s <= bound
+        if cut and s.shape[1] > cut:
+            inside = np.where(keep, s, np.inf)
+            worst = np.partition(inside, cut - 1, axis=1)[:, cut - 1 : cut]
+            keep &= s <= worst + slack
+        p, r = np.nonzero(keep)
+        out.append((p + lo, r, s[p, r]))
+    return tuple(np.concatenate(c) for c in zip(*out))
 
 
 def _kernel_scored(
@@ -841,9 +892,13 @@ def _kernel_scored(
     the squared L2 of each kept row's stored vector (``vec_col``) to
     its float64 query, for the fused re-rank."""
     id_col, vec_col = model.config.id_col, model.config.vec_col
-    by_pid: dict[int, list[tuple[int, int, int]]] = {}
-    for i, (qi, pid) in enumerate(zip(probe_qidx, probe_pid)):
-        by_pid.setdefault(int(pid), []).append((qids[qi], int(qi), i))
+    qidx = np.asarray(probe_qidx)
+    qid = np.asarray(qids, dtype=np.int64)[qidx]
+    # {partition_id: (query ids, query positions, probe positions)}
+    by_pid = {}
+    for pid in np.unique(probe_pid):
+        pis = np.flatnonzero(probe_pid == pid)
+        by_pid[int(pid)] = (qid[pis], qidx[pis], pis)
     shipped = candidates.sparkSession.sparkContext.broadcast(
         (tables, by_pid, qarr if stored else None)
     )
@@ -853,30 +908,24 @@ def _kernel_scored(
         for pdf in batches:
             outs = []
             for pid, grp in pdf.groupby("partition_id"):
+                if int(pid) not in probes:
+                    continue
+                query_id, qi, pis = probes[int(pid)]
                 codes = np.vstack(grp["codes"].to_numpy())
-                ids = grp[id_col].to_numpy()
+                p, r, s = _cell_hits(t, pis, codes, cut, radius, slack)
+                if not len(r):
+                    continue
+                cols = {
+                    "query_id": query_id[p],
+                    id_col: grp[id_col].to_numpy()[r],
+                    "partition_id": int(pid),
+                    "__score": s,
+                }
                 if qv is not None:
-                    vecs = np.vstack(grp[vec_col].to_numpy()).astype(np.float64)
-                for query_id, qi, pi in probes.get(int(pid), ()):
-                    s = _adc_sums(t[pi], codes)
-                    keep = np.arange(len(s))
-                    if radius is not None:
-                        keep = keep[s <= radius + slack]
-                    if cut is not None and len(keep) > cut:
-                        worst = np.partition(s[keep], cut - 1)[cut - 1]
-                        keep = keep[s[keep] <= worst + slack]
-                    if not len(keep):
-                        continue
-                    cols = {
-                        "query_id": query_id,
-                        id_col: ids[keep],
-                        "partition_id": int(pid),
-                        "__score": s[keep],
-                    }
-                    if qv is not None:
-                        diff = vecs[keep] - qv[qi]
-                        cols["__exact"] = _left_fold(diff * diff)
-                    outs.append(pd.DataFrame(cols))
+                    vecs = np.vstack(grp[vec_col].to_numpy()[r]).astype(np.float64)
+                    diff = vecs - qv[qi[p]]
+                    cols["__exact"] = _left_fold(diff * diff)
+                outs.append(pd.DataFrame(cols))
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
@@ -935,8 +984,9 @@ def _search(
     caps each query to its nearest. The result is (vector_id,
     partition_id, squared_distance) for a solo query, else (query_id,
     vector_id, partition_id, squared_distance[, rank]); an empty batch
-    returns that schema. A single-task query with none of ``where``,
-    ``rerank`` and ``round_to`` on a loaded store is `_driver_served`."""
+    returns that schema. A query under `_DRIVER_MAX_PAIRS` with none of
+    ``where``, ``rerank`` and ``round_to`` on a loaded store is
+    `_driver_served`."""
     id_col, vec_col = model.config.id_col, model.config.vec_col
     qids, qarr = _query_batch(model, queries, query_ids)
     stored = isinstance(rerank, str)
@@ -974,7 +1024,8 @@ def _search(
         slack = float(rerank_slack) if rerank is not None else 1.0
         radius = exact_radius * slack
     driven = rerank is None and where is None and round_to is None
-    if driven and scorer != "batch" and _single_task(model, len(qids) * nprobe):
+    driven &= _pairs(model, len(qids) * nprobe) < _DRIVER_MAX_PAIRS
+    if driven and scorer != "batch":
         cells = _store_cells(model)
         if cells is not None:
             out = _driver_served(
@@ -1072,20 +1123,39 @@ def ann_query(
     doubles moved the cold nprobe=1 and 4 arms of perfbench's
     ingest-sweep sweep to sql, and that sweep then took longer in 3 of
     3 alternating pairs (median 8.7 vs 7.8 s), so the bound stays at
-    100k, about 100 probes at D=16, C=64.
+    100k, about 100 probes at D=16, C=64. On a loaded store those sweep
+    arms (Q=100 at nprobe 1, 4 and 16) no longer reach either scorer:
+    they are under `_DRIVER_MAX_PAIRS` and served on the driver. The
+    bound still picks the scorer for filtered, rounded or re-ranked
+    queries, for built models and above the driver bound.
 
-    Driver path: a query under `_SINGLE_TASK_MAX_PAIRS`, scorer "auto"
-    or "sql", no ``where``, ``rerank`` or ``round_to``, on the
-    ``model.encoded`` that `load_index` returned for a ``file:`` store,
-    runs no Spark job. The driver reads ``id`` and ``codes`` of the
-    probed cells' files, as Spark's scan of that frame lists them, with
-    pyarrow, scores them with the kernel's NumPy left fold and cuts the
-    top-k in NumPy; the result is one LocalRelation holding the single-task
-    plan's rows, in its order and schema. It is materialised when
-    ``ann_query`` is called, not when an action runs on it, so a cell
-    file removed after the model was loaded raises here, as Spark's scan
-    raises at the action. Any other model, a built or derived one
-    included, keeps the Spark plans.
+    Driver path: a query under `_DRIVER_MAX_PAIRS` (2^22) estimated
+    pairs, scorer "auto" or "sql", no ``where``, ``rerank`` or
+    ``round_to``, on the ``model.encoded`` that `load_index` returned
+    for a ``file:`` store, runs no Spark job. The driver reads ``id``
+    and ``codes`` of the probed cells' files, as Spark's scan of that
+    frame lists them, with pyarrow, scores each file once for all of its
+    probing queries with the kernel's NumPy left fold, keeps the
+    kernel's per-probe pre-cut (the ``k`` nearest plus ties, and the
+    radius) and cuts the top-k in NumPy; the result is one LocalRelation
+    holding the Spark plans' rows and schema, each query's rows in rank
+    order. It is materialised when ``ann_query`` is called, not when an
+    action runs on it, so a cell file removed after the model was loaded
+    raises here, as Spark's scan raises at the action. Any other model,
+    a built or derived one included, keeps the Spark plans. The bound is
+    a driver-memory budget, not a crossover: on the 20k x 64 store above
+    (k=10, median of 3 warm calls after one warm-up, 1 GB driver heap,
+    4-core host; driver vs kernel vs broadcast sql) the driver was
+    faster at every size measured: 0.039 vs 0.54 vs 0.30 s at 2.5k
+    pairs (Q=1, nprobe=4), 0.084 vs 0.93 vs 0.55 s at 62.5k (Q=100,
+    nprobe=1), 0.11 vs 0.83 vs 0.64 s at 250k (nprobe=4), 0.18-0.19 vs
+    0.94-1.02 vs 1.16-1.25 s at 1M (nprobe=16), 0.56-0.57 vs 1.31-1.39
+    vs 2.95-3.38 s at 2.56M (Q=1024, nprobe=4), and, forced past the
+    bound, 0.69 vs 1.55 s at 4M (Q=200, nprobe=32), 0.94-0.97 vs
+    1.62-2.01 s at 5.12M and 1.49 vs 2.23 s at 10.24M (Q=512,
+    nprobe=32). Pairs are at least the rows read, and the rows the
+    pre-cut keeps (28 B each) at most the pairs, so a radius query
+    without a limit holds at most about 120 MB of them under the bound.
 
     ``on_event(stage, seconds)`` mirrors the reference's query event
     handlers (/root/reference/src/db/stored.rs:513-532): fired after the

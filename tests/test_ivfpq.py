@@ -870,7 +870,8 @@ def test_sql_probe_table_is_local_relation(model, emb, spark, tmp_path_factory):
     broadcasts a LocalTableScan — no pickled RDD (ExistingRDD) and no
     job of Python workers to ship it — with the literal probe cut in
     the PartitionFilters, a broadcast hash join and the WindowGroupLimit
-    top-k."""
+    top-k. The store is loaded, so the Spark plan is forced: unforced,
+    the query is under `_DRIVER_MAX_PAIRS` and served on the driver."""
     from flechasdb_spark.plans import ivf
 
     loaded = _saved_index(model, spark, tmp_path_factory, "local_rel")
@@ -878,7 +879,9 @@ def test_sql_probe_table_is_local_relation(model, emb, spark, tmp_path_factory):
     n_q = int(ivf._SINGLE_TASK_MAX_PAIRS // per_query) + 1
     rows = emb.orderBy("vec_id").limit(n_q).collect()
     qs = [(int(r.vec_id), [float(x) for x in r.embedding]) for r in rows]
-    out = ann_query(loaded, qs, k=5, nprobe=2, scorer="sql")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ivf, "_store_cells", lambda model: None)
+        out = ann_query(loaded, qs, k=5, nprobe=2, scorer="sql")
     assert out.count() == 5 * n_q
     lines = _plan_lines(out)
     plan = "\n".join(lines)
@@ -1008,6 +1011,158 @@ def test_driver_path_matches_single_task_plan(stores, emb):
     assert compared == 4 * 2 * 2 * 3 + 4 * 2 * 2
 
 
+def _in_query_order(rows):
+    """Batch rows sorted by (query_id, rank), or by the whole row
+    when they carry no rank (the unlimited radius form)."""
+    if rows and "rank" in rows[0].asDict():
+        return sorted(rows, key=lambda r: (r.query_id, r.rank))
+    return sorted(rows)
+
+
+def test_driver_path_matches_spark_plans_above_single_task_bound(stores, emb):
+    """Batches above `_SINGLE_TASK_MAX_PAIRS` (Q=300 at nprobe 2, 4 and
+    P on the plain store, at 4 on the packed, OPQ and lazy-centroid
+    ones) are served on the driver and return the rows of the broadcast
+    sql plan and of the kernel bit for bit, unrounded: top-k and radius
+    with and without ``limit_per_query``, with equal schemas. The driver
+    returns each query's rows in rank order; Spark's batch order across
+    its shuffle partitions is the hash of query_id, so its rows are
+    compared after sorting by (query_id, rank)."""
+    from flechasdb_spark.plans import ivf
+    from flechasdb_spark.plans.ivf import ann_range_query_batch
+
+    rows = emb.orderBy("vec_id").limit(300).collect()
+    qids = [int(r.vec_id) for r in rows]
+    qarr = np.array([r.embedding for r in rows], dtype=np.float64)
+
+    def forms(store, nprobe):
+        yield "top-k", lambda scorer: ann_query(
+            store, qarr, k=10, nprobe=nprobe, query_ids=qids, scorer=scorer
+        )
+        for limit in (None, 3):
+            yield f"radius-{limit}", lambda scorer, limit=limit: ann_range_query_batch(
+                store, qarr, radius=1.6, nprobe=nprobe, query_ids=qids,
+                limit_per_query=limit, scorer=scorer,
+            )
+
+    compared = 0
+    for name, store in stores.items():
+        for nprobe in (2, 4, store.config.num_partitions) if name == "plain" else (4,):
+            assert ivf._pairs(store, len(qids) * nprobe) > ivf._SINGLE_TASK_MAX_PAIRS
+            for form, call in forms(store, nprobe):
+                driver = call("auto")
+                assert _served_on_driver(driver), (name, nprobe, form)
+                got = driver.collect()
+                assert got, (name, nprobe, form)
+                if form != "radius-None":
+                    assert got == _in_query_order(got), (name, form)
+                got = _in_query_order(got)
+                with pytest.MonkeyPatch.context() as mp:
+                    mp.setattr(ivf, "_store_cells", lambda model: None)
+                    plans = {s: call(s) for s in ("sql", "batch")}
+                for scorer, plan in plans.items():
+                    assert not _served_on_driver(plan), (name, form, scorer)
+                    want = _in_query_order(plan.collect())
+                    assert got == want, (name, nprobe, form, scorer)
+                    assert driver.schema == plan.schema, (name, form, scorer)
+                    compared += 1
+    assert compared == (3 + 3) * 3 * 2
+
+
+def test_driver_precut_keeps_exact_ties(spark, tmp_path_factory):
+    """Rows that tie exactly at the k-th ADC score, within one cell
+    (duplicated vectors) and across the two probed cells (mirrored
+    residuals against mirrored codewords), survive the driver's
+    per-probe pre-cut: every k and limit returns the Spark plan's ids in
+    its order."""
+    from flechasdb_spark.operators.build import assemble_index
+    from flechasdb_spark.plans import ivf
+    from flechasdb_spark.plans.ivf import ann_range_query, ann_range_query_batch
+
+    cfg = IndexConfig(num_partitions=2, num_divisions=2, num_codes=8, seed=7)
+    centroids = np.array([[10.0, 0, 0, 0], [-10.0, 0, 0, 0]])
+    words = [[x, 0.0] for x in (1, 2, 3, -1, -2, -3, 0, 5)]
+    codebooks = np.array([words, words])
+    # (residual x, ids) per cell: x in cell 0 and -x in cell 1 score the
+    # same for a query at the origin, ids interleave across the cells,
+    # and each cell's file holds its tied rows in descending id order, so
+    # a pre-cut that kept only the first `cut` rows would keep the wrong
+    # ones
+    layout = {
+        0: [(1, [2]), (2, [14, 12, 10]), (3, [22, 20])],
+        1: [(2, [13, 11]), (3, [21])],
+    }
+    data = [
+        (vid, [float(centroids[cell][0] + (x if cell == 0 else -x)), 0.0, 0.0, 0.0])
+        for cell, groups in layout.items()
+        for x, ids in groups
+        for vid in ids
+    ]
+    df = spark.createDataFrame(data, "vec_id long, embedding array<float>")
+    df = df.coalesce(1)
+    path = str(tmp_path_factory.mktemp("ties"))
+    save_index(assemble_index(df, centroids, codebooks, cfg), path)
+    store = load_index(spark, path)
+    q = np.zeros((1, 4))
+
+    def both(call):
+        driver = call()
+        assert _served_on_driver(driver)
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(ivf, "_store_cells", lambda model: None)
+            spark_rows = call().collect()
+        return driver.collect(), spark_rows
+
+    got, want = both(lambda: ann_query(store, q, k=1000, nprobe=2, query_ids=[0]))
+    scores = {r.vector_id: r.squared_distance for r in got}
+    assert len({scores[i] for i in (10, 11, 12, 13, 14)}) == 1
+    assert len({scores[i] for i in (20, 21, 22)}) == 1
+    assert got == want
+    for n in range(1, len(data) + 1):
+        got, want = both(lambda: ann_query(store, q, k=n, nprobe=2, query_ids=[0]))
+        assert [r.vector_id for r in got] == [r.vector_id for r in want], n
+        assert got == want, n
+        got, want = both(lambda: ann_range_query_batch(
+            store, q, radius=200.0, nprobe=2, query_ids=[0], limit_per_query=n
+        ))
+        assert got == want, n
+        got, want = both(lambda: ann_range_query(
+            store, [0.0] * 4, radius=200.0, nprobe=2, limit=n
+        ))
+        assert got == want, n
+    top3 = ann_query(store, q, k=3, nprobe=2).collect()
+    assert [r.vector_id for r in top3] == [2, 10, 11]
+
+
+def test_driver_path_switches_at_driver_constant(spark, tmp_path_factory):
+    """An unfiltered query on a loaded store just under
+    `_DRIVER_MAX_PAIRS` estimated pairs is served on the driver and
+    collects with no Spark job; at the bound it plans a Spark scan of
+    the store. One cell (P=1) keeps the batch small: every query probes
+    all of the store's rows."""
+    from flechasdb_spark.operators.build import assemble_index
+    from flechasdb_spark.plans import ivf
+
+    rng = np.random.RandomState(3)
+    cfg = IndexConfig(num_partitions=1, num_divisions=2, num_codes=4, seed=7)
+    data = [(i, [float(x) for x in rng.randn(4)]) for i in range(500)]
+    df = spark.createDataFrame(data, "vec_id long, embedding array<float>")
+    path = str(tmp_path_factory.mktemp("driver_bound"))
+    save_index(assemble_index(df, np.zeros((1, 4)), rng.randn(2, 4, 2), cfg), path)
+    store = load_index(spark, path)
+    n_q = -(-ivf._DRIVER_MAX_PAIRS // store.num_vectors)
+    qarr = rng.randn(n_q, 4)
+    assert ivf._pairs(store, n_q - 1) < ivf._DRIVER_MAX_PAIRS <= ivf._pairs(store, n_q)
+    under = ann_query(store, qarr[: n_q - 1], k=2, nprobe=1)
+    assert _served_on_driver(under)
+    rows, jobs = _jobs_of_collect(spark, under, "ivfpq-driver-bound")
+    assert len(rows) == 2 * (n_q - 1)
+    assert len(jobs) == 0, jobs
+    at = ann_query(store, qarr, k=2, nprobe=1)
+    assert not _served_on_driver(at)
+    assert any("FileScan" in ln for ln in _plan_lines(at)), _plan_lines(at)
+
+
 def test_driver_path_fires_on_event(stores, emb):
     """On the driver path on_event still fires select_probes, adc_tables
     and plan_built, in that order; plan_built then includes the scan."""
@@ -1048,6 +1203,9 @@ def test_cell_codes_decode_like_unpack_codes_expr(spark, tmp_path):
         t = pq.read_table(path, columns=["id", "codes_bin"])
         got = _cell_codes(t.column(1), 7, mode)
         assert got.shape == (40, 7)
+        # a sliced column starts past its value buffer's first offset
+        assert (_cell_codes(t.column(1).slice(5, 30), 7, mode) == got[5:35]).all()
+        assert _cell_codes(t.column(1).slice(0, 0), 7, mode).shape == (0, 7)
         assert {int(i): list(g) for i, g in zip(t.column(0).to_pylist(), got)} == want
         assert want == {i: list(row) for i, row in enumerate(codes)}
 
