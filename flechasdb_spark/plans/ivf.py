@@ -10,16 +10,17 @@ Phase 2 (executors): scan ONLY the probed Parquet partitions (a literal
 ``partition_id IN (...)`` — partition pruning == the reference's lazy
 partition load, S3) and score every encoded vector
 dist = sum_d T[probe, d, codes[d]] (Q3) in one scan core, `_scored`,
-with either of two scorers that return the same bits. The "sql" scorer
-joins the probe table (query_id, partition_id, T) — built on the driver
-as an Arrow LocalRelation, so it needs no Python worker — and gathers
-with one codegen'd Catalyst expression; a small query runs that join
-and its top-k as one task, a larger one broadcasts the probe table. The
-"batch" scorer broadcasts T to one mapInPandas NumPy kernel that cuts
-each Arrow batch to the rows the result can use. Every public form is
-a tail of that core (FAISS's IndexIVF / InvertedListScanner split, as
-for SQ and BQ): per-query top-k via ``row_number``, which Spark
-executes with WindowGroupLimit — partial top-k before the shuffle
+by either of two plans that return the same bits, picked from the
+query alone. The sql plan joins the probe table (query_id,
+partition_id, T) — built on the driver as an Arrow LocalRelation, so it
+needs no Python worker — and gathers with one codegen'd Catalyst
+expression; a small query runs that join and its top-k as one task, a
+larger one broadcasts the probe table. The kernel broadcasts T to one
+mapInPandas NumPy pass that cuts each Arrow batch to the rows the
+result can use. Every public form is `_tail` over that core, the one
+tail the SQ and BQ families share (FAISS's IndexIVF /
+InvertedListScanner split): per-query top-k via ``row_number``, which
+Spark executes with WindowGroupLimit — partial top-k before the shuffle
 (Q4+Q5, the reference's NBest merge) — a radius filter, and the exact
 re-rank.
 
@@ -493,7 +494,13 @@ def _adc_tables(
     probe_centroids: np.ndarray,
 ) -> np.ndarray:
     """Q2: T[i, d, c] for each probe i = (query, partition) pair, from
-    the (QP, N) probed centroids."""
+    the (QP, N) probed centroids, built in chunks of probes whose (chunk,
+    D, C, w) difference holds at most `_CHUNK_DOUBLES` doubles. Each
+    chunk's einsum returns the unchunked einsum's bits (tested): its
+    summation order over w follows the difference's memory layout, which
+    a ``dim_perm`` gather makes probe-minor, so a chunk of a larger table
+    holds at least two probes — one probe alone would be summed in
+    another order."""
     d, c, w = model.codebooks.shape
     localized = queries[probe_qidx] - probe_centroids  # (QP, N)
     if model.dim_perm is not None:
@@ -501,9 +508,16 @@ def _adc_tables(
         # ADC table must be built from the same reordering
         localized = localized[:, np.asarray(model.dim_perm, dtype=int)]
     sub = localized.reshape(-1, d, w)  # (QP, D, w)
-    # (QP, D, C): sum over w of (sub - cb)^2
-    diff = sub[:, :, None, :] - model.codebooks[None, :, :, :]
-    return np.einsum("qdcw,qdcw->qdc", diff, diff)
+    n = len(sub)
+    tables = np.empty((n, d, c), np.result_type(sub, model.codebooks))
+    step = max(1, _CHUNK_DOUBLES // (d * c * w))
+    chunks = max(1, min(-(-n // step), n // 2))
+    bounds = [n * i // chunks for i in range(chunks + 1)]
+    for lo, hi in zip(bounds, bounds[1:]):
+        # (chunk, D, C): sum over w of (sub - cb)^2
+        diff = sub[lo:hi, :, None, :] - model.codebooks[None]
+        tables[lo:hi] = np.einsum("qdcw,qdcw->qdc", diff, diff)
+    return tables
 
 
 def _phase1(
@@ -559,8 +573,8 @@ _SINGLE_TASK_MAX_PAIRS = 32_000
 _DRIVER_MAX_PAIRS = 1 << 22
 
 
-# ADC-table doubles, Q * nprobe * D * C, from which scorer="auto" runs
-# the NumPy kernel instead of the sql plan (see `ann_query` for why it
+# ADC-table doubles, Q * nprobe * D * C, from which `_scored` runs the
+# NumPy kernel instead of the sql plan (see `ann_query` for why it
 # sits below the warm crossover).
 _KERNEL_MIN_DOUBLES = 100_000
 
@@ -616,7 +630,7 @@ def _sql_scored(
     probe_pid: np.ndarray,
     tables: np.ndarray,
 ) -> DataFrame:
-    """The "sql" scorer: (query_id, id, partition_id, __score) for every
+    """The sql plan: (query_id, id, partition_id, __score) for every
     (probing query, candidate) pair. The probe table — one (query_id,
     partition_id, D x C ADC table) row per probe — is an Arrow
     LocalRelation (`_driver_frame`) joined to the candidates on
@@ -817,6 +831,47 @@ def _exact(
     )
 
 
+def _tail(
+    scored: DataFrame, qids, qarr, id_col: str, solo: bool, round_to,
+    k=None, rerank_factor=4, radius=None, exact_radius=None, limit=None,
+    rerank=None, vec_col: str = "embedding", rounded_scan: bool = True,
+) -> DataFrame:
+    """The serving tail of every IVF family over its scan core's
+    (query_id, id_col, partition_id, __score[, __exact]) rows, returning
+    (query_id, id_col, partition_id, __score[, rank]).
+
+    Top-k (``k``) is `_nearest` on the (rounded) scan score; with
+    ``rerank`` it keeps ``k * rerank_factor`` survivors, re-scores them
+    exactly — `_exact` against a DataFrame of the original vectors, or
+    the scan's own ``__exact`` for PQ's ``rerank="stored"`` — and takes
+    the top-k of that. Radius gates the (rounded) scan score at
+    ``radius``; with ``rerank`` the exact re-score is then gated at
+    ``exact_radius``, and a solo query is ordered and ``limit`` caps
+    each query to its nearest. ``rounded_scan=False`` keeps ``round_to``
+    off the scan score (BQ's integer distances) and on the exact one."""
+    adc_round = round_to if rounded_scan else None
+    if k is not None:
+        cut = int(k) * int(rerank_factor) if rerank is not None else k
+        out = _nearest(scored, cut, adc_round, id_col, solo)
+        if isinstance(rerank, str):
+            out = out.selectExpr(
+                "query_id", f"`{id_col}`", "partition_id", "__exact AS __score"
+            )
+        elif rerank is not None:
+            out = _exact(rerank, out, id_col, qids, qarr, vec_col)
+        if rerank is not None:
+            out = _nearest(out, k, round_to, id_col, solo)
+        return out
+    out = scored.where(F.expr(_score_sql(adc_round)) <= radius)
+    if rerank is not None:
+        out = _exact(rerank, out, id_col, qids, qarr, vec_col).where(
+            F.expr(_score_sql(round_to)) <= exact_radius
+        )
+    if solo or limit is not None:
+        out = _nearest(out, limit, round_to, id_col, solo)
+    return out
+
+
 def _empty(model, id_col: str, score: str, rank: bool) -> DataFrame:
     """An empty batch's result of every family: (query_id,
     id_col, then ``score``, a schema string) and ``rank`` iff the
@@ -851,8 +906,10 @@ def _adc_sums(tables: np.ndarray, codes: np.ndarray) -> np.ndarray:
     return acc
 
 
-# Score-matrix elements, probes x rows, `_cell_hits` holds at once (8 MB)
-_CELL_CHUNK = 1 << 20
+# Doubles (8 MB) a driver-side NumPy temporary holds at once: the probes
+# x rows score matrix of `_cell_hits`, the probes x D x C x w difference
+# of `_adc_tables`
+_CHUNK_DOUBLES = 1 << 20
 
 
 def _cell_hits(tables, pis, codes, cut, radius, slack):
@@ -862,8 +919,8 @@ def _cell_hits(tables, pis, codes, cut, radius, slack):
     score <= ``radius`` and, with ``cut``, each probe's ``cut`` nearest
     plus their ties, both widened by ``slack``. Probe-major, rows in
     cell order. The one scorer and pre-cut of the kernel and the driver
-    path; probes are scored in chunks of at most `_CELL_CHUNK` pairs."""
-    step = max(1, _CELL_CHUNK // max(1, len(codes)))
+    path; probes are scored in chunks of at most `_CHUNK_DOUBLES` pairs."""
+    step = max(1, _CHUNK_DOUBLES // max(1, len(codes)))
     bound = np.inf if radius is None else radius + slack
     out = [(np.empty(0, np.int64),) * 2 + (np.empty(0),)]
     for lo in range(0, len(pis), step):
@@ -882,7 +939,7 @@ def _kernel_scored(
     model: IndexModel, candidates: DataFrame, qids, qarr, probe_qidx,
     probe_pid, tables, cut, radius, slack, stored,
 ) -> DataFrame:
-    """The "batch" scorer: `_sql_scored`'s rows, scored in NumPy by one
+    """The kernel: `_sql_scored`'s rows, scored in NumPy by one
     mapInPandas pass with the ADC tables and probe lists broadcast. Per
     Arrow batch, cell and probing query it keeps only rows that can
     reach the result: ADC score <= ``radius`` and, with ``cut``, the
@@ -940,22 +997,20 @@ def _kernel_scored(
 
 
 def _scored(
-    model: IndexModel, qids, qarr, nprobe, where, scorer, stored, cut,
-    radius, round_to, mark,
+    model: IndexModel, qids, qarr, nprobe, where, stored, cut, radius,
+    round_to, mark,
 ) -> DataFrame:
     """The scan core of every IVF+PQ serving path: (query_id, id_col,
     partition_id, __score[, __exact]), the ADC distance of each
-    candidate in each query's probed cells, from either scorer. Both
-    sum the ADC gather (and ``__exact``) as the same left fold, so they
-    return the same bits; the kernel's ``cut``/``radius`` pre-cut only
-    drops rows the tail would drop. "auto" runs the kernel for a stored
-    re-rank or from `_KERNEL_MIN_DOUBLES` table doubles, else sql."""
+    candidate in each query's probed cells, from either of two plans
+    that sum the ADC gather (and ``__exact``) as the same left fold, so
+    they return the same bits. A stored re-rank, or a query from
+    `_KERNEL_MIN_DOUBLES` ADC-table doubles, runs the NumPy kernel,
+    whose ``cut``/``radius`` pre-cut only drops rows the tail would
+    drop; any other query runs the sql plan."""
     probe_qidx, probe_pid, tables = _phase1(model, qarr, qids, nprobe, mark)
-    if scorer == "auto":
-        kernel = stored or tables.size >= _KERNEL_MIN_DOUBLES
-        scorer = "batch" if kernel else "sql"
     candidates = _probed_rows(model, probe_pid, where)
-    if scorer == "sql":
+    if not stored and tables.size < _KERNEL_MIN_DOUBLES:
         return _sql_scored(
             model, candidates, qids, probe_qidx, probe_pid, tables
         )
@@ -967,26 +1022,18 @@ def _scored(
 
 
 def _search(
-    model: IndexModel, queries, query_ids, nprobe, round_to, where, scorer,
-    rerank, solo=False, k=None, rerank_factor=4, radius=None, limit=None,
+    model: IndexModel, queries, query_ids, nprobe, round_to, where, rerank,
+    solo=False, k=None, rerank_factor=4, radius=None, limit=None,
     rerank_slack=1.5, on_event=None,
 ) -> DataFrame:
-    """Every public IVF+PQ serving form as a tail of `_scored`, as
-    `plans.ivfbq._search` is for BQ.
-
-    Top-k (``k``) is `_nearest` on the (rounded) ADC score; with
-    ``rerank`` it keeps ``k * rerank_factor`` survivors, re-scores them
-    exactly (`_exact`, or the kernel's in-scan ``__exact`` for
-    ``rerank="stored"``) and takes the top-k of that. Radius
-    (``radius``) filters the (rounded) score at ``radius``, or with
-    ``rerank`` at ``radius * rerank_slack`` before the exact re-score is
-    filtered at ``radius``; a solo query is then ordered and ``limit``
-    caps each query to its nearest. The result is (vector_id,
-    partition_id, squared_distance) for a solo query, else (query_id,
-    vector_id, partition_id, squared_distance[, rank]); an empty batch
-    returns that schema. A query under `_DRIVER_MAX_PAIRS` with none of
-    ``where``, ``rerank`` and ``round_to`` on a loaded store is
-    `_driver_served`."""
+    """Every public IVF+PQ serving form: `_tail` over `_scored`, as
+    `plans.ivfbq._search` and `plans.ivfsq._search` are for BQ and SQ.
+    A radius query with ``rerank`` gates the scan at ``radius *
+    rerank_slack``. The result is (vector_id, partition_id,
+    squared_distance) for a solo query, else (query_id, vector_id,
+    partition_id, squared_distance[, rank]); an empty batch returns that
+    schema. A query under `_DRIVER_MAX_PAIRS` with none of ``where``,
+    ``rerank`` and ``round_to`` on a loaded store is `_driver_served`."""
     id_col, vec_col = model.config.id_col, model.config.vec_col
     qids, qarr = _query_batch(model, queries, query_ids)
     stored = isinstance(rerank, str)
@@ -1000,10 +1047,6 @@ def _search(
                 "rerank='stored' needs the original vectors on the encoded "
                 "rows — build with IndexConfig(keep_vectors=True)"
             )
-        if scorer == "sql":
-            raise ValueError("rerank='stored' requires scorer='batch'")
-    if scorer not in ("auto", "sql", "batch"):
-        raise ValueError(f"unknown scorer: {scorer}")
     rank = not solo and (k is not None or limit is not None)
     if not qids:
         return _empty(
@@ -1017,46 +1060,30 @@ def _search(
         started[0] = time.perf_counter()
 
     if k is not None:
+        gate = None
         cut = int(k) * int(rerank_factor) if rerank is not None else int(k)
     else:
         cut = limit if rerank is None else None
-        exact_radius = float(radius)
-        slack = float(rerank_slack) if rerank is not None else 1.0
-        radius = exact_radius * slack
+        gate = float(radius)
+        gate *= float(rerank_slack) if rerank is not None else 1.0
     driven = rerank is None and where is None and round_to is None
-    driven &= _pairs(model, len(qids) * nprobe) < _DRIVER_MAX_PAIRS
-    if driven and scorer != "batch":
+    if driven and _pairs(model, len(qids) * nprobe) < _DRIVER_MAX_PAIRS:
         cells = _store_cells(model)
         if cells is not None:
             out = _driver_served(
-                model, cells, qids, qarr, nprobe, cut, radius, solo, rank, mark
+                model, cells, qids, qarr, nprobe, cut, gate, solo, rank, mark
             )
             mark("plan_built")
             return out
     scored = _scored(
-        model, qids, qarr, nprobe, where, scorer, stored, cut, radius,
-        round_to, mark,
+        model, qids, qarr, nprobe, where, stored, cut, gate, round_to, mark
     )
-    if k is not None:
-        out = _nearest(scored, cut, round_to, id_col, solo)
-        if stored:
-            out = out.selectExpr(
-                "query_id", f"`{id_col}`", "partition_id", "__exact AS __score"
-            )
-        elif rerank is not None:
-            out = _exact(rerank, out, id_col, qids, qarr, vec_col)
-        if rerank is not None:
-            out = _nearest(out, k, round_to, id_col, solo)
-    else:
-        dist = F.expr(_score_sql(round_to))
-        out = scored.where(dist <= radius)
-        if rerank is not None:
-            out = _exact(rerank, out, id_col, qids, qarr, vec_col).where(
-                dist <= exact_radius
-            )
-        if solo or limit is not None:
-            out = _nearest(out, limit, round_to, id_col, solo)
-    out = out.selectExpr(
+    out = _tail(
+        scored, qids, qarr, id_col, solo, round_to, k=k,
+        rerank_factor=rerank_factor, radius=gate,
+        exact_radius=None if radius is None else float(radius), limit=limit,
+        rerank=rerank, vec_col=vec_col,
+    ).selectExpr(
         *([] if solo else ["query_id"]),
         f"`{id_col}` AS vector_id",
         "partition_id",
@@ -1075,7 +1102,6 @@ def ann_query(
     query_ids: list[int] | None = None,
     round_to: int | None = None,
     where=None,
-    scorer: str = "auto",
     rerank: DataFrame | None = None,
     rerank_factor: int = 4,
     on_event=None,
@@ -1094,13 +1120,18 @@ def ann_query(
     that all satisfy the predicate (no reference counterpart; free in
     Spark because attributes live on the encoded rows).
 
-    ``scorer`` picks how `_scored` computes the ADC sums; both scorers
-    fold them in the same order, so they return bit-identical rows.
-    "sql" gathers the ADC table with one pure Catalyst expression, an
-    unrolled sum of array lookups inside whole-stage codegen; the
-    Q * nprobe tables ride as an Arrow LocalRelation probe table joined
-    to the pruned scan on partition_id without Python workers. The sql
-    plan depends on the estimated pair count,
+    The query alone picks how `_scored` computes the ADC sums, from two
+    plans that fold them in the same order and so return bit-identical
+    rows. A ``rerank="stored"`` query, or one of at least
+    `_KERNEL_MIN_DOUBLES` (100k) ADC-table doubles, Q * nprobe * D * C,
+    runs the NumPy kernel: whole Arrow batches scored via mapInPandas
+    with the tables broadcast, each batch cut to the rows that can
+    reach the result before the top-k shuffle. Any other query runs the
+    sql plan, which gathers the ADC table with one pure Catalyst
+    expression, an unrolled sum of array lookups inside whole-stage
+    codegen; the Q * nprobe tables ride as an Arrow LocalRelation probe
+    table joined to the pruned scan on partition_id without Python
+    workers. The sql plan depends on the estimated pair count,
     Q * nprobe * num_vectors / num_partitions. Under
     `_SINGLE_TASK_MAX_PAIRS` (32k) both sides are coalesced to one
     partition and hash-joined: no broadcast, no shuffle, and the query
@@ -1110,13 +1141,10 @@ def ann_query(
     crossover: at nprobe=4 on a 20k x 64 store (P=32, D=16, C=64,
     4-core host), the median request took 0.29 s single-task vs 0.32 s
     broadcast at 25k pairs, 0.30 vs 0.31 s at 35k, and 0.35 vs 0.34 s
-    at 40k. "batch" scores whole Arrow batches in NumPy via mapInPandas
-    with the tables broadcast, and cuts each batch to the rows that can
-    reach the result before the top-k shuffle. "auto" (default) runs
-    the kernel from `_KERNEL_MIN_DOUBLES` (100k) table doubles,
-    Q * nprobe * D * C, and sql below it. Warm, the two crossed near
-    1,000 probes on the 20k x 64 store above (1,024 doubles a probe;
-    median of 6 alternating calls, Q=100 unless noted, sql vs kernel):
+    at 40k. `_KERNEL_MIN_DOUBLES` sits below the warm crossover of the
+    two plans: warm, they crossed near 1,000 probes on the 20k x 64
+    store above (1,024 doubles a probe; median of 6 alternating calls,
+    Q=100 unless noted, sql vs kernel):
     0.69 vs 1.33 s at 100 probes, 0.69 vs 1.16 s at 400, 1.42 vs 1.58 s
     at 800 (Q=200), 1.33 vs 1.31 s at 1,200 (Q=300), 1.42 vs 1.28 s at
     1,600 and 4.05 vs 2.06 s at 4,096 (Q=1024). But a bound of 2^20
@@ -1124,15 +1152,15 @@ def ann_query(
     ingest-sweep sweep to sql, and that sweep then took longer in 3 of
     3 alternating pairs (median 8.7 vs 7.8 s), so the bound stays at
     100k, about 100 probes at D=16, C=64. On a loaded store those sweep
-    arms (Q=100 at nprobe 1, 4 and 16) no longer reach either scorer:
+    arms (Q=100 at nprobe 1, 4 and 16) no longer reach either plan:
     they are under `_DRIVER_MAX_PAIRS` and served on the driver. The
-    bound still picks the scorer for filtered, rounded or re-ranked
+    bound still picks the plan for filtered, rounded or re-ranked
     queries, for built models and above the driver bound.
 
     Driver path: a query under `_DRIVER_MAX_PAIRS` (2^22) estimated
-    pairs, scorer "auto" or "sql", no ``where``, ``rerank`` or
-    ``round_to``, on the ``model.encoded`` that `load_index` returned
-    for a ``file:`` store, runs no Spark job. The driver reads ``id``
+    pairs, with no ``where``, ``rerank`` or ``round_to``, on the
+    ``model.encoded`` that `load_index` returned for a ``file:`` store,
+    runs no Spark job. The driver reads ``id``
     and ``codes`` of the probed cells' files, as Spark's scan of that
     frame lists them, with pyarrow, scores each file once for all of its
     probing queries with the kernel's NumPy left fold, keeps the
@@ -1180,16 +1208,15 @@ def ann_query(
     ``IndexConfig(keep_vectors=True)`` (original vectors stored on the
     encoded rows). The kernel computes the exact distance of the rows
     it keeps inside the SAME mapInPandas pass over the pruned
-    partitions — no second table, no second scan, no join — so "auto"
-    runs the kernel and scorer="sql" raises ValueError. The global ADC
-    cut picks the same candidate set as the join form, and the exact
-    distance is the same fold, so the rows are identical. This is the
-    right shape when the re-rank source would otherwise be a full scan
-    of the vector corpus.
+    partitions — no second table, no second scan, no join — so such a
+    query always runs the kernel. The global ADC cut picks the same
+    candidate set as the join form, and the exact distance is the same
+    fold, so the rows are identical. This is the right shape when the
+    re-rank source would otherwise be a full scan of the vector corpus.
     """
     return _search(
-        model, queries, query_ids, nprobe, round_to, where, scorer, rerank,
-        k=k, rerank_factor=rerank_factor, on_event=on_event,
+        model, queries, query_ids, nprobe, round_to, where, rerank, k=k,
+        rerank_factor=rerank_factor, on_event=on_event,
     )
 
 
@@ -1202,7 +1229,6 @@ def ann_range_query_batch(
     round_to: int | None = None,
     where=None,
     limit_per_query: int | None = None,
-    scorer: str = "auto",
     rerank: DataFrame | None = None,
     rerank_slack: float = 1.5,
 ) -> DataFrame:
@@ -1217,14 +1243,14 @@ def ann_range_query_batch(
     plus ``rank`` when ``limit_per_query`` caps a pathological radius
     to each query's nearest matches.
 
-    Probe selection, the huge-P lazy-centroid mode, the scorers, the
+    Probe selection, the huge-P lazy-centroid mode, the two plans, the
     driver path and the query-id checks are `ann_query`'s: a small
     query with no ``where``, ``rerank`` or ``round_to`` on a loaded
     ``file:`` store is computed on the driver when this is called, not
     when an action runs. Phase 2 scans ONLY the
     probed ``partition_id=`` directories (the literal isin lands in the
     Parquet PartitionFilters at rest), and the radius cut happens AT
-    THE SCAN — a codegen'd filter over the sql scorer's ADC sum, or
+    THE SCAN — a codegen'd filter over the sql plan's ADC sum, or
     inside the kernel — so the only rows that ever reach an exchange
     are the matches (the property that makes radius search safe at
     100 TB: shuffle volume is |result|, never |scanned|).
@@ -1248,7 +1274,7 @@ def ann_range_query_batch(
     members whose ADC distance exceeds the slack band — widen
     ``rerank_slack`` to trade scan volume for that tail."""
     return _search(
-        model, queries, query_ids, nprobe, round_to, where, scorer, rerank,
+        model, queries, query_ids, nprobe, round_to, where, rerank,
         radius=radius, limit=limit_per_query, rerank_slack=rerank_slack,
     )
 
@@ -1261,7 +1287,6 @@ def ann_range_query(
     round_to: int | None = None,
     limit: int | None = None,
     where=None,
-    scorer: str = "auto",
     rerank: DataFrame | None = None,
     rerank_slack: float = 1.5,
 ) -> DataFrame:
@@ -1276,7 +1301,7 @@ def ann_range_query(
     store, the query runs on the driver when this is called (see
     `ann_query`)."""
     return _search(
-        model, [(0, query_vector)], None, nprobe, round_to, where, scorer,
-        rerank, solo=True, radius=radius, limit=limit,
+        model, [(0, query_vector)], None, nprobe, round_to, where, rerank,
+        solo=True, radius=radius, limit=limit,
         rerank_slack=rerank_slack,
     )

@@ -38,10 +38,11 @@ the scan of only the probed cells (a LITERAL ``partition_id IN`` that
 lands in the Parquet PartitionFilters, plan-gated), and one codegen
 join-form scorer — popcount(xor) for the sign-bit and ITQ codes, the
 query's micro-unit margins for asymmetric scoring. The families differ
-only in how a query becomes words. Every public form is a tail of that
-core: top-k (an ordered limit for one query, WindowGroupLimit per
-query for a batch), a radius filter whose exchange volume is
-|result|, and the exact re-rank (`rerank`/`rerank_factor` on top-k, a
+only in how a query becomes words. Every public form is one `_search`:
+`plans.ivf._tail` over that core, the tail every IVF family shares —
+top-k (an ordered limit for one query, WindowGroupLimit per query for a
+batch), a radius filter whose exchange volume is |result|, and the
+exact re-rank (`rerank`/`rerank_factor` on top-k, a
 separate ``exact_radius`` on the radius paths — the FAISS
 IndexBinaryIVF+IndexRefine shape; binary codes are the coarsest
 quantizer here, so they gain the most). A query whose width is not the
@@ -67,11 +68,10 @@ from flechasdb_spark.plans.ivf import (
     _centroid_probes,
     _driver_frame,
     _empty,
-    _exact,
-    _nearest,
     _probed_rows,
     _query_ids,
     _score_sql,
+    _tail,
     ivf_assign,
 )
 
@@ -226,18 +226,13 @@ def _search(
     radius=None, limit=None, collect_centroids=True, rerank=None,
     rerank_factor=4, exact_radius=None, round_to=None, asymmetric=False,
 ) -> DataFrame:
-    """Every public IVF+BQ serving form as a tail of `_scored`.
-
-    Top-k (``k``) is `plans.ivf._nearest`: an ordered limit for a solo
-    query, a per-query WindowGroupLimit for a batch. Radius
-    (``radius``) is a filter on the integer score, ordered for a solo
-    query and cut by ``limit`` (``limit_per_query`` for a batch). With
-    ``rerank`` the survivors, top ``k * rerank_factor`` or every radius
-    match, are re-scored exactly (`plans.ivf._exact`) and the top-k or
-    the ``exact_radius`` cut applies to the (``round_to``-rounded)
-    squared L2 distance. The result is (id_col, partition_id, score)
-    for a solo query, (query_id, id_col, score[, rank]) for a batch,
-    the score named ``hamming_distance``, ``asym_micro`` or, reranked,
+    """Every public IVF+BQ serving form: `plans.ivf._tail` over
+    `_scored`. The integer Hamming ``radius`` gates the scan, and with
+    ``rerank`` the separate ``exact_radius`` gates the exact squared L2
+    re-score; ``round_to`` applies to that exact distance only. The
+    result is (id_col, partition_id, score) for a solo query, (query_id,
+    id_col, score[, rank]) for a batch, the score named
+    ``hamming_distance``, ``asym_micro`` or, reranked,
     ``squared_distance``; an empty batch returns that schema."""
     if radius is not None and rerank is not None and exact_radius is None:
         raise ValueError(
@@ -261,20 +256,13 @@ def _search(
         model, ids, queries, nprobe, id_col, where, collect_centroids,
         asymmetric,
     )
-    if k is not None:
-        cut = int(k) * int(rerank_factor) if rerank is not None else k
-        out = _nearest(scored, cut, None, id_col, solo)
-        if rerank is not None:
-            exact = _exact(rerank, out, id_col, qids, qarr)
-            out = _nearest(exact, k, round_to, id_col, solo)
-    else:
-        out = scored.where(F.col("__score") <= int(radius))
-        if rerank is not None:
-            out = _exact(rerank, out, id_col, qids, qarr).where(
-                F.expr(_score_sql(round_to)) <= float(exact_radius)
-            )
-        if solo or limit is not None:
-            out = _nearest(out, limit, round_to, id_col, solo)
+    out = _tail(
+        scored, qids, qarr, id_col, solo, round_to, k=k,
+        rerank_factor=rerank_factor,
+        radius=None if radius is None else int(radius),
+        exact_radius=None if exact_radius is None else float(exact_radius),
+        limit=limit, rerank=rerank, rounded_scan=False,
+    )
     keys = [id_col, "partition_id"] if solo else ["query_id", id_col]
     return out.selectExpr(
         *(f"`{c}`" for c in keys),

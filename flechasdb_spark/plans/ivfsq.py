@@ -30,9 +30,10 @@ Arrow LocalRelation, the scan of only the probed cells (a literal
 ``partition_id IN`` that lands in the Parquet PartitionFilters when the
 encoded table is written partitionBy(partition_id)), and
 ``sum_j (q_j - c_j - decode(code_j))^2`` per (query, candidate) inside
-codegen. The four public forms are tails of it: top-k (an ordered limit
-for one query, WindowGroupLimit per query for a batch), the radius
-filter, and one shared exact re-rank. A DuckDB oracle recomputes the
+codegen. The four public forms are one `_search` each: `plans.ivf._tail`
+over that core, the tail every IVF family shares — top-k (an ordered
+limit for one query, WindowGroupLimit per query for a batch), the
+radius filter, and the exact re-rank. A DuckDB oracle recomputes the
 full lifecycle exactly under frozen centroids (queries.py::ivfsq_knn).
 """
 
@@ -58,11 +59,10 @@ from flechasdb_spark.plans.ivf import (
     _centroid_probes,
     _driver_frame,
     _empty,
-    _exact,
-    _nearest,
     _probed_rows,
     _query_ids,
     _score_sql,
+    _tail,
     cent_col_name,
     ivf_assign,
 )
@@ -370,46 +370,39 @@ def _scored(
     return scored, qids, qarr
 
 
-def _top_k(
-    model, queries, k, nprobe, id_col, round_to, where, collect_centroids,
-    rerank, rerank_factor, solo,
+def _search(
+    model, queries, nprobe, id_col, round_to, where, solo, k=None,
+    radius=None, limit=None, collect_centroids=True, rerank=None,
+    rerank_factor=4, rerank_slack=1.5,
 ) -> DataFrame:
-    """Top-k tail of `_scored`: (query_id, id_col, partition_id,
-    squared_distance[, rank])."""
+    """Every public IVF+SQ serving form: `plans.ivf._tail` over
+    `_scored`. A radius query with ``rerank`` gates the scan at ``radius
+    * rerank_slack``. The result is (id_col, partition_id,
+    squared_distance) for a solo query, else (query_id, id_col,
+    partition_id, squared_distance[, rank]); an empty batch returns
+    that schema."""
+    rank = not solo and (k is not None or limit is not None)
+    if not queries:
+        return _empty(
+            model, id_col, "partition_id int, squared_distance double", rank
+        )
     scored, qids, qarr = _scored(
         model, queries, nprobe, id_col, where, collect_centroids
     )
-    adc_k = int(k) * int(rerank_factor) if rerank is not None else int(k)
-    top = _nearest(scored, adc_k, round_to, id_col, solo)
-    if rerank is not None:
-        exact = _exact(rerank, top, id_col, qids, qarr)
-        top = _nearest(exact, k, round_to, id_col, solo)
-    return top.selectExpr(
-        "query_id",
+    gate = exact = None
+    if radius is not None:
+        exact = float(radius)
+        gate = exact * float(rerank_slack) if rerank is not None else exact
+    return _tail(
+        scored, qids, qarr, id_col, solo, round_to, k=k,
+        rerank_factor=rerank_factor, radius=gate, exact_radius=exact,
+        limit=limit, rerank=rerank,
+    ).selectExpr(
+        *([] if solo else ["query_id"]),
         f"`{id_col}`",
         "partition_id",
         f"{_score_sql(round_to)} AS squared_distance",
-        *([] if solo else ["rank"]),
-    )
-
-
-def _in_radius(
-    model, queries, radius, nprobe, id_col, round_to, where,
-    collect_centroids, rerank, rerank_slack,
-) -> DataFrame:
-    """Radius tail of `_scored`: the (query_id, id_col, partition_id,
-    __score) rows whose (rounded) distance is <= ``radius`` — with
-    ``rerank``, the scan keeps ``radius * rerank_slack`` and the exact
-    re-score is cut at ``radius``."""
-    scored, qids, qarr = _scored(
-        model, queries, nprobe, id_col, where, collect_centroids
-    )
-    dist = F.expr(_score_sql(round_to))
-    if rerank is None:
-        return scored.where(dist <= float(radius))
-    out = scored.where(dist <= float(radius) * float(rerank_slack))
-    return _exact(rerank, out, id_col, qids, qarr).where(
-        dist <= float(radius)
+        *(["rank"] if rank else []),
     )
 
 
@@ -446,10 +439,10 @@ def ivfsq_query(
     emitted distances are then EXACT. Near-free insurance for SQ8;
     for SQ4's coarser codes it recovers the recall the 16-level
     rounding costs (pytest-gated)."""
-    return _top_k(
-        model, [(0, query_vector)], k, nprobe, id_col, round_to, where,
-        True, rerank, rerank_factor, solo=True,
-    ).drop("query_id")
+    return _search(
+        model, [(0, query_vector)], nprobe, id_col, round_to, where, True,
+        k=k, rerank=rerank, rerank_factor=rerank_factor,
+    )
 
 
 def ivfsq_query_batch(
@@ -503,13 +496,10 @@ def ivfsq_query_batch(
     ``k * rerank_factor`` per query against the ORIGINAL vectors (one
     broadcast join of the O(Q * k * factor) survivor set); emitted
     distances become exact."""
-    if not queries:
-        return _empty(
-            model, id_col, "partition_id int, squared_distance double", True
-        )
-    return _top_k(
-        model, queries, k, nprobe, id_col, round_to, where,
-        collect_centroids, rerank, rerank_factor, solo=False,
+    return _search(
+        model, queries, nprobe, id_col, round_to, where, False, k=k,
+        collect_centroids=collect_centroids, rerank=rerank,
+        rerank_factor=rerank_factor,
     )
 
 
@@ -550,14 +540,9 @@ def ivfsq_range_query(
     true member whose quantized distance exceeds the slack band is
     missed; widen ``rerank_slack`` to trade scan volume for that
     tail)."""
-    out = _in_radius(
-        model, [(0, query_vector)], radius, nprobe, id_col, round_to,
-        where, True, rerank, rerank_slack,
-    )
-    return _nearest(out, limit, round_to, id_col, solo=True).selectExpr(
-        f"`{id_col}`",
-        "partition_id",
-        f"{_score_sql(round_to)} AS squared_distance",
+    return _search(
+        model, [(0, query_vector)], nprobe, id_col, round_to, where, True,
+        radius=radius, limit=limit, rerank=rerank, rerank_slack=rerank_slack,
     )
 
 
@@ -590,23 +575,11 @@ def ivfsq_range_query_batch(
     broadcast join of the O(matches) survivors against the ORIGINAL
     vectors, final filter of the EXACT (rounded) distance at
     ``radius`` (see `ivfsq_range_query`)."""
-    if not queries:
-        return _empty(
-            model, id_col, "partition_id int, squared_distance double",
-            limit_per_query is not None,
-        )
-    out = _in_radius(
-        model, queries, radius, nprobe, id_col, round_to, where,
-        collect_centroids, rerank, rerank_slack,
-    )
-    if limit_per_query is not None:
-        out = _nearest(out, limit_per_query, round_to, id_col, solo=False)
-    return out.selectExpr(
-        "query_id",
-        f"`{id_col}`",
-        "partition_id",
-        f"{_score_sql(round_to)} AS squared_distance",
-        *([] if limit_per_query is None else ["rank"]),
+    return _search(
+        model, queries, nprobe, id_col, round_to, where, False,
+        radius=radius, limit=limit_per_query,
+        collect_centroids=collect_centroids, rerank=rerank,
+        rerank_slack=rerank_slack,
     )
 
 

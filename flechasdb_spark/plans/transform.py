@@ -88,7 +88,7 @@ def build_transformed_index(
     return TransformedIndex(pca=pt, whiten=whiten, index=build_index(tdf, cfg))
 
 
-def _query_matrix(ti: TransformedIndex, queries) -> list:
+def transform_queries(ti: TransformedIndex, queries) -> list:
     """Driver-side projection of query vectors (numpy; same arithmetic
     family as pca_project's pandas impl — equivalence-gated there)."""
     ids = [q[0] for q in queries]
@@ -104,10 +104,6 @@ def _query_matrix(ti: TransformedIndex, queries) -> list:
     return [(i, [float(v) for v in row]) for i, row in zip(ids, y)]
 
 
-def transform_queries(ti: TransformedIndex, queries) -> list:
-    return _query_matrix(ti, queries)
-
-
 def transformed_ann_query(
     ti: TransformedIndex,
     queries,
@@ -121,7 +117,7 @@ def transformed_ann_query(
     from flechasdb_spark.plans.ivf import ann_query
 
     return ann_query(
-        ti.index, _query_matrix(ti, queries), k=k, nprobe=nprobe, **kwargs
+        ti.index, transform_queries(ti, queries), k=k, nprobe=nprobe, **kwargs
     )
 
 
@@ -142,40 +138,47 @@ def transformed_ann_range_query(
     from flechasdb_spark.plans.ivf import ann_range_query_batch
 
     return ann_range_query_batch(
-        ti.index, _query_matrix(ti, queries), radius=radius,
+        ti.index, transform_queries(ti, queries), radius=radius,
         nprobe=nprobe, **kwargs,
     )
 
 
-def save_transformed_index(ti: TransformedIndex, path: str) -> None:
-    from flechasdb_spark.sources.manifest import (
-        save_index,
-        write_manifest_json,
-    )
+def _write_transform(spark, path: str, meta: dict) -> None:
+    """Write ``meta`` as the store's transform.json, beside its index."""
+    from flechasdb_spark.sources.manifest import write_manifest_json
 
-    save_index(ti.index, path)
-    spark = ti.index.encoded.sparkSession
-    write_manifest_json(
-        spark,
-        os.path.join(path, TRANSFORM_NAME),
-        {
-            "kind": "pca",
-            "whiten": bool(ti.whiten),
-            "mean": list(ti.pca.mean),
-            "components": [list(r) for r in ti.pca.components],
-            "eigvals": list(ti.pca.eigvals),
-        },
-    )
+    write_manifest_json(spark, os.path.join(path, TRANSFORM_NAME), meta)
 
 
-def load_transformed_index(
-    spark: SparkSession, path: str, **load_kwargs
-) -> TransformedIndex:
-    from flechasdb_spark.sources.manifest import load_index, read_manifest_json
+def _write_pca(ti, spark, path: str) -> None:
+    """The PCA transform.json of a `TransformedIndex` or
+    `TransformedIVFSQ`."""
+    _write_transform(spark, path, {
+        "kind": "pca",
+        "whiten": bool(ti.whiten),
+        "mean": list(ti.pca.mean),
+        "components": [list(r) for r in ti.pca.components],
+        "eigvals": list(ti.pca.eigvals),
+    })
 
-    t = read_manifest_json(spark, os.path.join(path, TRANSFORM_NAME))
-    if t.get("kind") != "pca":
+
+def _read_transform(spark, path: str, kind: str) -> dict:
+    """The store's transform.json, checked to be of ``kind``; a store
+    without one, or with another kind, raises ValueError."""
+    from flechasdb_spark.sources.manifest import read_manifest_json
+
+    name = os.path.join(path, TRANSFORM_NAME)
+    t = read_manifest_json(spark, name)
+    if t is None:
+        raise ValueError(f"no transform file: {name}")
+    if t.get("kind") != kind:
         raise ValueError(f"unknown transform kind: {t.get('kind')!r}")
+    return t
+
+
+def _read_pca(spark, path: str) -> tuple[PCAModel, bool]:
+    """(PCA model, whiten) of the store's PCA transform.json."""
+    t = _read_transform(spark, path, "pca")
     pca = PCAModel(
         mean=tuple(float(x) for x in t["mean"]),
         components=tuple(
@@ -183,10 +186,24 @@ def load_transformed_index(
         ),
         eigvals=tuple(float(x) for x in t["eigvals"]),
     )
+    return pca, bool(t["whiten"])
+
+
+def save_transformed_index(ti: TransformedIndex, path: str) -> None:
+    from flechasdb_spark.sources.manifest import save_index
+
+    save_index(ti.index, path)
+    _write_pca(ti, ti.index.encoded.sparkSession, path)
+
+
+def load_transformed_index(
+    spark: SparkSession, path: str, **load_kwargs
+) -> TransformedIndex:
+    from flechasdb_spark.sources.manifest import load_index
+
+    pca, whiten = _read_pca(spark, path)
     return TransformedIndex(
-        pca=pca,
-        whiten=bool(t["whiten"]),
-        index=load_index(spark, path, **load_kwargs),
+        pca=pca, whiten=whiten, index=load_index(spark, path, **load_kwargs)
     )
 
 
@@ -303,32 +320,22 @@ def opq_ann_range_query(
 
 
 def save_opq_index(oi: OPQIndex, path: str) -> None:
-    from flechasdb_spark.sources.manifest import (
-        save_index,
-        write_manifest_json,
-    )
+    from flechasdb_spark.sources.manifest import save_index
 
     save_index(oi.index, path)
-    spark = oi.index.encoded.sparkSession
-    write_manifest_json(
-        spark,
-        os.path.join(path, TRANSFORM_NAME),
-        {
-            "kind": "opq",
-            "rotation": [list(r) for r in oi.rotation],
-            "losses": list(oi.losses),
-        },
-    )
+    _write_transform(oi.index.encoded.sparkSession, path, {
+        "kind": "opq",
+        "rotation": [list(r) for r in oi.rotation],
+        "losses": list(oi.losses),
+    })
 
 
 def load_opq_index(
     spark: SparkSession, path: str, **load_kwargs
 ) -> OPQIndex:
-    from flechasdb_spark.sources.manifest import load_index, read_manifest_json
+    from flechasdb_spark.sources.manifest import load_index
 
-    t = read_manifest_json(spark, os.path.join(path, TRANSFORM_NAME))
-    if t.get("kind") != "opq":
-        raise ValueError(f"unknown transform kind: {t.get('kind')!r}")
+    t = _read_transform(spark, path, "opq")
     return OPQIndex(
         rotation=tuple(tuple(float(x) for x in row) for row in t["rotation"]),
         losses=tuple(float(x) for x in t["losses"]),
@@ -421,11 +428,11 @@ def transformed_ivfsq_query(
     **kwargs,
 ) -> DataFrame:
     """ivfsq_query in the projected space (query projected driver-side
-    with the same arithmetic family as pca_project — `_query_matrix`
+    with the same arithmetic family as pca_project — `transform_queries`
     is transform-only, so it reuses the PQ composition's helper)."""
     from flechasdb_spark.plans.ivfsq import ivfsq_query
 
-    (_, qv), = _query_matrix(ti, [(0, list(query_vector))])
+    (_, qv), = transform_queries(ti, [(0, list(query_vector))])
     return ivfsq_query(ti.model, qv, k=k, nprobe=nprobe, **kwargs)
 
 
@@ -441,7 +448,7 @@ def transformed_ivfsq_query_batch(
     from flechasdb_spark.plans.ivfsq import ivfsq_query_batch
 
     return ivfsq_query_batch(
-        ti.model, _query_matrix(ti, queries), k=k, nprobe=nprobe, **kwargs
+        ti.model, transform_queries(ti, queries), k=k, nprobe=nprobe, **kwargs
     )
 
 
@@ -461,7 +468,7 @@ def transformed_ivfsq_range_query(
     table must hold PROJECTED vectors (the index's space)."""
     from flechasdb_spark.plans.ivfsq import ivfsq_range_query
 
-    (_, qv), = _query_matrix(ti, [(0, list(query_vector))])
+    (_, qv), = transform_queries(ti, [(0, list(query_vector))])
     return ivfsq_range_query(
         ti.model, qv, radius=radius, nprobe=nprobe, **kwargs
     )
@@ -480,7 +487,7 @@ def transformed_ivfsq_range_query_batch(
     from flechasdb_spark.plans.ivfsq import ivfsq_range_query_batch
 
     return ivfsq_range_query_batch(
-        ti.model, _query_matrix(ti, queries), radius=radius,
+        ti.model, transform_queries(ti, queries), radius=radius,
         nprobe=nprobe, **kwargs,
     )
 
@@ -489,39 +496,15 @@ def save_transformed_ivfsq(ti: TransformedIVFSQ, path: str) -> None:
     """Persist index (save_ivfsq layout) + transform.json — one unit,
     the same on-disk contract as `save_transformed_index`."""
     from flechasdb_spark.plans.ivfsq import save_ivfsq
-    from flechasdb_spark.sources.manifest import write_manifest_json
 
     save_ivfsq(ti.model, path)
-    spark = ti.model.encoded.sparkSession
-    write_manifest_json(
-        spark,
-        os.path.join(path, TRANSFORM_NAME),
-        {
-            "kind": "pca",
-            "whiten": bool(ti.whiten),
-            "mean": list(ti.pca.mean),
-            "components": [list(r) for r in ti.pca.components],
-            "eigvals": list(ti.pca.eigvals),
-        },
-    )
+    _write_pca(ti, ti.model.encoded.sparkSession, path)
 
 
 def load_transformed_ivfsq(spark: SparkSession, path: str) -> TransformedIVFSQ:
     from flechasdb_spark.plans.ivfsq import load_ivfsq
-    from flechasdb_spark.sources.manifest import read_manifest_json
 
-    t = read_manifest_json(spark, os.path.join(path, TRANSFORM_NAME))
-    if t is None or t.get("kind") != "pca":
-        raise ValueError(
-            f"unknown transform kind: {(t or {}).get('kind')!r}"
-        )
-    pca = PCAModel(
-        mean=tuple(float(x) for x in t["mean"]),
-        components=tuple(
-            tuple(float(x) for x in row) for row in t["components"]
-        ),
-        eigvals=tuple(float(x) for x in t["eigvals"]),
-    )
+    pca, whiten = _read_pca(spark, path)
     return TransformedIVFSQ(
-        pca=pca, whiten=bool(t["whiten"]), model=load_ivfsq(spark, path)
+        pca=pca, whiten=whiten, model=load_ivfsq(spark, path)
     )

@@ -3,6 +3,7 @@ exact oracle + manifest invariants; randomness pinned by seeds)."""
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 
 import numpy as np
@@ -17,6 +18,19 @@ from flechasdb_spark.plans.ivf import ann_query, select_probes
 from flechasdb_spark.sources.manifest import load_index, save_index, validate_manifest
 
 CFG = IndexConfig(num_partitions=8, num_divisions=8, num_codes=16, seed=7)
+
+
+@contextlib.contextmanager
+def _plan(name: str):
+    """Force `plans.ivf._scored`'s plan through its private bound:
+    "sql" (no query reaches `_KERNEL_MIN_DOUBLES`) or "kernel" (every
+    query does). Yields the MonkeyPatch for further settings."""
+    from flechasdb_spark.plans import ivf
+
+    with pytest.MonkeyPatch.context() as mp:
+        bound = {"sql": float("inf"), "kernel": 0}[name]
+        mp.setattr(ivf, "_KERNEL_MIN_DOUBLES", bound)
+        yield mp
 
 
 @pytest.fixture(scope="module")
@@ -260,7 +274,7 @@ def test_fused_rerank_matches_join_rerank(emb, kept):
     scan, keep_vectors index) returns bit-identical rows to the
     join-based rerank, unrounded, for queries float32 cannot represent
     (both score the float64 query), and errors without stored vectors or
-    with a non-batch scorer."""
+    with an unknown rerank mode."""
     assert "embedding" in kept.encoded.columns
     qs = [
         (int(r.vec_id), [float(x) / 3.0 for x in r.embedding])
@@ -281,8 +295,6 @@ def test_fused_rerank_matches_join_rerank(emb, kept):
     no_vec = build_index(emb, CFG)
     with pytest.raises(ValueError, match="keep_vectors"):
         ann_query(no_vec, qs, k=5, nprobe=8, rerank="stored")
-    with pytest.raises(ValueError, match="scorer"):
-        ann_query(kept, qs, k=5, nprobe=8, rerank="stored", scorer="sql")
     with pytest.raises(ValueError, match="rerank mode"):
         ann_query(kept, qs, k=5, nprobe=8, rerank="bogus")
 
@@ -336,23 +348,24 @@ def test_query_and_cluster_event_callbacks(model, emb):
 
 
 def test_scorers_agree_on_rounded_contract(model, emb):
-    """sql and batch ADC scorers return bit-identical rows, unrounded as
-    well as rounded: both sum the ADC gather as the same left fold."""
+    """The sql plan and the NumPy kernel return bit-identical rows,
+    unrounded as well as rounded: both sum the ADC gather as the same
+    left fold."""
     qs = [
         (int(r.vec_id), [float(x) for x in r.embedding])
         for r in emb.where(F.col("vec_id") < 5).collect()
     ]
     for round_to in (None, 4):
-        results = {
-            scorer: sorted(
-                ann_query(
-                    model, qs, k=5, nprobe=4, round_to=round_to, scorer=scorer
-                ).collect()
-            )
-            for scorer in ("sql", "batch")
-        }
+        results = {}
+        for plan in ("sql", "kernel"):
+            with _plan(plan):
+                results[plan] = sorted(
+                    ann_query(
+                        model, qs, k=5, nprobe=4, round_to=round_to
+                    ).collect()
+                )
         assert len(results["sql"]) == 25
-        assert results["sql"] == results["batch"], round_to
+        assert results["sql"] == results["kernel"], round_to
 
 
 def test_lazy_centroids_distributed_probes(model, emb, spark, tmp_path_factory):
@@ -523,10 +536,11 @@ def test_range_query_semantics_vs_topk(model, emb):
     from flechasdb_spark.plans.ivf import ann_range_query
 
     qv = [float(x) for x in emb.where(F.col("vec_id") == 3).first()["embedding"]]
-    full = ann_query(
-        model, [(3, qv)], k=emb.count(), nprobe=CFG.num_partitions,
-        round_to=4, scorer="sql",
-    ).collect()
+    with _plan("sql"):
+        full = ann_query(
+            model, [(3, qv)], k=emb.count(), nprobe=CFG.num_partitions,
+            round_to=4,
+        ).collect()
     radius = sorted(r.squared_distance for r in full)[25]  # ~26 matches
     got = ann_range_query(
         model, qv, radius=radius, nprobe=CFG.num_partitions, round_to=4
@@ -576,7 +590,7 @@ def test_range_query_recall_vs_exact(model, emb):
 
 
 def test_range_query_batch_scorers_where_and_empty(model, emb):
-    """Batch/sql scorer parity under the rounded contract, the where
+    """Kernel/sql plan parity under the rounded contract, the where
     pre-filter, limit_per_query ranking, and the empty-batch schema
     (rank present iff limit_per_query is set)."""
     from flechasdb_spark.plans.ivf import ann_range_query_batch
@@ -586,8 +600,10 @@ def test_range_query_batch_scorers_where_and_empty(model, emb):
         for r in emb.where(F.col("vec_id").isin(3, 9)).collect()
     ]
     kw = dict(radius=1.7, nprobe=CFG.num_partitions, round_to=4)
-    a = ann_range_query_batch(model, qs, scorer="sql", **kw).collect()
-    b = ann_range_query_batch(model, qs, scorer="batch", **kw).collect()
+    with _plan("sql"):
+        a = ann_range_query_batch(model, qs, **kw).collect()
+    with _plan("kernel"):
+        b = ann_range_query_batch(model, qs, **kw).collect()
     key = lambda r: (r.query_id, r.squared_distance, r.vector_id)
     assert sorted(map(key, a)) == sorted(map(key, b))
     assert len(a) > 0
@@ -629,7 +645,7 @@ def test_range_query_batch_scorers_where_and_empty(model, emb):
 
 def test_range_query_prunes_partitions_at_rest(model, emb, spark, tmp_path_factory):
     """The radius scan's probe cut is a LITERAL isin — on a saved
-    index it lands in the Parquet PartitionFilters (both scorers), so
+    index it lands in the Parquet PartitionFilters (both plans), so
     the radius path reads nprobe/P of the store like the top-k path."""
     from flechasdb_spark.plans.ivf import ann_range_query_batch
 
@@ -637,16 +653,16 @@ def test_range_query_prunes_partitions_at_rest(model, emb, spark, tmp_path_facto
     save_index(model, path)
     loaded = load_index(spark, path)
     qv = [float(x) for x in emb.where(F.col("vec_id") == 3).first()["embedding"]]
-    for scorer in ("sql", "batch"):
-        plan = (
-            ann_range_query_batch(
-                loaded, [(3, qv)], radius=1.5, nprobe=2, round_to=4,
-                scorer=scorer,
+    for scorer in ("sql", "kernel"):
+        with _plan(scorer):
+            plan = (
+                ann_range_query_batch(
+                    loaded, [(3, qv)], radius=1.5, nprobe=2, round_to=4,
+                )
+                ._jdf.queryExecution()
+                .executedPlan()
+                .toString()
             )
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
         scan_lines = [
             ln for ln in plan.splitlines() if "PartitionFilters: [" in ln
         ]
@@ -696,14 +712,15 @@ def test_range_query_rerank_exact_semantics(model, emb):
         (x.vec_id, x.squared_distance)
         for x in range_search(emb, qv, radius=r, round_to=4).collect()
     )
-    for scorer in ("sql", "batch"):
-        got = sorted(
-            (x.vector_id, x.squared_distance)
-            for x in ann_range_query(
-                model, qv, radius=r, nprobe=CFG.num_partitions, round_to=4,
-                rerank=emb, rerank_slack=2.5, scorer=scorer,
-            ).collect()
-        )
+    for scorer in ("sql", "kernel"):
+        with _plan(scorer):
+            got = sorted(
+                (x.vector_id, x.squared_distance)
+                for x in ann_range_query(
+                    model, qv, radius=r, nprobe=CFG.num_partitions,
+                    round_to=4, rerank=emb, rerank_slack=2.5,
+                ).collect()
+            )
         assert got == exact, scorer
     plain = sorted(
         (x.vector_id, x.squared_distance)
@@ -712,10 +729,11 @@ def test_range_query_rerank_exact_semantics(model, emb):
         ).collect()
     )
     assert plain != exact
-    capped = ann_range_query_batch(
-        model, [(3, qv)], radius=r, nprobe=CFG.num_partitions, round_to=4,
-        rerank=emb, rerank_slack=2.5, limit_per_query=4, scorer="batch",
-    ).collect()
+    with _plan("kernel"):
+        capped = ann_range_query_batch(
+            model, [(3, qv)], radius=r, nprobe=CFG.num_partitions,
+            round_to=4, rerank=emb, rerank_slack=2.5, limit_per_query=4,
+        ).collect()
     assert sorted((x.rank, x.vector_id, x.squared_distance) for x in capped) == [
         (i + 1, v, d)
         for i, (d, v) in enumerate(
@@ -843,7 +861,8 @@ def test_small_sql_query_runs_as_one_task(model, emb, spark, tmp_path_factory):
     pairs = 2 * loaded.num_vectors / loaded.config.num_partitions
     assert pairs < ivf._SINGLE_TASK_MAX_PAIRS
     qv = [float(x) for x in emb.where(F.col("vec_id") == 3).first()["embedding"]]
-    out = ann_query(loaded, [(3, qv)], k=5, nprobe=2, where="label = 1", scorer="sql")
+    with _plan("sql"):
+        out = ann_query(loaded, [(3, qv)], k=5, nprobe=2, where="label = 1")
     lines = _plan_lines(out)
     plan = "\n".join(lines)
     assert "Exchange" not in plan, plan
@@ -857,7 +876,8 @@ def test_small_sql_query_runs_as_one_task(model, emb, spark, tmp_path_factory):
     assert len(rows) == 5
     assert len(jobs) == 1, jobs
 
-    out = ann_query(loaded, [(3, qv)], k=5, nprobe=2, scorer="sql")
+    with _plan("sql"):
+        out = ann_query(loaded, [(3, qv)], k=5, nprobe=2)
     assert _served_on_driver(out), _plan_lines(out)
     rows, jobs = _jobs_of_collect(spark, out, "ivfpq-one-task-False")
     assert len(rows) == 5
@@ -879,9 +899,9 @@ def test_sql_probe_table_is_local_relation(model, emb, spark, tmp_path_factory):
     n_q = int(ivf._SINGLE_TASK_MAX_PAIRS // per_query) + 1
     rows = emb.orderBy("vec_id").limit(n_q).collect()
     qs = [(int(r.vec_id), [float(x) for x in r.embedding]) for r in rows]
-    with pytest.MonkeyPatch.context() as mp:
+    with _plan("sql") as mp:
         mp.setattr(ivf, "_store_cells", lambda model: None)
-        out = ann_query(loaded, qs, k=5, nprobe=2, scorer="sql")
+        out = ann_query(loaded, qs, k=5, nprobe=2)
     assert out.count() == 5 * n_q
     lines = _plan_lines(out)
     plan = "\n".join(lines)
@@ -915,18 +935,18 @@ def test_single_task_plan_matches_broadcast_plan(
         for where in (None, "label = 1"):
             topk = ann_query(
                 model, qarr, k=7, nprobe=3, query_ids=qids, where=where,
-                round_to=round_to, scorer="sql",
+                round_to=round_to,
             )
             out.append(sorted(topk.collect()))
             for limit in (None, 3):
                 radius = ann_range_query_batch(
                     model, qarr, radius=4.0, nprobe=3, query_ids=qids,
                     where=where, round_to=round_to, limit_per_query=limit,
-                    scorer="sql",
                 )
                 out.append(sorted(radius.collect()))
         return out
 
+    monkeypatch.setattr(ivf, "_KERNEL_MIN_DOUBLES", float("inf"))
     monkeypatch.setattr(ivf, "_SINGLE_TASK_MAX_PAIRS", float("inf"))
     single = results()
     monkeypatch.setattr(ivf, "_SINGLE_TASK_MAX_PAIRS", 0)
@@ -1036,13 +1056,13 @@ def test_driver_path_matches_spark_plans_above_single_task_bound(stores, emb):
     qarr = np.array([r.embedding for r in rows], dtype=np.float64)
 
     def forms(store, nprobe):
-        yield "top-k", lambda scorer: ann_query(
-            store, qarr, k=10, nprobe=nprobe, query_ids=qids, scorer=scorer
+        yield "top-k", lambda: ann_query(
+            store, qarr, k=10, nprobe=nprobe, query_ids=qids
         )
         for limit in (None, 3):
-            yield f"radius-{limit}", lambda scorer, limit=limit: ann_range_query_batch(
+            yield f"radius-{limit}", lambda limit=limit: ann_range_query_batch(
                 store, qarr, radius=1.6, nprobe=nprobe, query_ids=qids,
-                limit_per_query=limit, scorer=scorer,
+                limit_per_query=limit,
             )
 
     compared = 0
@@ -1050,16 +1070,18 @@ def test_driver_path_matches_spark_plans_above_single_task_bound(stores, emb):
         for nprobe in (2, 4, store.config.num_partitions) if name == "plain" else (4,):
             assert ivf._pairs(store, len(qids) * nprobe) > ivf._SINGLE_TASK_MAX_PAIRS
             for form, call in forms(store, nprobe):
-                driver = call("auto")
+                driver = call()
                 assert _served_on_driver(driver), (name, nprobe, form)
                 got = driver.collect()
                 assert got, (name, nprobe, form)
                 if form != "radius-None":
                     assert got == _in_query_order(got), (name, form)
                 got = _in_query_order(got)
-                with pytest.MonkeyPatch.context() as mp:
-                    mp.setattr(ivf, "_store_cells", lambda model: None)
-                    plans = {s: call(s) for s in ("sql", "batch")}
+                plans = {}
+                for s in ("sql", "kernel"):
+                    with _plan(s) as mp:
+                        mp.setattr(ivf, "_store_cells", lambda model: None)
+                        plans[s] = call()
                 for scorer, plan in plans.items():
                     assert not _served_on_driver(plan), (name, form, scorer)
                     want = _in_query_order(plan.collect())
@@ -1240,9 +1262,10 @@ def test_stale_listing_raises_on_both_paths(model, emb, spark, tmp_path_factory)
 
 
 def test_sql_scores_equal_left_fold_of_adc_tables(model, emb, spark, tmp_path_factory):
-    """Every unrounded distance, from either scorer, is exactly the left
+    """Every unrounded distance, from either plan, is exactly the left
     fold, in division order from 0.0, of its probe's ADC table entries —
     with and without a where pre-filter."""
+    from flechasdb_spark.plans import ivf
     from flechasdb_spark.plans.ivf import _adc_tables
 
     loaded = _saved_index(model, spark, tmp_path_factory, "left_fold")
@@ -1256,11 +1279,13 @@ def test_sql_scores_equal_left_fold_of_adc_tables(model, emb, spark, tmp_path_fa
         for i, (qi, pid) in enumerate(zip(probe_qidx, probe_pid))
     }
     codes = {r.vec_id: list(r.codes) for r in loaded.encoded.collect()}
-    for where, scorer in itertools.product((None, "label = 1"), ("sql", "batch")):
-        out = ann_query(
-            loaded, qarr, k=7, nprobe=3, query_ids=qids, where=where,
-            scorer=scorer,
-        ).collect()
+    for where, scorer in itertools.product((None, "label = 1"), ("sql", "kernel")):
+        with _plan(scorer) as mp:
+            if scorer == "kernel":
+                mp.setattr(ivf, "_DRIVER_MAX_PAIRS", 0)
+            out = ann_query(
+                loaded, qarr, k=7, nprobe=3, query_ids=qids, where=where,
+            ).collect()
         assert len(out) == 3 * 7
         for r in out:
             t = tables[probe[(r.query_id, r.partition_id)]]
@@ -1453,20 +1478,21 @@ def test_pq_scorers_plans_and_batching_return_the_same_bits(
         rerank=emb if rerank == "frame" else rerank,
     )
 
-    def run(queries, ids, scorer):
+    def run(queries, ids):
         return sorted(
-            ann_query(kept, queries, query_ids=ids, scorer=scorer, **kw)
-            .collect()
+            ann_query(kept, queries, query_ids=ids, **kw).collect()
         )
 
-    results = {s: run(qarr, qids, s) for s in ("auto", "batch")}
+    results = {"auto": run(qarr, qids)}
+    with _plan("kernel"):
+        results["kernel"] = run(qarr, qids)
     if rerank != "stored":
-        with pytest.MonkeyPatch.context() as mp:
+        with _plan("sql") as mp:
             for bound in (float("inf"), 0):
                 mp.setattr(ivf, "_SINGLE_TASK_MAX_PAIRS", bound)
-                results[f"sql-{bound}"] = run(qarr, qids, "sql")
+                results[f"sql-{bound}"] = run(qarr, qids)
     results["per-query"] = sorted(
-        r for i in range(n_q) for r in run(qarr[i : i + 1], qids[i : i + 1], "auto")
+        r for i in range(n_q) for r in run(qarr[i : i + 1], qids[i : i + 1])
     )
     want = results.pop("auto")
     for name, got in results.items():
@@ -1481,10 +1507,9 @@ def test_pq_scorers_plans_and_batching_return_the_same_bits(
 
 
 def test_auto_scorer_switches_at_kernel_constant(model, emb, kept):
-    """scorer='auto' plans the sql scorer (no MapInPandas) just under
+    """A query runs the sql plan (no MapInPandas) just under
     `_KERNEL_MIN_DOUBLES` ADC-table doubles and the NumPy kernel at it;
-    rerank='stored' always runs the kernel, and scorer='sql' with it
-    raises."""
+    rerank='stored' always runs the kernel."""
     from flechasdb_spark.plans import ivf
 
     nprobe = 8
@@ -1498,5 +1523,154 @@ def test_auto_scorer_switches_at_kernel_constant(model, emb, kept):
     qs = [(0, [0.0] * 64)]
     stored = ann_query(kept, qs, k=5, nprobe=2, rerank="stored")
     assert "MapInPandas" in "\n".join(_plan_lines(stored))
-    with pytest.raises(ValueError, match="scorer"):
-        ann_query(kept, qs, k=5, nprobe=2, rerank="stored", scorer="sql")
+
+
+def test_adc_tables_chunks_match_unchunked_einsum(stores, monkeypatch):
+    """`_adc_tables` built in probe chunks of about 1 (at least 2), 7,
+    256 and 1,000 probes returns the unchunked einsum's tables bit for
+    bit, on the plain store and on the OPQ (``dim_perm``) one."""
+    from flechasdb_spark.plans import ivf
+
+    qarr = np.random.RandomState(3).randn(301, 64)
+    for name in ("plain", "opq"):
+        store = stores[name]
+        probe_qidx, probe_pid = select_probes(store, qarr, 4)
+        cent = store.centroids[probe_pid]
+        d, c, w = store.codebooks.shape
+        local = qarr[probe_qidx] - cent
+        if store.dim_perm is not None:
+            local = local[:, np.asarray(store.dim_perm, dtype=int)]
+        diff = local.reshape(-1, d, w)[:, :, None, :] - store.codebooks[None]
+        want = np.einsum("qdcw,qdcw->qdc", diff, diff)
+        for chunk in (1, 7, 256, 1000):
+            monkeypatch.setattr(ivf, "_CHUNK_DOUBLES", chunk * d * c * w)
+            got = ivf._adc_tables(store, qarr, probe_qidx, cent)
+            assert got.dtype == want.dtype and got.shape == want.shape
+            assert got.tobytes() == want.tobytes(), (name, chunk)
+
+
+def _exact_search(vecs, ids, q):
+    """(distance, id) of every rerank-table row against the float64
+    query ``q``, scored as `plans.ivf._exact` folds, sorted by (distance,
+    id)."""
+    from flechasdb_spark.plans.ivf import _left_fold
+
+    diff = vecs - q
+    return sorted(zip(_left_fold(diff * diff).tolist(), ids.tolist()))
+
+
+@pytest.fixture(scope="module")
+def rerank_table(emb):
+    """(ids, float64 vectors) of the fixture as the re-rank table holds
+    them, ordered by id, and the IVF+SQ and IVF+BQ indexes over it."""
+    table = emb.orderBy("vec_id").collect()
+    ids = np.array([r.vec_id for r in table], dtype=np.int64)
+    vecs = np.array([r.embedding for r in table], dtype=np.float32)
+    return ids, vecs.astype(np.float64), *_sq_bq_models(emb)
+
+
+@settings(max_examples=3, deadline=None)
+@given(
+    n_q=st.integers(1, 3),
+    k=st.integers(1, 6),
+    nth=st.integers(1, 30),
+    seed=st.integers(0, 2**16),
+)
+def test_shared_tail_rerank_equals_exact_search(
+    kept, emb, first_vectors, rerank_table, n_q, k, nth, seed
+):
+    """With every probe scanned (nprobe = P) and a survivor budget that
+    covers every row — ``k * rerank_factor`` >= the index size, a radius
+    gate above every scan score (PQ/SQ ``radius * rerank_slack``, BQ's
+    Hamming radius = dim) — the re-ranked top-k and radius results of
+    PQ (frame and stored), SQ and BQ, solo and batch, equal a NumPy exact
+    search over the re-rank table bit for bit, unrounded, ordered by
+    (distance, id)."""
+    from flechasdb_spark.plans import ivfbq, ivfsq
+    from flechasdb_spark.plans.ivf import ann_range_query, ann_range_query_batch
+
+    ids, vecs, sq, bq = rerank_table
+    rng = np.random.RandomState(seed)
+    qarr = first_vectors[rng.choice(len(first_vectors), n_q)] + rng.randn(n_q, 64) * 0.05
+    qids = [int(q) for q in rng.choice(1000, n_q, replace=False)]
+    exact = [_exact_search(vecs, ids, q) for q in qarr]
+    radius = exact[0][nth][0]
+    factor = -(-len(ids) // k)
+    P = CFG.num_partitions
+    qlist = [(i, list(v)) for i, v in zip(qids, qarr)]
+
+    def topk(qi):
+        return [(i, d) for d, i in exact[qi][:k]]
+
+    def within(qi):
+        return [(i, d) for d, i in exact[qi] if d <= radius]
+
+    def batch_topk(rows, id_col):
+        got = sorted(rows, key=lambda r: (r.query_id, r.rank))
+        assert [r.rank for r in got] == [j + 1 for _ in qids for j in range(k)]
+        return [(r.query_id, r[id_col], r.squared_distance) for r in got]
+
+    want_topk = [(q, i, d) for q, qi in sorted(zip(qids, range(n_q))) for i, d in topk(qi)]
+    want_radius = sorted((q, d, i) for qi, q in enumerate(qids) for i, d in within(qi))
+
+    def batch_radius(rows, id_col):
+        return sorted((r.query_id, r.squared_distance, r[id_col]) for r in rows)
+
+    def solo(rows, id_col):
+        return [(r[id_col], r.squared_distance) for r in rows]
+
+    slack = 1e9 / radius
+    for rerank in (emb, "stored"):
+        rows = ann_query(
+            kept, qarr, k=k, nprobe=P, query_ids=qids, rerank=rerank,
+            rerank_factor=factor,
+        ).collect()
+        assert batch_topk(rows, "vector_id") == want_topk, rerank
+    rows = ann_range_query_batch(
+        kept, qarr, radius=radius, nprobe=P, query_ids=qids, rerank=emb,
+        rerank_slack=slack,
+    ).collect()
+    assert batch_radius(rows, "vector_id") == want_radius
+    rows = ann_range_query(
+        kept, list(qarr[0]), radius=radius, nprobe=P, rerank=emb,
+        rerank_slack=slack,
+    ).collect()
+    assert solo(rows, "vector_id") == within(0)
+
+    rows = ivfsq.ivfsq_query_batch(
+        sq, qlist, k=k, nprobe=P, rerank=emb, rerank_factor=factor
+    ).collect()
+    assert batch_topk(rows, "vec_id") == want_topk
+    rows = ivfsq.ivfsq_query(
+        sq, list(qarr[0]), k=k, nprobe=P, rerank=emb, rerank_factor=factor
+    ).collect()
+    assert solo(rows, "vec_id") == topk(0)
+    rows = ivfsq.ivfsq_range_query_batch(
+        sq, qlist, radius=radius, nprobe=P, rerank=emb, rerank_slack=slack
+    ).collect()
+    assert batch_radius(rows, "vec_id") == want_radius
+    rows = ivfsq.ivfsq_range_query(
+        sq, list(qarr[0]), radius=radius, nprobe=P, rerank=emb,
+        rerank_slack=slack,
+    ).collect()
+    assert solo(rows, "vec_id") == within(0)
+
+    rows = ivfbq.ivfbq_query_batch(
+        bq, [list(v) for v in qarr], k=k, nprobe=P, query_ids=qids,
+        rerank=emb, rerank_factor=factor,
+    ).collect()
+    assert batch_topk(rows, "vec_id") == want_topk
+    rows = ivfbq.ivfbq_query(
+        bq, list(qarr[0]), k=k, nprobe=P, rerank=emb, rerank_factor=factor
+    ).collect()
+    assert solo(rows, "vec_id") == topk(0)
+    rows = ivfbq.ivfbq_range_query_batch(
+        bq, [list(v) for v in qarr], radius=bq.dim, nprobe=P,
+        query_ids=qids, rerank=emb, exact_radius=radius,
+    ).collect()
+    assert batch_radius(rows, "vec_id") == want_radius
+    rows = ivfbq.ivfbq_range_query(
+        bq, list(qarr[0]), radius=bq.dim, nprobe=P, rerank=emb,
+        exact_radius=radius,
+    ).collect()
+    assert solo(rows, "vec_id") == within(0)

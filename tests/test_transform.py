@@ -404,7 +404,7 @@ def test_transformed_ivfsq_range_query(spark, emb, sq_tindex):
     import numpy as np
 
     from flechasdb_spark.plans.transform import (
-        _query_matrix,
+        transform_queries,
         transformed_ivfsq_range_query,
         transformed_ivfsq_range_query_batch,
     )
@@ -414,7 +414,7 @@ def test_transformed_ivfsq_range_query(spark, emb, sq_tindex):
     qv = [float(x) for x in r0["embedding"]]
     # pick the radius from the projected metric: the 8th-nearest
     # projected distance
-    (_, pq), = _query_matrix(sq_tindex, [(0, qv)])
+    (_, pq), = transform_queries(sq_tindex, [(0, qv)])
     base = ivfsq_range_query(
         sq_tindex.model, pq, radius=1e9, nprobe=4, round_to=6, limit=8
     ).collect()
@@ -442,7 +442,7 @@ def test_transformed_and_opq_range_queries(spark, emb, tindex, corr_df):
     recovering the exact self-match at radius ~0."""
     from flechasdb_spark.plans.ivf import ann_range_query_batch
     from flechasdb_spark.plans.transform import (
-        _query_matrix,
+        transform_queries,
         build_opq_index,
         opq_ann_range_query,
         transformed_ann_range_query,
@@ -451,7 +451,7 @@ def test_transformed_and_opq_range_queries(spark, emb, tindex, corr_df):
 
     r0 = emb.where(F.col("vec_id") == 9).first()
     qv = [float(x) for x in r0["embedding"]]
-    proj = _query_matrix(tindex, [(9, qv)])
+    proj = transform_queries(tindex, [(9, qv)])
     base = ann_range_query_batch(
         tindex.index, proj, radius=3.0, nprobe=8, round_to=4
     ).collect()
@@ -473,3 +473,19 @@ def test_transformed_and_opq_range_queries(spark, emb, tindex, corr_df):
         radius=1.0, nprobe=4, round_to=4,
     ).collect()
     assert any(r.vector_id == 9 for r in hits)  # self within radius
+
+
+def test_loaders_name_a_missing_transform_file(spark, tmp_path):
+    """Each transformed-index loader raises ValueError naming
+    transform.json on a store that has none, before reading the index."""
+    from flechasdb_spark.plans.transform import (
+        load_opq_index,
+        load_transformed_index,
+        load_transformed_ivfsq,
+    )
+
+    bare = tmp_path / "bare"
+    bare.mkdir()
+    for load in (load_transformed_index, load_transformed_ivfsq, load_opq_index):
+        with pytest.raises(ValueError, match="transform.json"):
+            load(spark, str(bare))
