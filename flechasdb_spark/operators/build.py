@@ -33,6 +33,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    FloatType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 
 from flechasdb_spark.operators.kmeans_np import kmeans_fit
 
@@ -44,6 +51,24 @@ __all__ = [
     "pq_encoder_udf",
     "train_codebooks_distributed",
 ]
+
+
+# the at-rest schemas of the small model tables (``centroids/`` and
+# ``codebooks/`` of a store, sources/manifest.py); every field nullable,
+# as the Parquet reader reports them
+_CENTROIDS_SCHEMA = StructType(
+    [
+        StructField("partition_id", IntegerType()),
+        StructField("centroid", ArrayType(FloatType())),
+    ]
+)
+_CODEBOOKS_SCHEMA = StructType(
+    [
+        StructField("division", IntegerType()),
+        StructField("code", IntegerType()),
+        StructField("center", ArrayType(FloatType())),
+    ]
+)
 
 
 @dataclass(frozen=True)
@@ -123,12 +148,15 @@ class IndexModel:
             if self.centroids_source is None:
                 raise ValueError("index has neither centroids nor a source")
             return self.centroids_source
-        return spark.createDataFrame(
-            [
-                (int(i), [float(x) for x in c])
-                for i, c in enumerate(self.centroids)
-            ],
-            "partition_id int, centroid array<float>",
+        from flechasdb_spark.plans.ivf import _driver_frame
+
+        return _driver_frame(
+            spark,
+            {
+                "partition_id": np.arange(len(self.centroids), dtype=np.int32),
+                "centroid": np.asarray(self.centroids, dtype=np.float32),
+            },
+            _CENTROIDS_SCHEMA,
         )
 
     def centroids_np(self) -> np.ndarray:
@@ -144,14 +172,19 @@ class IndexModel:
         return np.array([r.centroid for r in rows], dtype=np.float64)
 
     def codebooks_df(self, spark) -> DataFrame:
-        rows = []
-        for d in range(self.codebooks.shape[0]):
-            for c in range(self.codebooks.shape[1]):
-                rows.append(
-                    (int(d), int(c), [float(x) for x in self.codebooks[d, c]])
-                )
-        return spark.createDataFrame(
-            rows, "division int, code int, center array<float>"
+        from flechasdb_spark.plans.ivf import _driver_frame
+
+        d, c, w = self.codebooks.shape
+        return _driver_frame(
+            spark,
+            {
+                "division": np.repeat(np.arange(d, dtype=np.int32), c),
+                "code": np.tile(np.arange(c, dtype=np.int32), d),
+                "center": np.asarray(self.codebooks, dtype=np.float32).reshape(
+                    d * c, w
+                ),
+            },
+            _CODEBOOKS_SCHEMA,
         )
 
 

@@ -58,7 +58,7 @@ __all__ = [
 
 
 def _manifest_num_vectors_target(
-    spark: SparkSession, index_path: str, delta: int
+    manifest: dict | None, delta: int
 ) -> int | None:
     """The ABSOLUTE post-mutation num_vectors for the rewrite journal
     (None when the store carries no counting manifest, e.g. the SQ
@@ -66,14 +66,24 @@ def _manifest_num_vectors_target(
     idempotently by `_finish_cell_swaps` — so load_index reports the
     post-maintenance count even across a crash-heal, where a relative
     bump could double-apply or vanish."""
-    from flechasdb_spark.sources.manifest import read_manifest_json
+    if manifest is None or "num_vectors" not in manifest:
+        return None
+    return max(0, int(manifest["num_vectors"]) + int(delta))
+
+
+def _open_index(spark: SparkSession, index_path: str):
+    """(manifest or None, the store's ``index`` table): read with the
+    schema the manifest records, so a mutation runs no
+    schema-inference job on a version-2 store."""
+    from flechasdb_spark.sources.manifest import (
+        _read_table,
+        read_manifest_json,
+    )
 
     manifest = read_manifest_json(
         spark, os.path.join(index_path, "manifest.json")
     )
-    if manifest is None or "num_vectors" not in manifest:
-        return None
-    return max(0, int(manifest["num_vectors"]) + int(delta))
+    return manifest, _read_table(spark, index_path, "index", manifest)
 
 
 def _in_sql(col: str, values) -> str:
@@ -290,7 +300,7 @@ def upsert_vectors(
     partition ids."""
     cfg = model.config
     repair_cell_rewrite(spark, f"{index_path}/index")
-    existing = spark.read.parquet(f"{index_path}/index")
+    manifest, existing = _open_index(spark, index_path)
     encode = pq_encoder_udf(
         spark, model.centroids_np(), model.codebooks, dim_perm=model.dim_perm
     )
@@ -372,7 +382,7 @@ def upsert_vectors(
         replacement,
         touched,
         manifest_target=_manifest_num_vectors_target(
-            spark, index_path, n_incoming - n_replaced
+            manifest, n_incoming - n_replaced
         ),
     )
     incoming.unpersist()
@@ -389,7 +399,7 @@ def delete_vectors(
     them. Returns the rewritten partition ids."""
     cfg = model.config
     repair_cell_rewrite(spark, f"{index_path}/index")
-    existing = spark.read.parquet(f"{index_path}/index")
+    manifest, existing = _open_index(spark, index_path)
     ids = [int(i) for i in ids]
     if not ids:
         return []
@@ -418,7 +428,7 @@ def delete_vectors(
         survivors.select(out_cols),
         touched,
         manifest_target=_manifest_num_vectors_target(
-            spark, index_path, -sum(victim_cnt.values())
+            manifest, -sum(victim_cnt.values())
         ),
     )
     return touched
@@ -446,7 +456,7 @@ def delete_where(
     manifest; the SQ manifest tracks no count). Returns the rewritten
     partition ids."""
     repair_cell_rewrite(spark, f"{index_path}/index")
-    existing = spark.read.parquet(f"{index_path}/index")
+    manifest, existing = _open_index(spark, index_path)
     _require_flat_ivfsq_layout(existing, "delete_where")
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
     hit = F.coalesce(pred, F.lit(False))
@@ -472,7 +482,7 @@ def delete_where(
         survivors.select(out_cols),
         touched,
         manifest_target=_manifest_num_vectors_target(
-            spark, index_path, -sum(victim_cnt.values())
+            manifest, -sum(victim_cnt.values())
         ),
     )
     return touched

@@ -595,13 +595,13 @@ def train_ivfbq(
 
     x = sample_to_driver(vectors, vec_col, id_col, sample_n, f"ivfbq{seed}")
     cent, _ = kmeans_fit(x, int(num_partitions), seed=seed)
-    spark = vectors.sparkSession
-    cent_df = spark.createDataFrame(
-        [
-            (int(i), [float(v) for v in row])
-            for i, row in enumerate(np.asarray(cent))
-        ],
-        "partition_id int, centroid array<double>",
+    # partition_id int, centroid array<double>, as one Arrow table
+    cent_df = _driver_frame(
+        vectors.sparkSession,
+        {
+            "partition_id": np.arange(len(cent), dtype=np.int32),
+            "centroid": np.asarray(cent, dtype=np.float64),
+        },
     )
     thr = bq_thresholds(vectors, vec_col) if thresholds == "mean" else thresholds
     return build_ivfbq(

@@ -898,13 +898,13 @@ def train_ivfsq(
         vectors, vec_col, id_col, sample_n, f"ivfsq{seed}"
     )
     cent, _ = kmeans_fit(x, int(num_partitions), seed=seed)
-    spark = vectors.sparkSession
-    cent_df = spark.createDataFrame(
-        [
-            (int(i), [float(v) for v in row])
-            for i, row in enumerate(np.asarray(cent))
-        ],
-        "partition_id int, centroid array<double>",
+    # partition_id int, centroid array<double>, as one Arrow table
+    cent_df = _driver_frame(
+        vectors.sparkSession,
+        {
+            "partition_id": np.arange(len(cent), dtype=np.int32),
+            "centroid": np.asarray(cent, dtype=np.float64),
+        },
     )
     return build_ivfsq(
         vectors, cent_df, id_col=id_col, vec_col=vec_col,

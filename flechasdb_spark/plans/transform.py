@@ -91,6 +91,8 @@ def build_transformed_index(
 def transform_queries(ti: TransformedIndex, queries) -> list:
     """Driver-side projection of query vectors (numpy; same arithmetic
     family as pca_project's pandas impl — equivalence-gated there)."""
+    if len(queries) == 0:
+        return []
     ids = [q[0] for q in queries]
     x = np.asarray([q[1] for q in queries], dtype=np.float64)
     mean = np.asarray(ti.pca.mean)
@@ -284,6 +286,8 @@ def build_opq_index(
 
 
 def _rotate_queries(oi: OPQIndex, queries) -> list:
+    if len(queries) == 0:
+        return []
     rot = oi.rotation_np()
     ids = [q[0] for q in queries]
     y = np.asarray([q[1] for q in queries], dtype=np.float64) @ rot

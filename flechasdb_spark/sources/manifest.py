@@ -1,11 +1,25 @@
 """Index persistence: Parquet datasets + JSON manifest with load-time
 validation.
 
-The reference persists content-addressed zlib-protobuf files with
-hash-verify-on-read (``/root/reference/src/db/build/proto.rs:25-63``,
-``src/io.rs:242-300``); Parquet's footer checksums + immutable dataset
-paths + an explicit manifest serve the same integrity/layout role
-(SURVEY.md §1.4). Layout:
+The reference names every model file by its SHA-256 and verifies it on
+read (its ``src/db/build/proto.rs:25-63``, ``src/io.rs:40-63`` and
+``src/db/stored.rs:262-293``). Here the manifest carries the digests
+instead (``format_version`` 2):
+
+- ``centroids_sha256``: SHA-256 of the centroids' little-endian float32
+  bytes in ``partition_id`` order, the values ``centroids/`` holds. A
+  model whose centroids were never collected (loaded with
+  ``collect_centroids=False``) is saved without it.
+- ``codebooks_sha256``: the same over the codebooks in (division, code)
+  order, the values ``codebooks/`` holds.
+- ``index_schema``: ``StructType.json()`` of the index's columns in the
+  order the Parquet reader reports them, so reading it infers nothing.
+
+``load_index`` recomputes both digests from the rows it collects anyway
+and raises ``ValueError`` naming the table on a mismatch; in the
+lazy-centroid mode it checks the codebooks only. A version-1 manifest
+has none of these fields: its tables are read with inferred schemas and
+not verified. Layout:
 
     <root>/manifest.json
     <root>/index/partition_id=<p>/...parquet   (vector_id, codes, attrs)
@@ -20,14 +34,21 @@ loading for free: an nprobe query reads only the probed directories
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 
 import numpy as np
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from flechasdb_spark.operators.build import IndexConfig, IndexModel
+from flechasdb_spark.operators.build import (
+    _CENTROIDS_SCHEMA,
+    _CODEBOOKS_SCHEMA,
+    IndexConfig,
+    IndexModel,
+)
 
 __all__ = [
     "save_index",
@@ -38,7 +59,7 @@ __all__ = [
 ]
 
 MANIFEST_NAME = "manifest.json"
-FORMAT_VERSION = 1
+FORMAT_VERSION = 2
 
 
 def _fs_path(spark: SparkSession, path: str):
@@ -73,6 +94,46 @@ def write_manifest_json(spark: SparkSession, path: str, obj: dict) -> None:
         out.write(bytearray(json.dumps(obj, indent=2).encode("utf-8")))
     finally:
         out.close()
+
+
+def _digest(values: np.ndarray) -> str:
+    """SHA-256 of ``values`` as little-endian float32 bytes in C order:
+    the values a small model table holds at rest."""
+    return hashlib.sha256(
+        np.ascontiguousarray(values, dtype="<f4").tobytes()
+    ).hexdigest()
+
+
+def _read_table(
+    spark: SparkSession, path: str, table: str, manifest: dict | None
+) -> DataFrame:
+    """One of a store's tables ("index", "centroids" or "codebooks").
+    A version-2 ``manifest`` fixes every schema, so opening the table
+    runs no schema-inference job; else (a version-1 manifest, or None
+    for a store of another family under the same ``index/`` layout)
+    the schema is inferred from the Parquet footers."""
+    reader = spark.read
+    if manifest is not None and manifest.get("format_version", 1) >= 2:
+        if table == "index":
+            schema = StructType.fromJson(json.loads(manifest["index_schema"]))
+        else:
+            schema = {
+                "centroids": _CENTROIDS_SCHEMA,
+                "codebooks": _CODEBOOKS_SCHEMA,
+            }[table]
+        reader = reader.schema(schema)
+    return reader.parquet(os.path.join(path, table))
+
+
+def _verify(manifest: dict, table: str, values: np.ndarray) -> None:
+    """Raise when ``values`` do not hash to the manifest's digest of
+    ``table``; a manifest without that digest checks nothing."""
+    want = manifest.get(f"{table}_sha256")
+    if want is not None and _digest(values) != want:
+        raise ValueError(
+            f"{table}: the stored values do not match the manifest's "
+            f"SHA-256 {want}"
+        )
 
 
 def save_index(model: IndexModel, path: str, pack_codes: bool = False) -> None:
@@ -111,9 +172,18 @@ def save_index(model: IndexModel, path: str, pack_codes: bool = False) -> None:
     model.codebooks_df(spark).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, "codebooks")
     )
+    # the index as the reader orders it: data columns, then the
+    # partition column, which it types int from the directory names
+    # (and it makes every field nullable, given a schema or not)
+    index_schema = StructType(
+        [f for f in enc.schema.fields if f.name != "partition_id"]
+        + [StructField("partition_id", IntegerType())]
+    )
     manifest = {
         "packed": packed_mode,
         "format_version": FORMAT_VERSION,
+        "index_schema": index_schema.json(),
+        "codebooks_sha256": _digest(model.codebooks),
         "vector_size": model.vector_size,
         "num_vectors": model.num_vectors,
         "num_partitions": model.config.num_partitions,
@@ -127,6 +197,8 @@ def save_index(model: IndexModel, path: str, pack_codes: bool = False) -> None:
         if model.dim_perm is None
         else [int(x) for x in model.dim_perm],
     }
+    if model.centroids is not None:
+        manifest["centroids_sha256"] = _digest(model.centroids)
     write_manifest_json(spark, os.path.join(path, MANIFEST_NAME), manifest)
 
 
@@ -152,6 +224,10 @@ def validate_manifest(m: dict) -> None:
         )
     if m["num_partitions"] == 0:
         raise ValueError("num_partitions must be > 0")
+    if m.get("format_version", 1) >= 2:
+        for k in ("index_schema", "codebooks_sha256"):
+            if not isinstance(m.get(k), str):
+                raise ValueError(f"manifest missing field: {k}")
 
 
 def load_index(
@@ -180,7 +256,7 @@ def load_index(
     n = manifest["vector_size"]
     w = n // d
 
-    cent_src = spark.read.parquet(os.path.join(path, "centroids"))
+    cent_src = _read_table(spark, path, "centroids", manifest)
     if collect_centroids:
         # sorted on the driver: the ids are unique, and a Spark orderBy
         # before the collect costs a sampling job and a shuffle
@@ -196,6 +272,7 @@ def load_index(
             raise ValueError(
                 f"centroid width {centroids.shape[1]} != vector_size {n}"
             )
+        _verify(manifest, "centroids", centroids)
     else:
         cent_count = cent_src.count()
         if cent_count != p:
@@ -203,7 +280,7 @@ def load_index(
         centroids = None
 
     cb_rows = sorted(
-        spark.read.parquet(os.path.join(path, "codebooks")).collect(),
+        _read_table(spark, path, "codebooks", manifest).collect(),
         key=lambda r: (r.division, r.code),
     )
     if len(cb_rows) != d * c:
@@ -211,10 +288,11 @@ def load_index(
     codebooks = np.array([r.center for r in cb_rows], dtype=np.float64).reshape(
         d, c, w
     )
+    _verify(manifest, "codebooks", codebooks)
 
     from flechasdb_spark.plans.ivf import _df_memo
 
-    encoded = spark.read.parquet(os.path.join(path, "index")).withColumn(
+    encoded = _read_table(spark, path, "index", manifest).withColumn(
         "partition_id", F.col("partition_id").cast("int")
     )
     if manifest.get("packed"):

@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flechasdb_spark.sources.manifest import (
-    FORMAT_VERSION,
     MANIFEST_NAME,
     read_manifest_json,
     write_manifest_json,
@@ -99,7 +98,9 @@ def write_training_shards(
         .collect()
     }
     manifest = {
-        "format_version": FORMAT_VERSION,
+        # the shard layout's own version; the index manifest's is
+        # sources/manifest.py::FORMAT_VERSION
+        "format_version": 1,
         "kind": "training_shards",
         "n_shards": int(n_shards),
         "n_docs": int(sum(counts.values())),

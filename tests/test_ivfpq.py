@@ -15,7 +15,13 @@ from pyspark.sql import functions as F
 from flechasdb_spark.operators.build import IndexConfig, build_index
 from flechasdb_spark.operators.knn import knn_join
 from flechasdb_spark.plans.ivf import ann_query, select_probes
-from flechasdb_spark.sources.manifest import load_index, save_index, validate_manifest
+from flechasdb_spark.sources.manifest import (
+    load_index,
+    read_manifest_json,
+    save_index,
+    validate_manifest,
+    write_manifest_json,
+)
 
 CFG = IndexConfig(num_partitions=8, num_divisions=8, num_codes=16, seed=7)
 
@@ -74,8 +80,11 @@ def test_save_load_roundtrip(model, spark, tmp_path_factory):
     loaded = load_index(spark, path)
     assert loaded.vector_size == model.vector_size
     assert loaded.num_vectors == model.num_vectors
-    assert np.allclose(loaded.centroids, model.centroids, atol=1e-6)
-    assert np.allclose(loaded.codebooks, model.codebooks, atol=1e-6)
+    # the small models are stored as float32: a round trip returns the
+    # model's float32 values bit for bit
+    f32 = lambda a: np.asarray(a, dtype=np.float32).astype(np.float64)
+    assert np.array_equal(loaded.centroids, f32(model.centroids))
+    assert np.array_equal(loaded.codebooks, f32(model.codebooks))
     a = {r.vec_id: (r.partition_id, list(r.codes)) for r in model.encoded.collect()}
     b = {r.vec_id: (r.partition_id, list(r.codes)) for r in loaded.encoded.collect()}
     assert a == b
@@ -89,6 +98,167 @@ def test_validate_manifest_rejects_bad():
         )
     with pytest.raises(ValueError, match="missing"):
         validate_manifest({"vector_size": 8})
+    with pytest.raises(ValueError, match="missing field: codebooks_sha256"):
+        validate_manifest(
+            dict(vector_size=8, num_vectors=1, num_partitions=2,
+                 num_divisions=2, num_codes=4, format_version=2,
+                 index_schema="{}")
+        )
+
+
+def test_small_model_tables_are_local_relations(model, spark):
+    """The centroid and codebook tables `save_index` writes are Arrow
+    LocalRelations with their at-rest schemas: writing them starts no
+    Python worker to unpickle rows."""
+    for df, ddl in (
+        (model.centroids_df(spark), "partition_id:int,centroid:array<float>"),
+        (
+            model.codebooks_df(spark),
+            "division:int,code:int,center:array<float>",
+        ),
+    ):
+        plan = df._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LocalRelation", plan
+        assert df.schema.simpleString() == f"struct<{ddl}>"
+        assert all(f.nullable for f in df.schema.fields)
+
+
+def _replace_rows(spark, path: str, table: str, edit) -> None:
+    """Rewrite a store's ``table`` as valid Parquet holding its rows
+    sorted by key after ``edit(rows)``."""
+    d = spark.read.parquet(f"{path}/{table}")
+    key = d.columns[:-1]  # (partition_id) or (division, code)
+    rows = sorted(
+        (r.asDict() for r in d.collect()), key=lambda r: [r[k] for k in key]
+    )
+    edit(rows)
+    spark.createDataFrame(rows, d.schema).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/{table}")
+
+
+def _perturb_center(rows) -> None:
+    c = rows[5]["center"]
+    c[0] = float(np.nextafter(np.float32(c[0]), np.float32(np.inf)))
+
+
+def _swap_centroids(rows) -> None:
+    rows[0]["centroid"], rows[1]["centroid"] = (
+        rows[1]["centroid"],
+        rows[0]["centroid"],
+    )
+
+
+def _as_version_1(spark, path: str) -> None:
+    """Strip the manifest's version-2 fields, as a version-1 writer
+    left it."""
+    m = read_manifest_json(spark, f"{path}/manifest.json")
+    for k in ("index_schema", "centroids_sha256", "codebooks_sha256"):
+        del m[k]
+    m["format_version"] = 1
+    write_manifest_json(spark, f"{path}/manifest.json", m)
+
+
+def test_load_verifies_small_models(model, spark, tmp_path_factory):
+    """`load_index` recomputes the manifest's SHA-256 of each small
+    model from the rows it collects and raises naming the table: a
+    codebook center one float32 ulp off and two swapped centroid rows
+    are both caught. The lazy-centroid mode checks the codebooks only,
+    and a model saved without collected centroids records no centroid
+    digest."""
+    cb = str(tmp_path_factory.mktemp("bad_codebooks"))
+    save_index(model, cb)
+    _replace_rows(spark, cb, "codebooks", _perturb_center)
+    for lazy in (False, True):
+        with pytest.raises(ValueError, match="codebooks"):
+            load_index(spark, cb, collect_centroids=not lazy)
+
+    cent = str(tmp_path_factory.mktemp("bad_centroids"))
+    save_index(model, cent)
+    _replace_rows(spark, cent, "centroids", _swap_centroids)
+    with pytest.raises(ValueError, match="centroids"):
+        load_index(spark, cent)
+    assert load_index(spark, cent, collect_centroids=False).centroids is None
+
+    good = str(tmp_path_factory.mktemp("good"))
+    save_index(model, good)
+    resaved = str(tmp_path_factory.mktemp("lazy_resaved"))
+    save_index(load_index(spark, good, collect_centroids=False), resaved)
+    m = read_manifest_json(spark, f"{resaved}/manifest.json")
+    assert "centroids_sha256" not in m and "codebooks_sha256" in m
+    assert np.array_equal(
+        load_index(spark, resaved).centroids, load_index(spark, good).centroids
+    )
+
+
+def test_version_1_manifest_loads_unverified(model, spark, tmp_path_factory):
+    """A manifest without the version-2 fields loads as before: every
+    schema inferred, nothing verified (swapped centroid rows load), and
+    otherwise the same model and index frame as the version-2 store."""
+    v2 = str(tmp_path_factory.mktemp("v2"))
+    v1 = str(tmp_path_factory.mktemp("v1"))
+    for path in (v2, v1):
+        save_index(model, path, pack_codes=True)
+    _as_version_1(spark, v1)
+    a, b = load_index(spark, v2), load_index(spark, v1)
+    assert np.array_equal(a.centroids, b.centroids)
+    assert np.array_equal(a.codebooks, b.codebooks)
+    assert a.num_vectors == b.num_vectors
+    assert a.encoded.schema == b.encoded.schema
+    key = lambda r: r.vec_id
+    assert sorted(a.encoded.collect(), key=key) == sorted(
+        b.encoded.collect(), key=key
+    )
+    _replace_rows(spark, v1, "centroids", _swap_centroids)
+    swapped = load_index(spark, v1).centroids
+    assert np.array_equal(swapped[[1, 0]], a.centroids[:2])
+
+
+def _jobs_of(spark, group: str, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "persistence job gate")
+    try:
+        fn()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(f"{group}-done", "")
+
+
+def test_recorded_schemas_save_jobs(model, emb, spark, tmp_path_factory):
+    """A version-2 store opens with no schema-inference job: `load_index`
+    runs 2 jobs (the centroid and codebook collects) where a version-1
+    manifest of the same store runs 5, and `upsert_vectors` and
+    `delete_vectors`, which read the index through the recorded schema,
+    each run one job fewer than on the version-1 store."""
+    from flechasdb_spark.operators.maintenance import (
+        delete_vectors,
+        upsert_vectors,
+    )
+
+    up = emb.where("vec_id < 20").withColumn("vec_id", F.col("vec_id") + 10**6)
+    counts = {}
+    for version in (2, 1):
+        path = str(tmp_path_factory.mktemp(f"jobs_v{version}"))
+        save_index(model, path)
+        if version == 1:
+            _as_version_1(spark, path)
+        tag = f"persist-v{version}"
+        counts[version] = [
+            _jobs_of(spark, f"{tag}-load", lambda: load_index(spark, path)),
+            _jobs_of(
+                spark,
+                f"{tag}-upsert",
+                lambda: upsert_vectors(spark, model, path, up),
+            ),
+            _jobs_of(
+                spark,
+                f"{tag}-delete",
+                lambda: delete_vectors(spark, model, path, list(range(30))),
+            ),
+        ]
+    assert counts[2][0] == 2 and counts[1][0] == 5, counts
+    assert [v1 - v2 for v2, v1 in zip(counts[2], counts[1])] == [3, 1, 1], counts
 
 
 def test_partition_pruning_reaches_scan(model, spark, tmp_path_factory):

@@ -475,6 +475,36 @@ def test_transformed_and_opq_range_queries(spark, emb, tindex, corr_df):
     assert any(r.vector_id == 9 for r in hits)  # self within radius
 
 
+def test_empty_batch_returns_contract_schema(tindex):
+    """An empty batch through the PCA and OPQ forms, top-k and radius,
+    returns no rows with the columns of `ann_query` /
+    `ann_range_query_batch` on the underlying index, as those do."""
+    from flechasdb_spark.plans.ivf import ann_query, ann_range_query_batch
+    from flechasdb_spark.plans.transform import (
+        OPQIndex,
+        opq_ann_query,
+        opq_ann_range_query,
+        transformed_ann_range_query,
+    )
+
+    n = tindex.index.vector_size
+    oi = OPQIndex(rotation=np.eye(n), losses=(), index=tindex.index)
+    topk = ann_query(tindex.index, [], k=3, nprobe=2).columns
+    radius = ann_range_query_batch(tindex.index, [], radius=1.0, nprobe=2).columns
+    for form, cols in (
+        (lambda: transformed_ann_query(tindex, [], k=3, nprobe=2), topk),
+        (lambda: opq_ann_query(oi, [], k=3, nprobe=2), topk),
+        (
+            lambda: transformed_ann_range_query(tindex, [], radius=1.0, nprobe=2),
+            radius,
+        ),
+        (lambda: opq_ann_range_query(oi, [], radius=1.0, nprobe=2), radius),
+    ):
+        out = form()
+        assert out.columns == cols
+        assert out.count() == 0
+
+
 def test_loaders_name_a_missing_transform_file(spark, tmp_path):
     """Each transformed-index loader raises ValueError naming
     transform.json on a store that has none, before reading the index."""
